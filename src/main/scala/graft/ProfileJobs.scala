@@ -44,30 +44,35 @@ object ProfileJobs {
     run() // warm
     graft.operators.CacheScope.drain()
     spark.sharedState.cacheManager.clearCache()
-    done.synchronized(done.clear())
+    // `done` is appended under the `jobs` lock (listener thread)
+    jobs.synchronized(done.clear())
     val t0 = System.nanoTime()
     run()
     val wall = (System.nanoTime() - t0) / 1e9
     Thread.sleep(300)
-    println(f"TOTAL $name wall=$wall%.2fs jobs=${done.size}")
-    done.sortBy(-_._3).take(45).foreach { case (id, d, ms) =>
+    val profile = jobs.synchronized(done.toList)
+    println(f"TOTAL $name wall=$wall%.2fs jobs=${profile.size}")
+    profile.sortBy(-_._3).take(45).foreach { case (id, d, ms) =>
       println(f"job $id%5d ${ms}%6d ms  $d")
     }
-    println(s"sum_job_ms=${done.map(_._3).sum}")
+    println(s"sum_job_ms=${profile.map(_._3).sum}")
     println("-- by call site --")
-    done.groupBy(_._2).toSeq
+    profile.groupBy(_._2).toSeq
       .map { case (d, js) => (d, js.size, js.map(_._3).sum) }
       .sortBy(-_._3)
       .foreach { case (d, n, ms) => println(f"agg $n%3d jobs ${ms}%7d ms  $d") }
     // §6 evidence: files per written table under this app's index root
     val root = new java.io.File(
       "target/graft-index/" + spark.sparkContext.applicationId)
+    // listFiles() is null when a directory vanishes or is unreadable
+    def list(f: java.io.File): Array[java.io.File] =
+      Option(f.listFiles()).getOrElse(Array.empty)
     def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      if (f.isDirectory) list(f).toSeq.flatMap(walk) else Seq(f)
     if (root.exists()) {
-      for (ds <- root.listFiles().filter(_.isDirectory);
-           idx <- ds.listFiles().filter(_.isDirectory);
-           tbl <- idx.listFiles().filter(_.isDirectory)) {
+      for (ds <- list(root).filter(_.isDirectory);
+           idx <- list(ds).filter(_.isDirectory);
+           tbl <- list(idx).filter(_.isDirectory)) {
         val files = walk(tbl).filter(_.getName.endsWith(".parquet"))
         println(s"FILES ${idx.getName}/${tbl.getName}: ${files.size} " +
           s"(${files.map(_.length()).sum} B)")

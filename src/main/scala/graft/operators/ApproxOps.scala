@@ -127,7 +127,7 @@ object ApproxOps {
     *
     * Dataflow at 100 TB: the build side aggregates to ONE few-KB sketch
     * row map-side (bitwise-OR merge); only the sketch crosses to the
-    * driver — an aggregate scalar like d6's convergence sum, never row
+    * driver — an aggregate scalar like the star loop's edge count, never row
     * data — and returns to executors as a plan constant, exactly the
     * scalar-subquery dataflow of Spark's own `InjectRuntimeFilter`. The
     * probe scan then drops ~(1−sel−fpp) of its rows inside whole-stage

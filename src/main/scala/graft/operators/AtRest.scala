@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import java.util.concurrent.{CancellationException, ExecutionException,
+  ExecutorCompletionService, Executors}
 
 /** Shared maintenance for the bucket-partitioned at-rest index
   * layouts. Every maintained family (postings, positional, shingle,
@@ -49,28 +51,42 @@ object AtRest {
     * touch DISJOINT outputs and that any frame a chain reads from a
     * table the other replaces is pinned (localCheckpoint) before this
     * call — the same self-read discipline the serial forms already
-    * follow. Failures rethrow their original exception at the join,
-    * after every chain has settled (no torn half-verb beyond what the
-    * serial form's crash contract already covers — each family's heal
-    * recounts from the base of record either way). */
+    * follow. The join awaits EVERY chain, then rethrows the first
+    * failure to settle with each later one attached via
+    * `addSuppressed` (no torn half-verb beyond what the serial form's
+    * crash contract already covers — each family's heal recounts from
+    * the base of record either way). An interrupt of the joining
+    * thread counts as a failure: the join keeps awaiting the chains,
+    * then restores the thread's interrupt flag before rethrowing. */
   private[graft] def inParallel(work: (() => Unit)*): Unit = {
     if (work.sizeIs <= 1) { work.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
+    val pool = Executors.newFixedThreadPool(work.size)
     try {
-      val futs = work.map { w =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = w()
-        })
-      }
-      var firstFailure: Throwable = null
-      futs.foreach { f =>
-        try { f.get(); () }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure == null) firstFailure = e.getCause
+      // completion order, so "first" means first to settle
+      val settled = new ExecutorCompletionService[Unit](pool)
+      work.foreach(w => settled.submit(() => w()))
+      var failures = Vector.empty[Throwable]
+      var interrupted = false
+      var pending = work.size
+      while (pending > 0) {
+        try {
+          val f = settled.take()
+          pending -= 1
+          try f.get() catch {
+            case e: ExecutionException => failures :+= e.getCause
+            case e: CancellationException => failures :+= e
+          }
+        } catch {
+          case e: InterruptedException =>
+            if (!interrupted) failures :+= e
+            interrupted = true
         }
       }
-      if (firstFailure != null) throw firstFailure
+      if (interrupted) Thread.currentThread().interrupt()
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
     } finally { pool.shutdown(); () }
   }
 

@@ -34,9 +34,9 @@ import org.apache.spark.storage.StorageLevel
   * a serving pool provides.
   *
   * Deliberately NOT drained here: persists with an explicit paired
-  * `unpersist()` in their own operator (d6's edge/pair checkpoint
-  * dance) and streaming `foreachBatch` persists that unpersist at
-  * batch end — those already complete their own lifecycle. */
+  * `unpersist()` in their own operator (d13's pair persist) and
+  * streaming `foreachBatch` persists that unpersist at batch end —
+  * those already complete their own lifecycle. */
 object CacheScope {
 
   /** One query's registration scope — opaque; obtain via [[begin]],

@@ -71,8 +71,9 @@ object DedupOps {
     Common.presented(minhashLshCore(s, dir), col("a"), col("b"))
 
   /** [[minhashLsh]] without the presentation sort — for composition
-    * (D6): the sort sits below `edges.persist()` there and EliminateSorts
-    * cannot remove it through the cache boundary. */
+    * (D6): the sort would sit below the components loop's edge
+    * checkpoint, and EliminateSorts cannot remove it through that
+    * boundary. */
   def minhashLshCore(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ShingleExpressions._
     // Sorted distinct hashed-shingle sets: MinHash input AND the
@@ -167,95 +168,16 @@ object DedupOps {
       .transform(Common.presented(_, col("a"), col("b")))
   }
 
-  /** Iteration cap for [[dedupClusters]] — with pointer jumping the
-    * propagation converges in O(log diameter) rounds (measured: 5 on
-    * the sf0.1 graph, whose components are transitive near-dup CHAINS
-    * of diameter ≈ 9). The cap turns a data bug into a loud failure
-    * instead of a hang. */
-  val MaxCcIterations = 20
-
   /** D6 — near-dup pairs → connected components → canonical keepers:
     * the stage that turns D2's pair list into the actual dedup decision
     * (cluster id = min doc_id of the component; the keeper is that
-    * doc). Iterative min-label propagation — per round, every node
-    * takes the min label among itself and its neighbors; terminates
-    * when no label changes.
-    *
-    * Scale notes: each round is one equi-join + one groupBy (both
-    * shuffle on doc_id — co-partitioned, AQE-coalesced); rounds =
-    * component diameter, NOT corpus size. `localCheckpoint` truncates
-    * the growing lineage so round N's plan doesn't replay rounds
-    * 1..N-1 (at 100 TB: a reliable checkpoint dir instead). The
-    * driver sees only the per-round changed-count — no row data. This
-    * is the alternating-star algorithm's simpler cousin; for
-    * pathological diameters (chains), switch to large-star/small-star
-    * with the same per-round plan shape. */
+    * doc). Components come from the alternating large-star/small-star
+    * rewrite ([[StarComponents]]), which stays O(log n) rounds with a
+    * shrinking edge working set even when near-dup components are long
+    * transitive CHAINS, and solves small pair graphs on the driver with
+    * zero extra jobs. Registered twice (d6, d6b) under the one
+    * recursive-closure oracle, so neither query name is dropped. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLshCore(s, dir)
-      .filter(col("is_near_dup") === 1).select(col("a"), col("b"))
-    val edges = pairs.unionByName(
-        pairs.select(col("b").as("a"), col("a").as("b")))
-      .persist()
-    // the loop's working set is the PAIR GRAPH's endpoints, not the
-    // corpus: singleton docs (the vast majority at scale) never enter
-    // an iteration and rejoin as their own cluster at the end.
-    // Initial labels are min(self, neighbors) — exactly what round 1
-    // would compute from identity labels (the jump step over identity
-    // is identity), so the loop starts one propagation step ahead and
-    // saves a full round of join+agg+checkpoint+sum
-    var labels = edges
-      .groupBy(col("a"))
-      .agg(least(col("a"), min(col("b"))).as("label"))
-      .select(col("a").as("doc_id"), col("label"))
-      .localCheckpoint(true)
-    // convergence via the label-sum invariant: labels only ever
-    // DECREASE elementwise, so an unchanged (exact, decimal) sum is
-    // exactly the fixpoint — one narrow agg per round instead of a
-    // self-join diff
-    // Option-wrapped: sum() over an EMPTY frame is SQL NULL — an empty
-    // pair graph (no near-dups at all) is already converged, every doc
-    // a singleton
-    def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
-    var prevSum = labelSum(labels)
-    var converged = prevSum.isEmpty
-    var rounds = 0
-    while (!converged && rounds < MaxCcIterations) {
-      // neighbor step: my neighbors' labels
-      val prop = edges.join(labels, edges("b") === labels("doc_id"))
-        .select(edges("a").as("doc_id"), col("label"))
-      // pointer-jump step: my LABEL's label — shortcuts chains so
-      // rounds go O(diameter) → O(log diameter); measured 10 → 5
-      // rounds on the sf0.1 graph (diameters ≈ 9: transitive near-dup
-      // chains, not cliques). Valid because labels are always doc_ids
-      // of endpoints, so label[label] is defined.
-      val jump = labels.as("x").join(labels.as("p"),
-          col("x.label") === col("p.doc_id"))
-        .select(col("x.doc_id"), col("p.label").as("label"))
-      // LAZY checkpoint: the convergence sum right below is the action
-      // that materializes it — one job per round instead of two
-      labels = labels.unionByName(prop).unionByName(jump)
-        .groupBy(col("doc_id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(false)
-      val curSum = labelSum(labels)
-      converged = curSum == prevSum
-      prevSum = curSum
-      rounds += 1
-    }
-    require(converged, s"label propagation did not converge in $MaxCcIterations rounds")
-    edges.unpersist()
-    shapeClusters(s, dir, labels)
-  }
-
-  /** D6b — same contract and oracle as [[dedupClusters]], components
-    * computed by the alternating large-star/small-star rewrite
-    * ([[StarComponents]]) instead of label propagation: the guard for
-    * the 100× case where near-dup components are long transitive
-    * CHAINS (large diameter), where propagation's round count grows
-    * with log(diameter) but star stays O(log n) with a shrinking edge
-    * working set. Both variants stay registered so the driver
-    * hash-gates them against the identical recursive-closure oracle. */
-  def dedupClustersStar(s: SparkSession, dir: String): DataFrame = {
     val pairs = minhashLshCore(s, dir)
       .filter(col("is_near_dup") === 1).select(col("a"), col("b"))
     val (labels, _) = StarComponents.components(pairs)
@@ -278,7 +200,7 @@ object DedupOps {
     * recomputes the "yesterday" phase from the same parquet (batch =
     * doc_id % 10 == 0) to stay deterministic, and the driver hash-gates
     * it against the very same recursive-closure oracle as d6/d6b;
-    * StarComponentsSpec pins d13 == d6b row-for-row. */
+    * StarComponentsSpec pins d13 == d6 row-for-row. */
   def incrementalClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = minhashLshCore(s, dir)
       .filter(col("is_near_dup") === 1).select(col("a"), col("b"))
@@ -295,7 +217,7 @@ object DedupOps {
     shapeClusters(s, dir, merged)
   }
 
-  /** Shared tail of d6/d6b: singleton docs (never in the pair graph —
+  /** Shared tail of d6/d13: singleton docs (never in the pair graph —
     * the vast majority at scale) rejoin as their own cluster; keeper =
     * the component's min doc. */
   private def shapeClusters(s: SparkSession, dir: String,
@@ -404,7 +326,7 @@ object DedupOps {
 
   /** D11 — SEMANTIC dedup clusters: D5's embedding near-dup pairs →
     * connected components → canonical keepers, through the SAME
-    * [[StarComponents]] stage d6b uses for text pairs — the clustering
+    * [[StarComponents]] stage d6 uses for text pairs — the clustering
     * machinery is modality-agnostic; only the pair generator changes
     * (hashed shingles for text, sign-LSH cosine for embeddings). The
     * oracle restates the closure recursively over the D5 pair SQL, so
@@ -2733,7 +2655,7 @@ object DedupOps {
     "d4_ngram_jaccard" -> (ngramJaccard _),
     "d5_embed_neardup" -> (embedNearDup _),
     "d6_dedup_clusters" -> (dedupClusters _),
-    "d6b_star_clusters" -> (dedupClustersStar _),
+    "d6b_star_clusters" -> (dedupClusters _),
     "d7_incremental_dedup" -> (incrementalDedup _),
     "d15_minhash_incremental" -> (minhashIncremental _),
     "d8_decontaminate" -> (decontaminate _),
@@ -3067,8 +2989,7 @@ object DedupOps {
          |       min(node) AS cluster_id,
          |       CASE WHEN min(node) = src THEN 1 ELSE 0 END AS is_keeper
          |FROM reach GROUP BY src ORDER BY vec_id""".stripMargin,
-    // d6b computes the SAME result by a different algorithm — identical
-    // oracle, so the driver hash-gates both against one ground truth
+    // d6b is the same program registered under its own name
     "d6b_star_clusters" -> d6OracleSql,
     // d13's star-contraction merge provably equals a full re-cluster,
     // so it shares that ground truth too

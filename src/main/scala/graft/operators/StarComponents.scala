@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
   * SoCC '14) — the published alternative to plain min-label
   * propagation for PATHOLOGICAL component shapes. Label propagation
-  * (even pointer-jumped, [[DedupOps.dedupClusters]]) pays rounds
-  * proportional to log(diameter) with a working set that stays the
-  * full vertex set; the star algorithm instead rewrites the EDGE set
-  * each round so that components collapse toward their minimum vertex
-  * from every direction at once, converging in O(log n) rounds on
+  * (even pointer-jumped) pays rounds proportional to log(diameter)
+  * with a working set that stays the full vertex set; the star
+  * algorithm instead rewrites the EDGE set each round so that
+  * components collapse toward their minimum vertex from every
+  * direction at once, converging in O(log n) rounds on
   * chains — the worst case for propagation — while each round stays
   * two shuffle-shapes (a window-min per star half, keyed on vertex
   * id — see the in-loop note for why window-min beats the equivalent
@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * stays oriented and self-loop-free by construction; `distinct`
   * bounds it at the input edge count. No vertex state, no driver-side
   * row data — the only driver values are the per-round edge count and
-  * a changed-flag, and `localCheckpoint` truncates lineage exactly as
-  * in d6's loop.
+  * a changed-flag, and `localCheckpoint` truncates the lineage each
+  * round.
   *
   * Convergence: the edge set is a fixpoint of both halves iff it is a
   * disjoint union of min-rooted stars (the paper's invariant), so the

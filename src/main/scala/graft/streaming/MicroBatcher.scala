@@ -5,17 +5,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** G2 — the reference's one genuinely stateful operator: per-key
   * count-OR-timeout micro-batching
-  * (`/root/reference/src/main/java/com/thaihoc/process/response/InvoiceResponseBatchProcessor.java:26-316`:
-  * flush when the buffer reaches `batchSize` (`:130-140`) OR when a
-  * processing-time timer fires `batchTimeoutMs` after the first buffered
-  * record (`:158-183`)). Restated Spark-first as
+  * (`InvoiceResponseBatchProcessor.java:26-316`: flush when the buffer
+  * reaches `batchSize` (`:130-140`) OR when a processing-time timer
+  * fires `batchTimeoutMs` after the first buffered record
+  * (`:158-183`)). Restated Spark-first as
   * `flatMapGroupsWithState(Append, ProcessingTimeTimeout)`:
   *
   *   - count path: every input burst drains the buffer in `batchSize`
   *     chunks — full packets emit immediately, matching `:130-140`.
-  *   - timeout path: the remainder waits; `GroupState.setTimeoutDuration`
-  *     re-arms each call, and `hasTimedOut` flushes it — matching the
-  *     timer flush at `:158-183`.
+  *   - timeout path: the remainder waits until `timeoutMs` after its
+  *     OLDEST pending row was buffered, not after the latest input —
+  *     matching the timer flush at `:158-183`. Spark only times out a
+  *     key that got no data in a micro-batch, so a call that brings
+  *     input past the deadline flushes the remainder itself; otherwise
+  *     `setTimeoutDuration` is armed to the time left on that one
+  *     deadline. The only flush reasons are `count` and `timeout`.
   *   - G3 dedup (`:110-121`): the reference keeps an UNBOUNDED seen-set
   *     per key (a leak it never evicts). Here dedup state is the
   *     record-keys of the CURRENT buffer only, dropped on flush — within-
@@ -37,7 +41,7 @@ object MicroBatcher {
   /** One buffered record: (recordKey for dedup, payload). */
   case class Rec(apiType: Int, recordKey: String, payload: String)
 
-  /** Emitted packet: flush reason ∈ {count, timeout, force}. */
+  /** Emitted packet: flush reason ∈ {count, timeout}. */
   case class Packet(apiType: Int, seq: Long, size: Int,
       items: Seq[String], reason: String)
 
@@ -57,60 +61,45 @@ object MicroBatcher {
       .flatMapGroupsWithState[Buf, Packet](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (key: Int, rows: Iterator[Rec], state: GroupState[Buf]) =>
+          val now = clock()
           val prior = state.getOption.getOrElse(Buf(Nil, 0L, Set.empty, 0L))
-          if (state.hasTimedOut) {
-            // timer flush (`InvoiceResponseBatchProcessor.java:158-183`).
-            // The seq counter SURVIVES the flush (state.update, not
-            // remove) so (apiType, seq) stays a unique packet identity
-            // across the key's lifetime — a removed state would restart
-            // every burst at seq 0. No timeout is re-armed on an empty
-            // buffer, so the retained state is inert until new input.
-            state.update(Buf(Nil, prior.seq + (if (prior.pending.isEmpty) 0 else 1),
-              Set.empty, 0L))
-            if (prior.pending.isEmpty) Iterator.empty
-            else Iterator.single(Packet(key, prior.seq, prior.pending.size,
-              prior.pending.map(_.payload), "timeout"))
-          } else {
-            // dedup new rows against the current buffer (G3, `:110-121`)
-            val fresh = rows.filterNot(r => prior.seenKeys(r.recordKey))
-              .toList.distinctBy(_.recordKey)
-            val all = prior.pending ++ fresh
-            // count path: drain full packets (`:130-140`)
-            val (full, rest) = (all.grouped(batchSize).toList
-              .partition(_.size == batchSize))
-            val countPackets = full.zipWithIndex.map { case (chunk, i) =>
-              Packet(key, prior.seq + i, chunk.size, chunk.map(_.payload), "count")
-            }
-            var nextSeq = prior.seq + full.size
-            var remainder = rest.flatten
-            // the remainder still contains prior-buffered rows only when
-            // the count-flushes didn't drain all of them; otherwise its
-            // oldest row arrived THIS call and the wait clock restarts
-            val priorRowsRemain =
-              prior.pending.size > full.size * batchSize
-            val firstAt =
-              if (remainder.isEmpty) 0L
-              else if (priorRowsRemain) prior.firstAt
-              else clock()
-            // force-flush safety net (`:229-248`, maxWait = 2×timeout at
-            // `:56`): if the oldest pending row has waited ≥ 2×timeout —
-            // e.g. its timer was lost to a delayed/empty micro-batch —
-            // flush the remainder now instead of re-arming.
-            val forcePackets =
-              if (remainder.nonEmpty && clock() - firstAt >= 2 * timeoutMs) {
-                val p = Packet(key, nextSeq, remainder.size,
-                  remainder.map(_.payload), "force")
-                nextSeq += 1
-                remainder = Nil
-                List(p)
-              } else Nil
-            // seq survives an emptied buffer (see timeout branch); the
-            // timeout is only armed while rows are actually pending
-            state.update(Buf(remainder, nextSeq,
-              remainder.map(_.recordKey).toSet, firstAt))
-            if (remainder.nonEmpty) state.setTimeoutDuration(timeoutMs)
-            (countPackets ++ forcePackets).iterator
+          // dedup new rows against the current buffer (G3, `:110-121`);
+          // a timer call (hasTimedOut) brings no rows
+          val fresh = rows.filterNot(r => prior.seenKeys(r.recordKey))
+            .toList.distinctBy(_.recordKey)
+          val all = prior.pending ++ fresh
+          // count path: drain full packets (`:130-140`)
+          val (full, rest) = (all.grouped(batchSize).toList
+            .partition(_.size == batchSize))
+          val countPackets = full.zipWithIndex.map { case (chunk, i) =>
+            Packet(key, prior.seq + i, chunk.size, chunk.map(_.payload), "count")
           }
+          val remainder = rest.flatten
+          // the remainder still contains prior-buffered rows only when
+          // the count-flushes didn't drain all of them; otherwise its
+          // oldest row arrived THIS call and its deadline starts now
+          val firstAt =
+            if (prior.pending.size > full.size * batchSize) prior.firstAt else now
+          // timeout path (`:158-183`): the timer fired, or the key got
+          // input past its deadline (Spark never times out a key that
+          // receives data in every micro-batch)
+          val (kept, timeoutPackets) =
+            if (remainder.nonEmpty &&
+                (state.hasTimedOut || now - firstAt >= timeoutMs))
+              (Nil, List(Packet(key, prior.seq + full.size, remainder.size,
+                remainder.map(_.payload), "timeout")))
+            else (remainder, Nil)
+          // The seq counter SURVIVES a flush (state.update, not remove)
+          // so (apiType, seq) stays a unique packet identity across the
+          // key's lifetime — a removed state would restart every burst
+          // at seq 0. The timeout is only armed while rows are pending,
+          // for the time left until firstAt + timeoutMs (> 0: the
+          // remainder is not overdue), so an emptied state is inert
+          // until new input.
+          state.update(Buf(kept, prior.seq + full.size + timeoutPackets.size,
+            kept.map(_.recordKey).toSet, if (kept.isEmpty) 0L else firstAt))
+          if (kept.nonEmpty) state.setTimeoutDuration(firstAt + timeoutMs - now)
+          (countPackets ++ timeoutPackets).iterator
       }
   }
 }

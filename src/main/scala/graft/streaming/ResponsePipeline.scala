@@ -12,6 +12,10 @@ import graft.streaming.MicroBatcher.{Packet, Rec}
   *   micro-batching with in-buffer dedup ([[MicroBatcher]]) → G4 packet
   *   JSON → R2 topic routing → K4 Kafka sink (topic-column routed).
   *
+  * A packet's `reason` is `count` (the key's buffer reached
+  * `batchSize`) or `timeout` (its oldest pending row has waited
+  * `timeoutMs`, however often the key received input meanwhile).
+  *
   * Matching the reference's ordering contract (Kafka emit first, then
   * the transactional log-and-delete — `InvoiceResponseBatchProcessor
   * .java:207-211`), the packet stream is THE output here; the

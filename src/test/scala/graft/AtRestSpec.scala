@@ -317,4 +317,55 @@ class AtRestSpec extends SparkSpec {
   private def rows3(root: String): Set[(Long, Int, Int)] =
     spark.read.parquet(root).select(col("id"), col("k"), col("b"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+
+  test("inParallel: every chain settles before the join rethrows the first failure, later ones suppressed") {
+    val firstThrown = new java.util.concurrent.CountDownLatch(1)
+    @volatile var laterSettled = false
+    val e = intercept[IllegalStateException] {
+      AtRest.inParallel(
+        () => {
+          // later in the argument list, earlier to settle
+          Thread.sleep(200)
+          laterSettled = true
+          throw new IllegalArgumentException("later")
+        },
+        () => {
+          try throw new IllegalStateException("first")
+          finally firstThrown.countDown()
+        })
+    }
+    assert(firstThrown.getCount === 0)
+    assert(laterSettled, "the join rethrew before every chain settled")
+    assert(e.getMessage === "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("later"))
+  }
+
+  test("inParallel: an interrupted join still awaits every chain, then rethrows with the flag restored") {
+    val started = new java.util.concurrent.CountDownLatch(2)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    @volatile var settledChains = 0
+    @volatile var outcome: (Throwable, Int, Boolean) = null
+    val joiner = new Thread(() => {
+      val chain = () => {
+        started.countDown()
+        release.await()
+        synchronized { settledChains += 1 }
+      }
+      val thrown =
+        try { AtRest.inParallel(chain, chain); null }
+        catch { case t: Throwable => t }
+      outcome = (thrown, settledChains, Thread.currentThread().isInterrupted)
+    })
+    joiner.start()
+    started.await()
+    joiner.interrupt()
+    Thread.sleep(100)
+    assert(outcome == null, "the join returned while both chains were still running")
+    release.countDown()
+    joiner.join(30000)
+    val (thrown, settled, flag) = outcome
+    assert(thrown.isInstanceOf[InterruptedException])
+    assert(settled === 2)
+    assert(flag, "the interrupt flag must be restored")
+  }
 }

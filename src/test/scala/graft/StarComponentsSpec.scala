@@ -139,17 +139,27 @@ class StarComponentsSpec extends SparkSpec {
     assert(one === Map(3L -> 3L, 7L -> 3L))
   }
 
-  test("d6b star clusters equal d6 propagation clusters on the real corpus") {
+  test("d6 clusters equal driver-side union-find over the same near-dup pairs on the real corpus") {
+    val pairs = graft.operators.DedupOps.minhashLshCore(spark, Sf)
+      .filter($"is_near_dup" === 1).select($"a", $"b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val truth = unionFind(pairs.size.toLong, pairs)
     val d6 = graft.operators.DedupOps.dedupClusters(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val d6b = graft.operators.DedupOps.dedupClustersStar(spark, Sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(d6b === d6)
-    assert(d6.nonEmpty)
+    // every document appears once; docs outside the pair graph are
+    // their own singleton keeper
+    assert(d6.map(_._1) === graft.sources.Tables.documents(spark, Sf)
+      .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted)
+    val expected = d6.map { case (doc, _, _) =>
+      val root = truth.getOrElse(doc, doc)
+      (doc, root, if (root == doc) 1 else 0)
+    }
+    assert(d6 === expected)
+    assert(d6.exists(t => t._1 != t._2), "the corpus must hold real clusters")
   }
 
   test("d13 incremental merge equals a full re-cluster on the real corpus") {
-    val full = graft.operators.DedupOps.dedupClustersStar(spark, Sf)
+    val full = graft.operators.DedupOps.dedupClusters(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     val inc = graft.operators.DedupOps.incrementalClusters(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
