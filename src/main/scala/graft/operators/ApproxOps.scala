@@ -407,9 +407,8 @@ object ApproxOps {
 
   private[graft] def writeSketchStore(s: SparkSession, root: String,
       docs: DataFrame): Unit =
-    bottomKPerBucket(sketchRows(docs))
-      .write.mode("overwrite").partitionBy("h_bucket")
-      .parquet(s"$root/kmv")
+    AtRest.land(s, s"$root/kmv", "h_bucket",
+      bottomKPerBucket(sketchRows(docs)), "overwrite")
 
   /** Fold a batch into the standing sketch store: the batch's own
     * per-bucket bottom-k is the delta (anything ranked below k in the

@@ -1,14 +1,40 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 import java.util.concurrent.{CancellationException, ExecutionException,
   ExecutorCompletionService, Executors}
 
 /** Shared maintenance for the bucket-partitioned at-rest index
-  * layouts. Every maintained family (postings, positional, shingle,
-  * bands, winnow, SAX, z-order, vector cells) appends ≥1 new data
+  * layouts, and their ONE writer. Every bucketed parquet write in the
+  * program — a family's build, append, forget, heal, compaction and
+  * re-bucketing — lands through [[AtRest.land]] (AtRestSpec's guard
+  * fails on a partitioned writer anywhere else in `src/main`; the
+  * byte-target compaction stage is the one in-file exception).
+  * `land` owns, once, the rules each call site used to re-argue:
+  *   1. CANONICAL COLUMN ORDER: an append or dynamic overwrite into a
+  *      table that already has files projects the table's own column
+  *      order (read from one file footer), so a directory never mixes
+  *      two field orders (the d23 trap); a whole-table overwrite keeps
+  *      the frame's order;
+  *   2. CLUSTER BY BUCKET: one `repartition(bucket)` exchange, so each
+  *      bucket lands as ONE file instead of tasks × buckets files;
+  *   3. PIN ONLY WHEN NEEDED: the frame is `localCheckpoint`ed exactly
+  *      when its analyzed plan reads the target table (or a path under
+  *      or above it — the self-read / refreshByPath trap), derived
+  *      from the plan;
+  *   4. PER-FILE ORDER: `sortWithinPartitions(bucket +: sortCols)`, the
+  *      bucket leading so the writer's own required ordering cannot
+  *      destroy a family's promised file order (the ir21 lesson).
+  *
+  * Every maintained family (postings, positional, shingle, bands,
+  * winnow, SAX, z-order, vector cells) appends ≥1 new data
   * file per touched bucket per batch, so a daily-ingest deployment
   * accretes small files until reads pay per-file open cost — the
   * bin-pack here is ir19's compaction (RetrievalOps) extracted so the
@@ -90,6 +116,22 @@ object AtRest {
     } finally { pool.shutdown(); () }
   }
 
+  /** The bucket directories of a partitioned table, lazily, as
+    * (bucket, directory) — empty for a missing table directory. */
+  private def bucketDirs(s: SparkSession, table: String,
+      partitionCol: String): Iterator[(Int, Path)] = {
+    val fs = fsOf(s, table)
+    if (!fs.exists(new Path(table))) return Iterator.empty
+    fs.listStatus(new Path(table)).iterator
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$partitionCol="))
+      .map(d => d.getPath.getName.stripPrefix(s"$partitionCol=").toInt ->
+        d.getPath)
+  }
+
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+
   /** Data files per bucket partition of a partitioned table —
     * driver-side FS listing, O(#files) layout metadata (the same
     * bookkeeping a table format's manifest gives for free). A missing
@@ -98,15 +140,63 @@ object AtRest {
   private[graft] def bucketFiles(s: SparkSession, table: String,
       partitionCol: String): Map[Int, Seq[FileStatus]] = {
     val fs = fsOf(s, table)
-    if (!fs.exists(new Path(table))) return Map.empty
-    fs.listStatus(new Path(table))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol="))
-      .map { d =>
-        val b = d.getPath.getName.stripPrefix(s"$partitionCol=").toInt
-        b -> fs.listStatus(d.getPath).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-      }.toMap
+    bucketDirs(s, table, partitionCol)
+      .map { case (b, d) => b -> dataFiles(fs, d) }.toMap
+  }
+
+  /** The column order a read of `table` returns — its files' data
+    * columns, then the bucket column — read from ONE data file's
+    * footer on the driver (no schema-inference job); None while the
+    * table holds no data file. */
+  private def fileOrder(s: SparkSession, table: String,
+      bucketCol: String): Option[Seq[String]] = {
+    val fs = fsOf(s, table)
+    bucketDirs(s, table, bucketCol).flatMap(d => dataFiles(fs, d._2))
+      .nextOption().map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st,
+          s.sparkContext.hadoopConfiguration))
+        try r.getFileMetaData.getSchema.getFields.asScala
+          .map(_.getName).toSeq :+ bucketCol
+        finally r.close()
+      }
+  }
+
+  /** Whether `df`'s analyzed plan (subqueries included) scans `table`,
+    * a path under it, or a directory holding it — the frames a write
+    * to `table` would destroy the inputs of mid-flight. */
+  private[graft] def readsTable(s: SparkSession, df: DataFrame,
+      table: String): Boolean = {
+    val t = fsOf(s, table).makeQualified(new Path(table)).toString
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+    }.exists {
+      case h: HadoopFsRelation => h.location.rootPaths.exists { r =>
+        val p = r.toString
+        p == t || p.startsWith(s"$t/") || t.startsWith(s"$p/")
+      }
+      case _ => false
+    }
+  }
+
+  /** THE bucketed at-rest writer (see the object doc for the four
+    * rules it owns). `mode` is `append`, `overwrite` (the whole table)
+    * or `dynamic` (dynamic partition overwrite: only the buckets
+    * present in `df` are replaced). */
+  private[graft] def land(s: SparkSession, table: String, bucketCol: String,
+      df: DataFrame, mode: String, sortCols: Seq[Column] = Nil): Unit = {
+    require(Set("append", "overwrite", "dynamic")(mode),
+      s"land mode must be append, overwrite or dynamic: $mode")
+    val ordered =
+      if (mode == "overwrite") df
+      else fileOrder(s, table, bucketCol)
+        .fold(df)(cols => df.select(cols.map(col): _*))
+    val clustered = ordered.repartition(col(bucketCol))
+    val stable =
+      if (readsTable(s, df, table)) clustered.localCheckpoint() else clustered
+    val w = stable.sortWithinPartitions(col(bucketCol) +: sortCols: _*)
+      .write.mode(if (mode == "append") "append" else "overwrite")
+    (if (mode == "dynamic") w.option("partitionOverwriteMode", "dynamic")
+     else w).partitionBy(bucketCol).parquet(table)
   }
 
   /** The buckets whose directories have accreted past `targetFiles`
@@ -126,28 +216,19 @@ object AtRest {
     * and cannot destroy the promised order (the ir21 lesson). */
   private[graft] def stageCompaction(s: SparkSession, table: String,
       partitionCol: String, buckets: Seq[Int],
-      sortCols: Seq[Column] = Nil): Unit = {
-    val packed = s.read.parquet(table)
-      .filter(col(partitionCol).isin(buckets: _*))
-      .repartition(buckets.size, col(partitionCol))
-    val ordered =
-      if (sortCols.isEmpty) packed
-      else packed.sortWithinPartitions(col(partitionCol) +: sortCols: _*)
-    ordered.write.mode("overwrite").partitionBy(partitionCol)
-      .parquet(s"${table}_staging")
-  }
+      sortCols: Seq[Column] = Nil): Unit =
+    land(s, s"${table}_staging", partitionCol,
+      s.read.parquet(table).filter(col(partitionCol).isin(buckets: _*)),
+      "overwrite", sortCols)
 
   /** Replace exactly the staged buckets via dynamic partition
     * overwrite; the staging dir is dropped after a completed apply
     * (a crash before the drop leaves it — the next compaction's
     * staging write overwrites it wholesale). */
   private[graft] def applyCompaction(s: SparkSession, table: String,
-      partitionCol: String): Unit = {
-    s.read.parquet(s"${table}_staging")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(table)
+      partitionCol: String, sortCols: Seq[Column] = Nil): Unit = {
+    land(s, table, partitionCol, s.read.parquet(s"${table}_staging"),
+      "dynamic", sortCols)
     fsOf(s, table).delete(new Path(s"${table}_staging"), true)
     ()
   }
@@ -190,24 +271,31 @@ object AtRest {
           map(aPlan.toSeq.sortBy(_._1)
             .flatMap { case (b, n) => Seq(lit(b), lit(n)) }: _*),
           col(partitionCol))
-        s.read.parquet(table)
+        // the byte-target stage spreads a bucket over several files ON
+        // PURPOSE, so it and its apply write directly, not through land
+        // (whose one-exchange cluster would fold each bucket to 1 file)
+        def spreadWrite(df: DataFrame, out: String, overwrite: String) =
+          df.write.mode("overwrite")
+            .option("partitionOverwriteMode", overwrite)
+            .partitionBy(partitionCol).parquet(out)
+        spreadWrite(s.read.parquet(table)
           .filter(col(partitionCol).isin(affected: _*))
           .withColumn("__salt", pmod(monotonically_increasing_id(), nOf))
           .repartition(math.max(1, aPlan.values.sum),
             col(partitionCol), col("__salt"))
           .drop("__salt")
           .transform(d => if (sortCols.isEmpty) d
-            else d.sortWithinPartitions(col(partitionCol) +: sortCols: _*))
-          .write.mode("overwrite").partitionBy(partitionCol)
-          .parquet(s"${table}_staging")
-        applyCompaction(s, table, partitionCol)
+            else d.sortWithinPartitions(col(partitionCol) +: sortCols: _*)),
+          s"${table}_staging", "static")
+        spreadWrite(s.read.parquet(s"${table}_staging"), table, "dynamic")
+        fsOf(s, table).delete(new Path(s"${table}_staging"), true)
       }
       return affected
     }
     val affected = accretedBuckets(s, table, partitionCol, targetFiles)
     if (affected.nonEmpty) {
       stageCompaction(s, table, partitionCol, affected, sortCols)
-      applyCompaction(s, table, partitionCol)
+      applyCompaction(s, table, partitionCol, sortCols)
     }
     affected
   }
@@ -228,9 +316,10 @@ object AtRest {
   //   - the UNPINNED-STAGE self-read: the staged plan reads the very
   //     files the overwrite replaces, so it must materialize before
   //     the write begins (the refreshByPath trap).
-  // overwriteBuckets owns all three once: canonical column order is
-  // read from the table's own files, the stage is localCheckpoint-
-  // pinned here, and the drop set is affected − staged.
+  // overwriteBuckets owns the drop; land owns the column order and
+  // the self-read pin — the stage is pinned here regardless, because
+  // the drop set (affected − staged) must be read off it before the
+  // write.
   // ---------------------------------------------------------------
 
   /** Replace exactly the `affected` buckets of a bucket-partitioned
@@ -239,9 +328,7 @@ object AtRest {
     * bucket outside `affected` is written too, an affected bucket
     * with no staged rows has its directory dropped). Returns the
     * bucket ids that received rows. Families that promise a PER-FILE
-    * row order pass it as `sortCols` — the partition column leads the
-    * sort so FileFormatWriter's required ordering cannot destroy it
-    * (the ir21 lesson, [[stageCompaction]]'s convention).
+    * row order pass it as `sortCols` ([[land]]'s rule 4).
     *
     * EMPTIED-TABLE guard: when every partition directory of `table`
     * has already been dropped (a rerun after a total forget), the
@@ -253,32 +340,13 @@ object AtRest {
   private[graft] def overwriteBuckets(s: SparkSession, table: String,
       partitionCol: String, affected: Seq[Int], staged: DataFrame,
       sortCols: Seq[Column] = Nil): Set[Int] = {
-    val hasFiles = bucketFiles(s, table, partitionCol).valuesIterator
-      .exists(_.nonEmpty)
-    val cols = if (hasFiles) s.read.parquet(table).columns
-               else staged.columns
-    // cluster by the partition column before the pin: staged frames
-    // routinely arrive WIDE (a survivors-read unioned with a shuffled
-    // delta concatenates both sides' partitions), and a wide
-    // partitionBy write opens (tasks × buckets) parquet files — ~2 s
-    // of writer churn measured on the SAX landed append for a
-    // KB-sized delta. One narrow exchange of the request-sized stage
-    // lands each bucket as ONE file (guide §6's output sizing; the
-    // per-file sortCols promise below survives — the sort is applied
-    // after this shuffle, partition column leading).
-    val pinned = staged.select(cols.map(col(_)): _*)
-      .repartition(col(partitionCol)).localCheckpoint()
+    // pinned BEFORE land clusters it: land's exchange then reads the
+    // pin, so the stage still crosses exactly one shuffle
+    val pinned = staged.localCheckpoint()
     val present = pinned.select(col(partitionCol)).distinct()
       .collect().map(_.getInt(0)).toSet
-    if (present.nonEmpty) {
-      val ordered =
-        if (sortCols.isEmpty) pinned
-        else pinned.sortWithinPartitions(col(partitionCol) +: sortCols: _*)
-      ordered.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(table)
-    }
+    if (present.nonEmpty)
+      land(s, table, partitionCol, pinned, "dynamic", sortCols)
     val fs = fsOf(s, table)
     (affected.toSet -- present).foreach { b =>
       fs.delete(new Path(s"$table/$partitionCol=$b"), true)
@@ -372,23 +440,16 @@ object AtRest {
       .collect().map(_.getInt(0)).toSeq.sorted
     if (affected.isEmpty) return // migrated already (or nothing moves)
     // 1. LAND, exactly-once: a landed copy already sits in a >= oldN
-    // dir under the same keys. Pinned EAGERLY — the plan reads the
-    // very path the write appends to (the refreshByPath trap) — and
-    // re-ordered to the table's canonical file column order (the d23
-    // trap; `rows.columns` is that order).
-    val canonical = rows.columns
-    val toLand = movers
-      .join(rows.filter(col(partitionCol) >= oldN)
-          .select(keys.map(col(_)): _*),
-        keys, "left_anti")
-      .withColumn(partitionCol, col("__nb"))
-      .select(canonical.map(col(_)): _*)
-      .repartition(col(partitionCol)) // one landed file per fresh bucket
-      .localCheckpoint()
-    val ordered =
-      if (sortCols.isEmpty) toLand
-      else toLand.sortWithinPartitions(col(partitionCol) +: sortCols: _*)
-    ordered.write.mode("append").partitionBy(partitionCol).parquet(table)
+    // dir under the same keys (land pins the self-reading plan and
+    // restores the canonical column order)
+    land(s, table, partitionCol,
+      movers
+        .join(rows.filter(col(partitionCol) >= oldN)
+            .select(keys.map(col(_)): _*),
+          keys, "left_anti")
+        .withColumn(partitionCol, col("__nb"))
+        .drop("__nb"),
+      "append", sortCols)
     if (crashAfterLand) return // spec-planted crash point: (1)→(2)
     // 2. RESOLVE: the affected old buckets keep exactly their stayers
     overwriteBuckets(s, table, partitionCol, affected,
@@ -407,21 +468,20 @@ object AtRest {
     * copy-pasted-tail finding, extracted like the overwrite verb
     * was). The contract: derived tables are PURE functions of the
     * at-rest base, so a crash that left them stale (never wrong)
-    * heals by recomputing — no log, no replay. The stage is
-    * localCheckpoint-pinned before the overwrite unconditionally:
-    * heals are recovery paths (the materialization is off the hot
-    * path), and the pin makes the verb immune to the self-read trap
-    * by construction even when a family's derivation reads the very
-    * table it replaces. Chained heals (base → A → B where B derives
-    * from A) call this once per artifact IN DEPENDENCY ORDER — each
-    * pin materializes the upstream table's fresh state before the
-    * next derivation reads it. */
+    * heals by recomputing — no log, no replay. A bucketed artifact
+    * (one entry in `partitionCols`) lands through [[land]], which pins
+    * exactly when the derivation reads the very table it replaces; the
+    * flat form pins unconditionally (heals are recovery paths, off the
+    * hot path). Chained heals (base → A → B where B derives from A)
+    * call this once per artifact IN DEPENDENCY ORDER — each write
+    * completes before the next derivation reads it. */
   private[graft] def healDerived(s: SparkSession, out: String,
-      derived: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
-    val w = derived.localCheckpoint().write.mode("overwrite")
-    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-      .parquet(out)
-  }
+      derived: DataFrame, partitionCols: Seq[String] = Nil): Unit =
+    partitionCols match {
+      case Seq() =>
+        derived.localCheckpoint().write.mode("overwrite").parquet(out)
+      case Seq(bucketCol) => land(s, out, bucketCol, derived, "overwrite")
+    }
 
   /** The anti-join removal form of [[overwriteBuckets]] — the FORGET
     * verb: drop from exactly the `affected` buckets every row whose

@@ -231,8 +231,8 @@ object AuditOps {
 
   private[graft] def writeRelease(s: SparkSession, root: String,
       docs: DataFrame): Unit =
-    releaseRows(docs).write.mode("overwrite").partitionBy("qi_bucket")
-      .parquet(s"$root/release")
+    AtRest.land(s, s"$root/release", "qi_bucket", releaseRows(docs),
+      "overwrite")
 
   /** The enforcement sweep's survivor frame — exposed so
     * PlanContractSpec can pin the STATIC `qi_bucket IN` partition
@@ -395,16 +395,12 @@ object AuditOps {
       // ~1/16 of cells), where a doc_id-only guard would mistake the
       // yet-unmoved OLD row for an already-landed copy and silently
       // drop the move
-      moved
-        .join(s.read.parquet(s"$root/release")
+      AtRest.land(s, s"$root/release", "qi_bucket",
+        moved.join(s.read.parquet(s"$root/release")
             .filter(col("qi_bucket").isin(newBuckets: _*))
             .select(col("doc_id"), col("len_bucket")),
-          Seq("doc_id", "len_bucket"), "left_anti")
-        .select(col("doc_id"), col("lang"), col("source"),
-          col("len_bucket"), col("qi_bucket"))
-        .localCheckpoint()
-        .write.mode("append").partitionBy("qi_bucket")
-        .parquet(s"$root/release")
+          Seq("doc_id", "len_bucket"), "left_anti"),
+        "append")
       if (crashAfterLand) return // spec-planted crash point: (1)→(2)
       // (2) resolve the old copies. A new bucket can COINCIDE with an
       // old one (16 buckets), and the overwrite below replaces those

@@ -1255,27 +1255,24 @@ object DedupOps {
     * build/forget target a partition column the layout lacks). */
   private[graft] def writeShingleIndex(s: SparkSession, root: String,
       docs: DataFrame, bucketStats: Boolean): Unit = {
-    shinglePostings(docs)
-      .write.mode("overwrite").partitionBy("sh_bucket")
-      .parquet(s"$root/postings")
+    AtRest.land(s, s"$root/postings", "sh_bucket", shinglePostings(docs),
+      "overwrite")
     val p = s.read.parquet(s"$root/postings")
-    p.select(col("sh_bucket"), col("h")).distinct()
-      .write.mode("overwrite").partitionBy("sh_bucket")
-      .parquet(s"$root/shset")
+    AtRest.land(s, s"$root/shset", "sh_bucket",
+      p.select(col("sh_bucket"), col("h")).distinct(), "overwrite")
     val stats = p.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     if (bucketStats)
-      stats.withColumn("ds_bucket", docStatsBucketCol)
-        .write.mode("overwrite").partitionBy("ds_bucket")
-        .parquet(s"$root/docstats")
+      AtRest.land(s, s"$root/docstats", "ds_bucket",
+        stats.withColumn("ds_bucket", docStatsBucketCol), "overwrite")
     else
       stats.write.mode("overwrite").parquet(s"$root/docstats")
   }
 
   /** APPEND: fold a fresh batch into the standing index — exactly-once
     * under retry (ir16's discipline: every new-row frame anti-joins
-    * the standing artifact it appends to, pinned as an EAGER
-    * localCheckpoint because its plan reads the very path the write
-    * appends to — a cached/re-listed plan would anti-join itself out).
+    * the standing artifact it appends to; [[AtRest.land]] pins it
+    * because its plan reads the very path the write appends to — a
+    * cached/re-listed plan would anti-join itself out).
     * Postings and stats are per-doc facts (standing rows untouched);
     * the dictionary grows by SET UNION — only hashes new to the index
     * land, which is exactly why append == rebuild row-for-row on all
@@ -1289,24 +1286,16 @@ object DedupOps {
     val full = shinglePostings(batch)
     // three consumers: postings anti-join, dictionary delta, stats
     CacheScope.persist(full)
-    full
-      .join(s.read.parquet(s"$root/postings")
+    AtRest.land(s, s"$root/postings", "sh_bucket",
+      full.join(s.read.parquet(s"$root/postings")
           .select(col("h"), col("doc_id")),
-        Seq("h", "doc_id"), "left_anti")
-      // the anti-join moved its keys to the front — restore the build
-      // write's column order, or the directory holds files with TWO
-      // field orders and the read-back schema (hence every positional
-      // comparison) becomes which-file-infers-first nondeterministic
-      .select(col("doc_id"), col("h"), col("sh_bucket"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("sh_bucket")
-      .parquet(s"$root/postings")
-    full.select(col("sh_bucket"), col("h")).distinct()
-      .join(s.read.parquet(s"$root/shset").select(col("h")),
-        Seq("h"), "left_anti")
-      .localCheckpoint()
-      .write.mode("append").partitionBy("sh_bucket")
-      .parquet(s"$root/shset")
+        Seq("h", "doc_id"), "left_anti"),
+      "append")
+    AtRest.land(s, s"$root/shset", "sh_bucket",
+      full.select(col("sh_bucket"), col("h")).distinct()
+        .join(s.read.parquet(s"$root/shset").select(col("h")),
+          Seq("h"), "left_anti"),
+      "append")
     full.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
       .join(s.read.parquet(s"$root/docstats").select(col("doc_id")),
         Seq("doc_id"), "left_anti")
@@ -1519,19 +1508,17 @@ object DedupOps {
     * ir15's no-second-corpus-pass rule). */
   private[graft] def writeWinnowIndex(s: SparkSession, root: String,
       docs: DataFrame): Unit = {
-    bucketedWfp(docs)
-      .write.mode("overwrite").partitionBy("h_bucket")
-      .parquet(s"$root/wfp")
+    AtRest.land(s, s"$root/wfp", "h_bucket", bucketedWfp(docs), "overwrite")
     val w = s.read.parquet(s"$root/wfp")
-    w.groupBy(col("h_bucket"), col("h")).agg(count(lit(1)).as("nd"))
-      .write.mode("overwrite").partitionBy("h_bucket")
-      .parquet(s"$root/wdf")
+    AtRest.land(s, s"$root/wdf", "h_bucket",
+      w.groupBy(col("h_bucket"), col("h")).agg(count(lit(1)).as("nd")),
+      "overwrite")
     val over = s.read.parquet(s"$root/wdf")
       .filter(col("nd") > WinnowCap).select(col("h"))
-    w.join(broadcast(over), Seq("h"), "left_anti")
-      .select(col("doc_id"), col("h"), col("h_bucket"))
-      .write.mode("overwrite").partitionBy("h_bucket")
-      .parquet(s"$root/kept")
+    AtRest.land(s, s"$root/kept", "h_bucket",
+      w.join(broadcast(over), Seq("h"), "left_anti")
+        .select(col("doc_id"), col("h"), col("h_bucket")),
+      "overwrite")
   }
 
   /** APPEND: d19's merge made physical —
@@ -1567,13 +1554,13 @@ object DedupOps {
       batch: DataFrame): Unit = {
     val bfp = bucketedWfp(batch)
     CacheScope.persist(bfp) // anti-join + stats delta consumers
+    // pinned for the stats delta and the `kept` append below: re-read
+    // after its own land, the anti-join would filter itself out
     val newRows = bfp
       .join(s.read.parquet(s"$root/wfp").select(col("h"), col("doc_id")),
         Seq("h", "doc_id"), "left_anti")
-      .select(col("doc_id"), col("h"), col("h_bucket"))
       .localCheckpoint()
-    newRows.write.mode("append").partitionBy("h_bucket")
-      .parquet(s"$root/wfp")
+    AtRest.land(s, s"$root/wfp", "h_bucket", newRows, "append")
     // the PRE-merge over-cap set, pinned before the stats overwrite:
     // hashes an earlier append already evicted — this batch's
     // eviction rewrite must be driven by the CROSSING delta, not by
@@ -1612,11 +1599,9 @@ object DedupOps {
     // survivors — the shared verb drops exactly those directories
     AtRest.sweepBuckets(s, s"$root/kept", "h_bucket", evictBuckets,
       over.select(col("h")), Seq("h"))
-    newRows
-      .join(broadcast(over.select(col("h"))), Seq("h"), "left_anti")
-      .select(col("doc_id"), col("h"), col("h_bucket"))
-      .write.mode("append").partitionBy("h_bucket")
-      .parquet(s"$root/kept")
+    AtRest.land(s, s"$root/kept", "h_bucket",
+      newRows.join(broadcast(over.select(col("h"))), Seq("h"), "left_anti"),
+      "append")
   }
 
   /** Crash recovery: stats and the serving table RECOUNT from the
@@ -1844,41 +1829,35 @@ object DedupOps {
     // first-materialization of a cached frame is block-locked by the
     // BlockManager, so the shingle pass still runs once)
     AtRest.inParallel(
-      () => hsets.select(col("doc_id"), col("bg"),
-          idBucketCol(col("doc_id")).as("id_bucket"))
-        .write.mode("overwrite").partitionBy("id_bucket")
-        .parquet(s"$root/docsets"),
-      () => bandRows(hsets)
-        .write.mode("overwrite").partitionBy("band_bucket")
-        .parquet(s"$root/bands"))
+      () => AtRest.land(s, s"$root/docsets", "id_bucket",
+        hsets.select(col("doc_id"), col("bg"),
+          idBucketCol(col("doc_id")).as("id_bucket")),
+        "overwrite"),
+      () => AtRest.land(s, s"$root/bands", "band_bucket", bandRows(hsets),
+        "overwrite"))
   }
 
   /** APPEND: per-doc facts only — no merge step at all (the band rows
     * and shingle sets of standing docs never change), so append ==
     * rebuild row-for-row by construction. Exactly-once via the ir16
-    * anti-join + eager-checkpoint discipline, with the column order
-    * restored after each anti-join (the d23 mixed-file-schema
-    * lesson). */
+    * anti-join; [[AtRest.land]] pins each self-reading append and
+    * restores the column order (the d23 mixed-file-schema lesson). */
   private[graft] def appendBandIndex(s: SparkSession, root: String,
       batch: DataFrame): Unit = {
     val hsets = docShingleSets(batch)
     CacheScope.persist(hsets) // feeds both appends
-    hsets.select(col("doc_id"), col("bg"),
-        idBucketCol(col("doc_id")).as("id_bucket"))
-      .join(s.read.parquet(s"$root/docsets").select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("bg"), col("id_bucket"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("id_bucket")
-      .parquet(s"$root/docsets")
-    bandRows(hsets)
-      .join(s.read.parquet(s"$root/bands")
-          .select(col("doc_id"), col("band")),
-        Seq("doc_id", "band"), "left_anti")
-      .select(col("doc_id"), col("band"), col("sig"), col("band_bucket"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("band_bucket")
-      .parquet(s"$root/bands")
+    AtRest.land(s, s"$root/docsets", "id_bucket",
+      hsets.select(col("doc_id"), col("bg"),
+          idBucketCol(col("doc_id")).as("id_bucket"))
+        .join(s.read.parquet(s"$root/docsets").select(col("doc_id")),
+          Seq("doc_id"), "left_anti"),
+      "append")
+    AtRest.land(s, s"$root/bands", "band_bucket",
+      bandRows(hsets)
+        .join(s.read.parquet(s"$root/bands")
+            .select(col("doc_id"), col("band")),
+          Seq("doc_id", "band"), "left_anti"),
+      "append")
   }
 
   /** The docsets read with the layout contract RE-ASSERTED: parquet
@@ -2075,25 +2054,21 @@ object DedupOps {
     * bucket-partitioned. */
   private[graft] def writeSimhashIndex(s: SparkSession, root: String,
       docs: DataFrame): Unit =
-    simChunkRows(simhash60Of(docs))
-      .write.mode("overwrite").partitionBy("chunk_bucket")
-      .parquet(s"$root/chunks")
+    AtRest.land(s, s"$root/chunks", "chunk_bucket",
+      simChunkRows(simhash60Of(docs)), "overwrite")
 
   /** APPEND: per-doc facts only (standing signatures never change) —
     * append == rebuild row-exact by construction, exactly-once via
-    * the ir16 anti-join + eager-checkpoint discipline with the
-    * canonical column order restored (the d23 lesson). */
+    * the ir16 anti-join ([[AtRest.land]] pins the self-reading plan
+    * and restores the canonical column order — the d23 lesson). */
   private[graft] def appendSimhashIndex(s: SparkSession, root: String,
       batch: DataFrame): Unit =
-    simChunkRows(simhash60Of(batch))
-      .join(s.read.parquet(s"$root/chunks")
-          .select(col("doc_id"), col("band")),
-        Seq("doc_id", "band"), "left_anti")
-      .select(col("doc_id"), col("simhash"), col("band"), col("chunk"),
-        col("chunk_bucket"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("chunk_bucket")
-      .parquet(s"$root/chunks")
+    AtRest.land(s, s"$root/chunks", "chunk_bucket",
+      simChunkRows(simhash60Of(batch))
+        .join(s.read.parquet(s"$root/chunks")
+            .select(col("doc_id"), col("band")),
+          Seq("doc_id", "band"), "left_anti"),
+      "append")
 
   /** D28 — SIMHASH NEAR-DUP AUDIT FROM THE AT-REST INDEX: d3b's full
     * pair audit served from the written chunk rows. BUILD + APPEND
@@ -2253,12 +2228,11 @@ object DedupOps {
     // both projections land from the same pinned assignment into
     // disjoint tables — overlap the writes (guide §2.6)
     AtRest.inParallel(
-      () => l.withColumn("c_bucket", clusterBucketCol(col("cluster_id")))
-        .write.mode("overwrite").partitionBy("c_bucket")
-        .parquet(s"$root/clusters"),
-      () => l.withColumn("d_bucket", idBucketCol(col("doc_id")))
-        .write.mode("overwrite").partitionBy("d_bucket")
-        .parquet(s"$root/members"))
+      () => AtRest.land(s, s"$root/clusters", "c_bucket",
+        l.withColumn("c_bucket", clusterBucketCol(col("cluster_id"))),
+        "overwrite"),
+      () => AtRest.land(s, s"$root/members", "d_bucket",
+        l.withColumn("d_bucket", idBucketCol(col("doc_id"))), "overwrite"))
   }
 
   /** BUILD (and the wholesale HEAL): components over the written

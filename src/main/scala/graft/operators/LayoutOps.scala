@@ -156,12 +156,13 @@ object LayoutOps {
     * sort when filtering on the second dimension. */
   def zorderRangeRead(s: SparkSession, dir: String): DataFrame = {
     val root = SimilarityOps.indexRoot(s, dir) + "/zorder"
-    zCoords(Tables.events(s, dir), col("event_id"))
-      // partition-column values read back as int (partition
-      // inference); cell < 2^22 by construction so the narrowing is
-      // lossless and the IN probe stays on the bare attribute
-      .withColumn("cell", col("cell").cast("int"))
-      .write.mode("overwrite").partitionBy("cell").parquet(root)
+    // partition-column values read back as int (partition
+    // inference); cell < 2^22 by construction so the narrowing is
+    // lossless and the IN probe stays on the bare attribute
+    AtRest.land(s, root, "cell",
+      zCoords(Tables.events(s, dir), col("event_id"))
+        .withColumn("cell", col("cell").cast("int")),
+      "overwrite")
     val cells = cellsForRange(RectU0, RectU1, RectD0, RectD1)
     s.read.parquet(root)
       .filter(col("cell").isin(cells.map(_.toInt): _*) &&
@@ -178,14 +179,9 @@ object LayoutOps {
     * associative, so the append merges them instead of recomputing). */
   private[graft] def writeZorder(s: SparkSession, root: String,
       ev: DataFrame): Unit = {
-    // cluster-before-land (guide §6): the per-row cell map inherits the
-    // scan's task count, so the partitionBy write otherwise opens
-    // tasks × cells files (measured 94 files for 570 KB on ly4's
-    // build+forget); one narrow exchange lands one file per cell
-    zCoords(ev, col("event_id"))
-      .withColumn("cell", col("cell").cast("int"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/rows")
+    AtRest.land(s, s"$root/rows", "cell",
+      zCoords(ev, col("event_id")).withColumn("cell", col("cell").cast("int")),
+      "overwrite")
     cellAgg(s.read.parquet(s"$root/rows"))
       .write.mode("overwrite").parquet(s"$root/stats")
   }
@@ -194,7 +190,7 @@ object LayoutOps {
       batch: DataFrame): Unit = {
     val bc = CacheScope.persist(zCoords(batch, col("event_id"))
       .withColumn("cell", col("cell").cast("int")))
-    bc.write.mode("append").partitionBy("cell").parquet(s"$root/rows")
+    AtRest.land(s, s"$root/rows", "cell", bc, "append")
     s.read.parquet(s"$root/stats")
       .unionByName(cellAgg(bc))
       .groupBy(col("cell"))

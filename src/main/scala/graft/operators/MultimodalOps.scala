@@ -286,11 +286,9 @@ object MultimodalOps {
     * never a decode. */
   def phashAtRest(s: SparkSession, dir: String): DataFrame = {
     val root = SimilarityOps.indexRoot(s, dir) + "/phashidx"
-    phashChunks(s, dir)
-      .withColumn("chunk_bucket",
-        pmod(col("chunk") + col("band"), lit(ChunkBuckets)).cast("int"))
-      .write.mode("overwrite").partitionBy("chunk_bucket")
-      .parquet(s"$root/bands")
+    AtRest.land(s, s"$root/bands", "chunk_bucket",
+      phashChunks(s, dir).withColumn("chunk_bucket", chunkBucketCol),
+      "overwrite")
     phashPairs(s.read.parquet(s"$root/bands").drop("chunk_bucket"))
       .transform(Common.presented(_, col("kind"), col("a"), col("b")))
   }
@@ -360,15 +358,15 @@ object MultimodalOps {
     * ever reads one again. */
   private[graft] def writePhashStore(s: SparkSession, root: String,
       med: DataFrame): Unit = {
-    med.select(col("kind"), md5(col("payload")).as("digest"),
-        col("media_id"))
-      .withColumn("dg_bucket", digestBucketCol)
-      .write.mode("overwrite").partitionBy("dg_bucket")
-      .parquet(s"$root/members")
-    repChunks(mediaReps(med).drop("digest"))
-      .withColumn("chunk_bucket", chunkBucketCol)
-      .write.mode("overwrite").partitionBy("chunk_bucket")
-      .parquet(s"$root/bands")
+    AtRest.land(s, s"$root/members", "dg_bucket",
+      med.select(col("kind"), md5(col("payload")).as("digest"),
+          col("media_id"))
+        .withColumn("dg_bucket", digestBucketCol),
+      "overwrite")
+    AtRest.land(s, s"$root/bands", "chunk_bucket",
+      repChunks(mediaReps(med).drop("digest"))
+        .withColumn("chunk_bucket", chunkBucketCol),
+      "overwrite")
   }
 
   /** The bands sweep's pruned scan — exposed so PlanContractSpec can

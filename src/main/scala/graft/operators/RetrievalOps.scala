@@ -815,21 +815,18 @@ object RetrievalOps {
 
   private[graft] def writePostingsIndex(s: SparkSession, root: String,
       docs: DataFrame, bucketDoclen: Boolean = false): Unit = {
-    postingsArtifacts(docs)
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$root/postings")
+    AtRest.land(s, s"$root/postings", "term_bucket",
+      postingsArtifacts(docs), "overwrite")
     // the two metadata chains are INDEPENDENT after the postings land
     // (blockmeta→dict recounts from the written postings; doclen→consts
     // from the docs scan and then its own written table), so they
     // overlap (guide §2.6) — each chain's internal order is unchanged
     AtRest.inParallel(
       () => {
-        blockMetaOf(s.read.parquet(s"$root/postings"))
-          .write.mode("overwrite").partitionBy("term_bucket")
-          .parquet(s"$root/blockmeta")
-        dictFromMeta(s.read.parquet(s"$root/blockmeta"))
-          .write.mode("overwrite").partitionBy("term_bucket")
-          .parquet(s"$root/dict")
+        AtRest.land(s, s"$root/blockmeta", "term_bucket",
+          blockMetaOf(s.read.parquet(s"$root/postings")), "overwrite")
+        AtRest.land(s, s"$root/dict", "term_bucket",
+          dictFromMeta(s.read.parquet(s"$root/blockmeta")), "overwrite")
       },
       () => {
         // the per-doc length table — index metadata in its own right (dl
@@ -842,9 +839,8 @@ object RetrievalOps {
         // ever appended to, never rewritten)
         val dlf = docLenOf(docs)
         if (bucketDoclen)
-          dlf.withColumn("doc_bucket", docBucketCol)
-            .write.mode("overwrite").partitionBy("doc_bucket")
-            .parquet(s"$root/doclen")
+          AtRest.land(s, s"$root/doclen", "doc_bucket",
+            dlf.withColumn("doc_bucket", docBucketCol), "overwrite")
         else dlf.write.mode("overwrite").parquet(s"$root/doclen")
         constsOf(s.read.parquet(s"$root/doclen"))
           .write.mode("overwrite").parquet(s"$root/consts")
@@ -915,8 +911,7 @@ object RetrievalOps {
         .select(col("tok"), col("doc_id")), Seq("tok", "doc_id"),
         "left_anti")
       .localCheckpoint()
-    bp.write.mode("append").partitionBy("term_bucket")
-      .parquet(s"$root/postings")
+    AtRest.land(s, s"$root/postings", "term_bucket", bp, "append")
     // disjoint doc sets: a (term, block) key appears on at most one
     // side unless the block straddles the split, where max/min/sum all
     // merge exactly; n_postings sums like the dict's df does. The
@@ -1471,41 +1466,33 @@ object RetrievalOps {
 
   private[graft] def writePositionalIndex(s: SparkSession, root: String,
       docs: DataFrame): Unit =
-    positionalRows(docs)
-      // term_bucket leads the sort so the write's required ordering
-      // (the partition column) is already satisfied — otherwise
-      // FileFormatWriter inserts its own partition-column sort and
-      // the promised (tok, doc_id, pos) file order is destroyed
-      .sortWithinPartitions(
-        col("term_bucket"), col("tok"), col("doc_id"), col("pos"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$root/positional")
+    AtRest.land(s, s"$root/positional", "term_bucket", positionalRows(docs),
+      "overwrite", positionalOrder)
+
+  /** The promised per-file order of the positional lists. */
+  private def positionalOrder: Seq[Column] =
+    Seq(col("tok"), col("doc_id"), col("pos"))
 
   /** IR21's append core — ir17's promised maintenance ("positions are
     * per-doc facts, so ir7's append discipline maintains the lists
     * without touching standing files") made physical: the batch's
     * positional rows anti-join the standing lists' slim
-    * (tok, doc_id, pos) key projection (exactly-once under retry),
-    * pin EAGERLY (the refreshByPath self-anti-join trap), restore the
-    * build's column order and per-file (tok, doc_id, pos) sort, and
-    * APPEND — standing files are never rewritten, there is no
+    * (tok, doc_id, pos) key projection (exactly-once under retry) and
+    * APPEND through [[AtRest.land]] (which pins the self-anti-join,
+    * restores the build's column order and per-file (tok, doc_id, pos)
+    * sort) — standing files are never rewritten, there is no
     * metadata to merge (positions carry no corpus-level stats), and
     * append == rebuild row-exactly by construction
     * (RetrievalOpsSpec pins it plus the untouched-file and
     * retried-append invariants). */
   private[graft] def appendPositionalIndex(s: SparkSession, root: String,
       batch: DataFrame): Unit =
-    positionalRows(batch)
-      .join(s.read.parquet(s"$root/positional")
-          .select(col("tok"), col("doc_id"), col("pos")),
-        Seq("tok", "doc_id", "pos"), "left_anti")
-      .select(col("doc_id"), col("dl"), col("pos"), col("tok"),
-        col("term_bucket"))
-      .localCheckpoint()
-      .sortWithinPartitions(
-        col("term_bucket"), col("tok"), col("doc_id"), col("pos"))
-      .write.mode("append").partitionBy("term_bucket")
-      .parquet(s"$root/positional")
+    AtRest.land(s, s"$root/positional", "term_bucket",
+      positionalRows(batch)
+        .join(s.read.parquet(s"$root/positional")
+            .select(col("tok"), col("doc_id"), col("pos")),
+          Seq("tok", "doc_id", "pos"), "left_anti"),
+      "append", positionalOrder)
 
   /** FORGET from the positional lists (ir23) — ir22's shape on the
     * ir17/ir21 layout: the targets derive from the REQUEST's own
@@ -1528,7 +1515,7 @@ object RetrievalOps {
       .collect().map(_.getInt(0)).toSeq.sorted
     AtRest.sweepBuckets(s, s"$root/positional", "term_bucket", tBuckets,
       delKeys.select(col("doc_id")).distinct(), Seq("doc_id"),
-      sortCols = Seq(col("tok"), col("doc_id"), col("pos")))
+      sortCols = positionalOrder)
     ()
   }
 

@@ -755,10 +755,11 @@ object SimilarityOps {
     * composing plans without executing them still pay it. */
   private[graft] def buildIndex(s: SparkSession, root: String, vecs: DataFrame,
       coarse: DataFrame, cents: DataFrame): Unit = {
-    pqEncodeWith(vecs, cents)
-      .join(coarseAssign(vecs, coarse).select(col("vec_id"),
-        col("cell_id").cast("int").as("cell_id")), Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$root/codes")
+    AtRest.land(s, s"$root/codes", "cell_id",
+      pqEncodeWith(vecs, cents)
+        .join(coarseAssign(vecs, coarse).select(col("vec_id"),
+          col("cell_id").cast("int").as("cell_id")), Seq("vec_id")),
+      "overwrite")
     // occupancy from the just-written codes: a count per cell over the
     // 4-int-per-vector codes table, not the raw vectors
     refreshOccupancy(s, root)
@@ -1059,9 +1060,8 @@ object SimilarityOps {
     val standing = s.read.parquet(s"$root/codes")
       .join(broadcast(targetCells), Seq("cell_id"))
       .select(col("vec_id"))
-    val fresh = manifest.join(standing, Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    fresh.write.mode("append").partitionBy("cell_id").parquet(s"$root/codes")
+    AtRest.land(s, s"$root/codes", "cell_id",
+      manifest.join(standing, Seq("vec_id"), "left_anti"), "append")
     // stats: RECOUNT the touched cells from the now-current codes
     // (bounded by the batch's cells via the same pruning) and keep
     // every other cell's row as-is. Recount-not-increment makes this
@@ -1194,16 +1194,15 @@ object SimilarityOps {
     // deliberately NOT AtRest.overwriteBuckets: this family's stage is
     // a WRITTEN staging table (its own crash point, PqSpec-exercised),
     // not a pinned in-memory frame — the on-disk handoff is the verb
-    compactionStage(s, root).write.mode("overwrite")
-      .partitionBy("cell_id").parquet(s"$root/staging")
+    AtRest.land(s, s"$root/staging", "cell_id", compactionStage(s, root),
+      "overwrite")
     val stagedCells = AtRest.bucketFiles(s, s"$root/staging", "cell_id")
       .filter(_._2.nonEmpty).keySet
     // an every-affected-cell-emptied stage holds NO data files (only
     // _SUCCESS) — nothing to overwrite, and no schema to read
     if (stagedCells.nonEmpty)
-      s.read.parquet(s"$root/staging").write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell_id").parquet(s"$root/codes")
+      AtRest.land(s, s"$root/codes", "cell_id",
+        s.read.parquet(s"$root/staging"), "dynamic")
     if (crashAfterOverwrite) return // spec-planted crash point
     // the empty-partition drop: tombstoned cells that staged ZERO
     // survivors keep their stale directory under dynamic overwrite —
@@ -1534,7 +1533,7 @@ object SimilarityOps {
       coarseAssign(c, coarseCentroids(c))
         .select(col("vec_id"), col("cell_id").cast("int").as("cell_id")),
       Seq("vec_id"))
-    indexed.write.mode("overwrite").partitionBy("cell_id").parquet(s"$root/codes")
+    AtRest.land(s, s"$root/codes", "cell_id", indexed, "overwrite")
     indexed.filter(col("vec_id") < NumQueries)
       .write.mode("overwrite").parquet(s"$root/queries")
   }
@@ -1642,9 +1641,8 @@ object SimilarityOps {
         .select(col("vec_id"), col("embedding").as("v"))
         .withColumn("nrm", sqrt(dotD(col("v"), col("v")))))
       .write.mode("overwrite").parquet(s"$root/cents")
-    sq8RowsWith(s, root, standing)
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(s"$root/codes")
+    AtRest.land(s, s"$root/codes", "cell_id",
+      sq8RowsWith(s, root, standing), "overwrite")
     s.read.parquet(s"$root/codes").filter(col("vec_id") < NumQueries)
       .select(col("vec_id"), col("codes"), col("cell_id"))
       .write.mode("overwrite").parquet(s"$root/queries")
@@ -1652,16 +1650,15 @@ object SimilarityOps {
 
   /** APPEND: the batch re-encodes against the FROZEN grid and codebook
     * — batch-sized work, standing codes untouched — behind the ir16
-    * exactly-once anti-join (slim id projection, pinned eagerly). */
+    * exactly-once anti-join (slim id projection; land pins the
+    * self-reading plan). */
   private[graft] def appendSq8Maintained(s: SparkSession, root: String,
       batch: DataFrame): Unit =
-    sq8RowsWith(s, root, batch)
-      .join(s.read.parquet(s"$root/codes").select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("codes"), col("cell_id"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("cell_id")
-      .parquet(s"$root/codes")
+    AtRest.land(s, s"$root/codes", "cell_id",
+      sq8RowsWith(s, root, batch)
+        .join(s.read.parquet(s"$root/codes").select(col("vec_id")),
+          Seq("vec_id"), "left_anti"),
+      "append")
 
   /** FORGET: the request's own vectors re-assign through the STORED
     * codebook — their cells are the only partitions touched (the c6
@@ -1881,12 +1878,12 @@ object SimilarityOps {
     // NOT stored — they recompute on exactly the fetched rows, the
     // same `sqrt(dot(v,v))` tree as corpus(), so the values are
     // bit-identical and the table stays a pure column store)
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"),
-        pmod(col("vec_id"), lit(FloatBuckets.toLong)).cast("int")
-          .as("id_bucket"))
-      .write.mode("overwrite").partitionBy("id_bucket")
-      .parquet(s"$root/floats")
+    AtRest.land(s, s"$root/floats", "id_bucket",
+      Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding"),
+          pmod(col("vec_id"), lit(FloatBuckets.toLong)).cast("int")
+            .as("id_bucket")),
+      "overwrite")
     val t = s.read.parquet(s"$root/codes")
     val q = sq8IndexQueries(s, root)
     val ws = Window.partitionBy(col("query_id"))
@@ -1956,21 +1953,19 @@ object SimilarityOps {
 
   private[graft] def writeSignIndex(s: SparkSession, root: String,
       vecs: DataFrame): Unit =
-    signRows(vecs).write.mode("overwrite").partitionBy("id_bucket")
-      .parquet(s"$root/signatures")
+    AtRest.land(s, s"$root/signatures", "id_bucket", signRows(vecs),
+      "overwrite")
 
   /** x32's APPEND: per-vector facts (a standing vector's signature
-    * never changes), exactly-once behind the ir16 anti-join +
-    * eager-checkpoint guard — standing files untouched. */
+    * never changes), exactly-once behind the ir16 anti-join (land pins
+    * the self-reading plan) — standing files untouched. */
   private[graft] def appendSignIndex(s: SparkSession, root: String,
       batch: DataFrame): Unit =
-    signRows(batch)
-      .join(s.read.parquet(s"$root/signatures").select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("w0"), col("w1"), col("id_bucket"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("id_bucket")
-      .parquet(s"$root/signatures")
+    AtRest.land(s, s"$root/signatures", "id_bucket",
+      signRows(batch)
+        .join(s.read.parquet(s"$root/signatures").select(col("vec_id")),
+          Seq("vec_id"), "left_anti"),
+      "append")
 
   /** x32's FORGET: the simplest sweep in the forget family — the
     * layout is id-bucketed, so a delete request's target partitions

@@ -909,25 +909,22 @@ object TextOps {
     * `partitionBy(shard_id)`, one balanced verifiable store. */
   private[graft] def writeShardStore(s: SparkSession, root: String,
       docs: DataFrame): Unit =
-    shardStoreRows(docs).write.mode("overwrite").partitionBy("shard_id")
-      .parquet(s"$root/shards")
+    AtRest.land(s, s"$root/shards", "shard_id", shardStoreRows(docs),
+      "overwrite")
 
-  /** APPEND: exactly-once via the anti-join + eager-checkpoint
-    * discipline (x19's idempotence on the export layer). New files
+  /** APPEND: exactly-once via the anti-join (land pins the
+    * self-reading plan) discipline (x19's idempotence on the export layer). New files
     * land INSIDE existing partition dirs; standing files are never
     * rewritten (hash assignment never reassigns — ShardAtRestSpec pins
     * the file sets), and the membership read column-prunes to the
     * doc_id column, a sliver of the store's payload bytes. */
   private[graft] def appendShardStore(s: SparkSession, root: String,
       batch: DataFrame): Unit =
-    shardStoreRows(batch)
-      .join(s.read.parquet(s"$root/shards").select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("n_tok"), col("h"), col("text"),
-        col("shard_id"))
-      .localCheckpoint()
-      .write.mode("append").partitionBy("shard_id")
-      .parquet(s"$root/shards")
+    AtRest.land(s, s"$root/shards", "shard_id",
+      shardStoreRows(batch)
+        .join(s.read.parquet(s"$root/shards").select(col("doc_id")),
+          Seq("doc_id"), "left_anti"),
+      "append")
 
   /** FORGET EXECUTION — the reference's transactional delete
     * discipline (`/root/reference/src/main/java/com/thaihoc/sink/

@@ -563,31 +563,18 @@ object TimeSeriesOps {
     * flag a mid-crash rerun re-checks (the r16 ADVICE ordering). */
   private def rebuildSaxDerived(s: SparkSession, root: String,
       consts: DataFrame): Unit = {
-    // cluster-before-land on BOTH derived tables (guide §6): a
-    // partitionBy write of a multi-task frame opens tasks × buckets
-    // parquet files — measured on this path: the bands land was 16
-    // scan tasks × 16 bb_buckets = 256 files for 300 KB (the words
-    // table's 16 small files defeat split packing once
-    // bytes-per-core shrinks below openCostInBytes, so parallelism
-    // AMPLIFIES the explosion), and every serve/forget re-reads those
-    // files. One narrow exchange per land caps it at one file per
-    // bucket; at 100 TB the bucket count tracks table bytes via
-    // [[AtRest.bucketCountFor]], so one-task-per-bucket stays
-    // byte-bounded there too.
-    val words = saxWordsWith(
-        s.read.parquet(s"$root/counts")
-          .select(col("user_id"), col("day"), col("cnt")),
-        consts)
-      .withColumn("u_bucket", userBucketCol(col("user_id")))
-    words.repartition(col("u_bucket"))
-      .write.mode("overwrite").partitionBy("u_bucket")
-      .parquet(s"$root/words")
-    bandKeys(s.read.parquet(s"$root/words"))
-      .withColumn("bb_bucket", saxBandBucketCol(col("b"), col("bk")))
-      .select(col("user_id"), col("b"), col("bk"), col("bb_bucket"))
-      .repartition(col("bb_bucket"))
-      .write.mode("overwrite").partitionBy("bb_bucket")
-      .parquet(s"$root/bands")
+    AtRest.land(s, s"$root/words", "u_bucket",
+      saxWordsWith(
+          s.read.parquet(s"$root/counts")
+            .select(col("user_id"), col("day"), col("cnt")),
+          consts)
+        .withColumn("u_bucket", userBucketCol(col("user_id"))),
+      "overwrite")
+    AtRest.land(s, s"$root/bands", "bb_bucket",
+      bandKeys(s.read.parquet(s"$root/words"))
+        .withColumn("bb_bucket", saxBandBucketCol(col("b"), col("bk")))
+        .select(col("user_id"), col("b"), col("bk"), col("bb_bucket")),
+      "overwrite")
   }
 
   /** The recomputed grid origin of the WRITTEN base, as a consts-shaped
@@ -614,18 +601,10 @@ object TimeSeriesOps {
     * ir15's no-second-corpus-pass rule). */
   private[graft] def writeSaxIndex(s: SparkSession, root: String,
       c: DataFrame): Unit = {
-    // cluster-before-land (guide §6, same rationale as
-    // [[rebuildSaxDerived]]): the counts frame arrives shuffle-wide —
-    // worse, often from a persisted InMemoryRelation whose partition
-    // count AQE cannot coalesce — so the ts10 build measured 32 tasks
-    // × 16 buckets = 512 counts files for <1 MB, re-read by every
-    // serve, update and heal. One narrow exchange lands one file per
-    // bucket.
-    c.select(col("user_id"), col("day"), col("cnt"),
-        userBucketCol(col("user_id")).as("u_bucket"))
-      .repartition(col("u_bucket"))
-      .write.mode("overwrite").partitionBy("u_bucket")
-      .parquet(s"$root/counts")
+    AtRest.land(s, s"$root/counts", "u_bucket",
+      c.select(col("user_id"), col("day"), col("cnt"),
+        userBucketCol(col("user_id")).as("u_bucket")),
+      "overwrite")
     val nc = recountedOrigin(s, root)
     nc.write.mode("overwrite").parquet(s"$root/consts")
     rebuildSaxDerived(s, root, nc)
@@ -677,14 +656,10 @@ object TimeSeriesOps {
       .join(s.read.parquet(s"$root/counts")
           .select(col("user_id"), col("day")),
         Seq("user_id", "day"), "left_anti")
-      .select(col("user_id"), col("day"), col("cnt"), col("u_bucket"))
-      // cluster before the pin: the batch collapse arrives shuffle-wide
-      // and a wide append opened (tasks × buckets) writers — measured
-      // 2.4 s for a KB delta; one file per touched bucket instead
-      .repartition(col("u_bucket"))
+      // pinned for `touched` below: re-read after the append, the
+      // anti-join would filter the landed rows out against themselves
       .localCheckpoint()
-    landed.write.mode("append").partitionBy("u_bucket")
-      .parquet(s"$root/counts")
+    AtRest.land(s, s"$root/counts", "u_bucket", landed, "append")
     // maintenance bookkeeping (the d27 sanctioned-collect class): the
     // stored origin and the BATCH's reach — two O(1) scalars. The
     // shift test reads the batch's own min, NOT the landed delta's

@@ -60,6 +60,21 @@ class AtRestSpec extends SparkSpec {
     assert(r.length == 1 && r.head.getAs[Long]("id") == 200L &&
       r.head.getAs[String]("payload") == "scrambled",
       s"column order scrambled the replacement row: ${r.toSeq}")
+    // an APPEND with permuted columns lands in the files' order too:
+    // every data file, old and new, keeps (id, payload)
+    AtRest.land(spark, root, "b",
+      Seq(("late", 2, 300L)).toDF("payload", "b", "id"), "append")
+    val fileCols = new java.io.File(root).listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles())
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => spark.read.parquet(f.getPath).columns.toSeq).toSet
+    assert(fileCols == Set(Seq("id", "payload")),
+      s"the append mixed field orders into the table: $fileCols")
+    val late = spark.read.parquet(root).filter(col("id") === 300L).collect()
+    assert(spark.read.parquet(root).columns.toSeq == Seq("id", "payload", "b") &&
+      late.length == 1 && late.head.getAs[String]("payload") == "late" &&
+      late.head.getAs[Int]("b") == 2,
+      s"the permuted append read back wrong: ${late.toSeq}")
   }
 
   test("overwriteBuckets: the staged plan may READ the very buckets it replaces (the unpinned-stage trap)") {
@@ -74,6 +89,83 @@ class AtRestSpec extends SparkSpec {
     val r = rows(root).filter(_._3 == 1)
     assert(r.size == 10 && r.forall(_._2.endsWith("!")),
       s"self-read staging lost rows: ${r.take(3)}")
+  }
+
+  test("land: a wide frame lands ONE file per bucket, and the sortCols order holds within each file") {
+    import spark.implicits._
+    val root = "target/graft-index/spec-atrest-land-wide"
+    rmRoot(root)
+    val wide = (0L until 400L)
+      .map(i => (i, ((i * 7) % 13).toInt, (i % 4).toInt))
+      .toDF("id", "k", "b").repartition(8)
+    assert(wide.rdd.getNumPartitions == 8, "fixture regression: not wide")
+    AtRest.land(spark, root, "b", wide, "overwrite",
+      sortCols = Seq(col("k"), col("id")))
+    for (b <- 0 until 4) {
+      val files = new java.io.File(s"$root/b=$b").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1,
+        s"bucket $b landed ${files.length} files from an 8-task frame")
+      val inFile = spark.read.parquet(files.head.getPath)
+        .select(col("k"), col("id")).collect()
+        .map(r => (r.getInt(0), r.getLong(1)))
+      assert(inFile.length == 100 && inFile.sameElements(inFile.sortBy(identity)),
+        s"bucket $b's file lost the (k, id) sort")
+    }
+  }
+
+  test("land: a self-reading append (anti-join against its own target, no caller pin) lands exactly once; a retry is a no-op") {
+    import spark.implicits._
+    val root = "target/graft-index/spec-atrest-land-self"
+    rmRoot(root); seed(root)
+    // ids 30..49: 30..39 already stand, 40..49 are new
+    val batch = (30L until 50L).map(i => (i, s"v$i", (i % 4).toInt))
+      .toDF("id", "payload", "b")
+    def fresh = batch.join(spark.read.parquet(root).select(col("id")),
+      Seq("id"), "left_anti")
+    // the pin rule reads the plan: the anti-join scans the target (and
+    // every directory under it), a bucket-directory read scans part of
+    // it, a pinned copy scans nothing, and none scans another table
+    assert(AtRest.readsTable(spark, fresh, root) &&
+      AtRest.readsTable(spark, fresh, s"$root/b=1") &&
+      AtRest.readsTable(spark, spark.read.parquet(s"$root/b=1"), root))
+    assert(!AtRest.readsTable(spark, fresh.localCheckpoint(), root) &&
+      !AtRest.readsTable(spark, fresh, s"$root-other"))
+    AtRest.land(spark, root, "b", fresh, "append")
+    val all = (0L until 50L).map(i => (i, s"v$i", (i % 4).toInt)).toSet
+    assert(spark.read.parquet(root).count() == 50 && rows(root) == all,
+      "the self-reading append did not land each new row exactly once")
+    def files = new java.io.File(root).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).map(_.getName).filter(_.endsWith(".parquet"))
+      .toSet
+    val landed = files
+    AtRest.land(spark, root, "b", fresh, "append")
+    assert(spark.read.parquet(root).count() == 50 && rows(root) == all &&
+      files == landed, "a retried append was not a no-op")
+  }
+
+  test("guard: AtRest.land is the only bucketed parquet writer in src/main") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    // a literal bucket column (`partitionBy("b")`) — every
+    // Window.partitionBy takes col(...) — or, on a code line, any
+    // argument that is neither col(...) nor empty (a writer handed a
+    // variable)
+    val literal = raw"""partitionBy\("""".r
+    val variable = raw"""partitionBy\((?!col\(|\))""".r
+    val hits = for {
+      f <- scalaFiles(new java.io.File("src/main/scala"))
+      if f.getName != "AtRest.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .toSeq.zipWithIndex
+      code = !Seq("*", "/*", "//").exists(line.trim.startsWith)
+      if literal.findFirstIn(line).nonEmpty ||
+        (code && variable.findFirstIn(line).nonEmpty)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"partitioned writers outside AtRest.land:\n${hits.mkString("\n")}")
   }
 
   test("sweepBuckets: drops exactly the keyed rows from exactly the affected buckets; empty affected is a no-op") {
