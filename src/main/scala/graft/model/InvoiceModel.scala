@@ -8,11 +8,20 @@ import org.apache.spark.sql.types._
   */
 object InvoiceModel {
 
-  /** api_type domain: 10=CRT 11=UPD 12=DEL 13=REP 14=ADJ
-    * (`/root/reference/src/main/resources/application.properties:7-17`,
-    * `process/response/InvoiceResponseKafkaRouter.java:52-70`).
-    */
-  val ApiTypes: Seq[Int] = Seq(10, 11, 12, 13, 14)
+  /** R2 routing table, in the router's switch order: api_type →
+    * response topic, 10=CRT 11=UPD 12=DEL 13=REP 14=ADJ
+    * (`process/response/InvoiceResponseKafkaRouter.java:52-70`; topic
+    * names `resources/application.properties:13-17`). */
+  val ResponseTopics: Seq[(Int, String)] = Seq(
+    10 -> "mtt.crt.response",
+    11 -> "mtt.upd.response",
+    12 -> "mtt.del.response",
+    13 -> "mtt.rep.response",
+    14 -> "mtt.adj.response")
+
+  /** api_type domain (T6): the routing table's keys — a type with no
+    * topic is out of domain (the router's default throw, `:68-69`). */
+  val ApiTypes: Seq[Int] = ResponseTopics.map(_._1)
 
   /** group_id buckets = group.id.max.value(4) + 1
     * (`application.properties:42`, `job/InvoiceRequest.java:43`). */
@@ -48,7 +57,9 @@ object InvoiceModel {
     StructField("inv_pack", ArrayType(packElementSchema))))
 
   /** `async_inv_in` staging table — 18 insert columns + auto-increment id
-    * (`job/InvoiceRequest.java:111-116`, `source/AsyncInvInSource.java:66-79`). */
+    * (`job/InvoiceRequest.java:111-116`, `source/AsyncInvInSource.java:66-79`).
+    * `RequestPipeline.run` writes exactly these fields minus `id`. The
+    * other tables' shapes are documented in FIXTURES.md §3-6. */
   val asyncInvInSchema: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("tax_schema", StringType),
@@ -69,65 +80,4 @@ object InvoiceModel {
     StructField("sid", StringType),
     StructField("syncid", StringType),
     StructField("process_kafka", StringType)))
-
-  /** `async_inv_out` (`source/AsyncInvOutSource.java:64-79`). */
-  val asyncInvOutSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("tax_schema", StringType),
-    StructField("gdt_res", StringType),
-    StructField("retry", ByteType),
-    StructField("state", ByteType),
-    StructField("group_id", ByteType),
-    StructField("created_date", TimestampType),
-    StructField("updated_date", TimestampType),
-    StructField("sid", StringType),
-    StructField("syncid", StringType),
-    StructField("res_type", ByteType),
-    StructField("process_kafka", StringType),
-    StructField("api_type", ByteType)))
-
-  /** `invoice_retry` state machine (`model/retry/InvoiceRetryRecord.java:5-19`,
-    * `sink/InvoiceRetrySink.java:33-42`). `tag` is in-flight only. */
-  val invoiceRetrySchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("payload", StringType),
-    StructField("error_message", StringType),
-    StructField("error_code", StringType),
-    StructField("retry_count", ByteType),
-    StructField("state", StringType),
-    StructField("sid", StringType),
-    StructField("syncid", StringType),
-    StructField("job", StringType),
-    StructField("next_retry_time", TimestampType),
-    StructField("created_at", TimestampType),
-    StructField("updated_at", TimestampType)))
-
-  /** `invoice_error_log` dead letters (`model/retry/InvoiceErrorLogRecord.java:5-14`). */
-  val errorLogSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("payload", StringType),
-    StructField("error_message", StringType),
-    StructField("error_code", StringType),
-    StructField("attempt", ByteType),
-    StructField("sid", StringType),
-    StructField("syncid", StringType),
-    StructField("created_at", TimestampType)))
-
-  /** `async_inv_succ_log` (`model/response/AsyncInvSuccLogRecord.java:5-22`,
-    * `sink/TransactionalLogAndDeleteSink.java:66-70`). */
-  val succLogSchema: StructType = StructType(Seq(
-    StructField("tax_schema", StringType),
-    StructField("api_type", ByteType),
-    StructField("res_type", ByteType),
-    StructField("fpt_einvoice_res_code", StringType),
-    StructField("fpt_einvoice_res_msg", StringType),
-    StructField("retry", ByteType),
-    StructField("group_id", ByteType),
-    StructField("created_date", TimestampType),
-    StructField("updated_date", TimestampType),
-    StructField("callback_res_code", StringType),
-    StructField("callback_res_msg", StringType),
-    StructField("sid", StringType),
-    StructField("syncid", StringType),
-    StructField("gdt_res", StringType)))
 }

@@ -197,7 +197,8 @@ object LayoutOps {
       .agg(sum(col("n_rows")).as("n_rows"),
         min(col("u_min")).as("u_min"), max(col("u_max")).as("u_max"),
         min(col("day_min")).as("day_min"), max(col("day_max")).as("day_max"))
-      .localCheckpoint()
+      // the pinned merge is KB-scale: land it as ONE sidecar file
+      .localCheckpoint().coalesce(1)
       .write.mode("overwrite").parquet(s"$root/stats")
   }
 
@@ -273,7 +274,8 @@ object LayoutOps {
       .unionByName(cellAgg(s.read.parquet(s"$root/rows")
         .filter(col("cell").isin(cells: _*))
         .select(col("u"), col("day"), col("cell"))))
-      .localCheckpoint()
+      // the pinned merge is KB-scale: land it as ONE sidecar file
+      .localCheckpoint().coalesce(1)
       .write.mode("overwrite").parquet(s"$root/stats")
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.InvoiceModel.GroupIdBuckets
 import graft.sources.Tables
 
 /** Request-ingestion operators (reference job 1).
@@ -87,9 +88,30 @@ object RequestOps {
           lit(null).cast("string").as("body")).as("inv")))
   }
 
-  /** Extraction with nested fallback, shared by validate/rejects.
-    * Mirrors the probe order of `InvoiceRequestTransformer.java:57-96`:
-    * top-level field first, then `inv.<field>`.
+  /** T3 nested fallback over a parsed element `e`
+    * (`InvoiceRequestTransformer.java:57-96`): the top-level field
+    * first, then `inv.<field>`. `RequestPipeline.transform` reads its
+    * packets through the same chain. */
+  private[graft] def fallback(field: String): Column =
+    coalesce(col(s"e.$field"), col(s"e.inv.$field"))
+
+  /** T3 reject taxonomy: the first missing required field, in the
+    * reference's throw order (stax `:65` → sid `:78` → api_type
+    * `:95`); null when the element is valid. Shared by [[rejectsCore]]
+    * and `RequestPipeline.transform`. */
+  private[graft] def rejectReason(stax: Column, sid: Column, apiType: Column): Column =
+    when(stax.isNull, lit("stax is null"))
+      .when(sid.isNull, lit("sid is null"))
+      .when(apiType.isNull, lit("api_type is null"))
+
+  /** T4 `group_id = pos % groupIdBuckets`: the round-robin bucket from
+    * the element's packet position (`InvoiceRequestTransformer.java:101-102`).
+    * Shared by [[derive]] and `RequestPipeline.transform`. */
+  private[graft] def groupId(pos: Column): Column =
+    pmod(pos, lit(GroupIdBuckets)).cast("tinyint")
+
+  /** Extraction with nested fallback ([[fallback]]), shared by
+    * validate/rejects.
     *
     * The fallback coalesces are struct-field accesses over `e` —
     * plain column arithmetic after `SimplifyExtractValueOps`, so the
@@ -103,9 +125,9 @@ object RequestOps {
     withElementJson(Tables.events(s, dir))
       .select(
         col("event_id"),
-        coalesce(col("e.stax"), col("e.inv.stax")).as("stax"),
-        coalesce(col("e.sid"), col("e.inv.sid")).as("sid"),
-        coalesce(col("e.syncid"), col("e.inv.syncid")).as("syncid"),
+        fallback("stax").as("stax"),
+        fallback("sid").as("sid"),
+        fallback("syncid").as("syncid"),
         col("e.api_type").as("api_type"))
 
   /** T3 (valid branch) — field extraction with nested fallback +
@@ -125,9 +147,8 @@ object RequestOps {
         col("api_type"))
       .transform(Common.presented(_, col("event_id")))
 
-  /** T3 (reject branch) — the element-level rejection taxonomy routed to
-    * the retry queue. Error messages and their precedence mirror the
-    * reference's throw order (stax `:65` → sid `:78` → api_type `:95`). */
+  /** T3 (reject branch) — the element-level rejection taxonomy
+    * ([[rejectReason]]) routed to the retry queue. */
   def rejects(s: SparkSession, dir: String): DataFrame =
     Common.presented(rejectsCore(s, dir), col("event_id"))
 
@@ -137,20 +158,16 @@ object RequestOps {
   def rejectsCore(s: SparkSession, dir: String): DataFrame =
     extracted(s, dir)
       .withColumn("error_message",
-        when(col("stax").isNull, lit("stax is null"))
-          .when(col("sid").isNull, lit("sid is null"))
-          .when(col("api_type").isNull, lit("api_type is null")))
+        rejectReason(col("stax"), col("sid"), col("api_type")))
       .filter(col("error_message").isNotNull)
       .select(col("event_id"), col("error_message"))
 
-  /** T4 — derived columns (`InvoiceRequestTransformer.java:101-102`):
-    * `group_id = pos % groupIdBuckets` round-robin bucket from the packet
-    * position. (`created_date = now()` is applied at sink time and is
-    * excluded from oracle-compared output.) */
+  /** T4 — derived columns: [[groupId]] from the packet position.
+    * (`created_date = now()` is applied at sink time and is excluded
+    * from oracle-compared output.) */
   def derive(s: SparkSession, dir: String): DataFrame =
     explode(s, dir)
-      .withColumn("group_id",
-        pmod(col("pos"), lit(graft.model.InvoiceModel.GroupIdBuckets)).cast("tinyint"))
+      .withColumn("group_id", groupId(col("pos")))
       .select(col("user_id"), col("pos"), col("event_id"), col("group_id"))
       .transform(Common.presented(_, col("user_id"), col("pos")))
 

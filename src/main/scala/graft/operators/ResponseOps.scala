@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.InvoiceModel.{ApiTypes, ResponseTopics}
 import graft.sources.Tables
 
 /** Response-pipeline operators (reference job 2, SURVEY §2 T6-T9, G1-G4,
@@ -113,15 +114,38 @@ object ResponseOps {
       .select(col("id"), batchKey.as("batch_key"))
       .transform(Common.presented(_, col("id")))
 
-  /** T6 — api_type domain check {10..14}
+  /** T6 — the api_type domain predicate {10..14}
     * (`InvoiceResponseKafkaRouter.java:52-70` default-throw,
-    * `InvoiceResponseBatchProcessor.java:285-287`). */
+    * `InvoiceResponseBatchProcessor.java:285-287`). Shared by every
+    * response operator, R4 and `ResponsePipeline.packets`. */
+  private[graft] def inDomain(apiType: Column): Column =
+    apiType.isin(ApiTypes: _*)
+
+  /** R2 — the api_type → response-topic column: one `CASE WHEN` chain
+    * over [[graft.model.InvoiceModel.ResponseTopics]] in switch order,
+    * null outside the domain. Shared by [[topicRoute]] and
+    * `ResponsePipeline.packets`. */
+  private[graft] def topic(apiType: Column): Column = {
+    val (k0, t0) = ResponseTopics.head
+    ResponseTopics.tail.foldLeft(when(apiType === k0, lit(t0))) {
+      case (chain, (k, t)) => chain.when(apiType === k, lit(t))
+    }
+  }
+
+  /** T6 — api_type domain check over the G1 key. */
   def apiDomain(s: SparkSession, dir: String): DataFrame =
     staging(s, dir)
       .select(col("id"), batchKey.as("batch_key"),
-        when(batchKey.isin(graft.model.InvoiceModel.ApiTypes: _*),
-          lit("valid")).otherwise(lit("rejected")).as("domain_status"))
+        when(inDomain(batchKey), lit("valid")).otherwise(lit("rejected"))
+          .as("domain_status"))
       .transform(Common.presented(_, col("id")))
+
+  /** Staging rows that pass T6, keyed by their G1 `batch_key` — the
+    * input every downstream response operator starts from. */
+  private def inDomainStaging(s: SparkSession, dir: String): DataFrame =
+    staging(s, dir)
+      .withColumn("batch_key", batchKey)
+      .filter(inDomain(col("batch_key")))
 
   /** The T7 sniff expression over the parsed `pj` struct, shared with
     * RetryOps.responseRetry so the probe set can never diverge between
@@ -185,9 +209,7 @@ object ResponseOps {
     * (`InvoiceResponseBatchProcessor.java:130-140`). */
   private def bucketed(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("batch_key")).orderBy(col("id"))
-    staging(s, dir)
-      .withColumn("batch_key", batchKey)
-      .filter(col("batch_key").isin(graft.model.InvoiceModel.ApiTypes: _*))
+    inDomainStaging(s, dir)
       .withColumn("batch_id",
         floor((row_number().over(w) - 1) / BatchSize).cast("int"))
   }
@@ -216,9 +238,7 @@ object ResponseOps {
     * (murmur3 `hash()` is not). */
   def saltedBuckets(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.md5Long
-    val salted = staging(s, dir)
-      .withColumn("batch_key", batchKey)
-      .filter(col("batch_key").isin(graft.model.InvoiceModel.ApiTypes: _*))
+    val salted = inDomainStaging(s, dir)
       .withColumn("salt", (md5Long(col("sid")) % SaltBuckets).cast("int"))
     val w = Window.partitionBy(col("batch_key"), col("salt")).orderBy(col("id"))
     salted
@@ -280,20 +300,12 @@ object ResponseOps {
         Map("ignoreNullFields" -> "false")).as("packet_json"))
       .transform(Common.presented(_, col("batch_key"), col("batch_id")))
 
-  /** R2 — api_type → response-topic routing
-    * (`InvoiceResponseKafkaRouter.java:52-70`; topic names
-    * `application.properties:13-17`). One Kafka write with a computed
-    * `topic` column replaces the reference's 5 sinks — Spark's Kafka
-    * sink routes per row. */
+  /** R2 — api_type → response-topic routing ([[topic]]). One Kafka
+    * write with a computed `topic` column replaces the reference's 5
+    * sinks — Spark's Kafka sink routes per row. */
   def topicRoute(s: SparkSession, dir: String): DataFrame =
     bucketed(s, dir)
-      .select(col("id"), col("batch_key"),
-        when(col("batch_key") === 10, lit("mtt.crt.response"))
-          .when(col("batch_key") === 11, lit("mtt.upd.response"))
-          .when(col("batch_key") === 12, lit("mtt.del.response"))
-          .when(col("batch_key") === 13, lit("mtt.rep.response"))
-          .when(col("batch_key") === 14, lit("mtt.adj.response"))
-          .as("topic"))
+      .select(col("id"), col("batch_key"), topic(col("batch_key")).as("topic"))
       .transform(Common.presented(_, col("id")))
 
   /** T9 — staging row → success-log projection
@@ -303,10 +315,8 @@ object ResponseOps {
     * (`created_date = now()` at `:143` and the always-null
     * `updated_date` excluded from oracle-compared output.) */
   def logProject(s: SparkSession, dir: String): DataFrame = {
-    val st = staging(s, dir).withColumn("batch_key", batchKey)
-      .filter(col("batch_key").isin(graft.model.InvoiceModel.ApiTypes: _*))
     val isIn = col("kind") === "InvIn"
-    st.select(
+    inDomainStaging(s, dir).select(
         col("id"),
         col("tax_schema"),
         col("batch_key").as("api_type"),
@@ -329,9 +339,7 @@ object ResponseOps {
     * anti-join — staging rows whose id was NOT processed remain. */
   def deleteRemaining(s: SparkSession, dir: String): DataFrame = {
     val st = staging(s, dir).withColumn("batch_key", batchKey)
-    val processed = st.filter(
-      col("batch_key").isin(graft.model.InvoiceModel.ApiTypes: _*))
-      .select(col("id"))
+    val processed = st.filter(inDomain(col("batch_key"))).select(col("id"))
     st.join(processed, Seq("id"), "left_anti")
       .select(col("id"), col("batch_key"))
       .transform(Common.presented(_, col("id")))

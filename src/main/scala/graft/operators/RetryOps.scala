@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.InvoiceModel.{ApiTypes, MaxRetries, RetryBaseSeconds}
+import graft.model.InvoiceModel.{MaxRetries, RetryBaseSeconds}
 
 /** The durable retry/dead-letter state machine (SURVEY §2.2 K2, §2.8
   * R1/R4, §3.3) — the reference's most behaviorally distinctive
@@ -103,7 +103,7 @@ object RetryOps {
     val payloadApi = coalesce(col("pj.api_type"), lit(0))
     val errorMsg = when(col("retry_count") > MaxRetries, lit(null).cast("string"))
       .when(sniffed.isNull, lit("Unknown record type"))
-      .when(!payloadApi.isin(ApiTypes: _*),
+      .when(!ResponseOps.inDomain(payloadApi),
         concat(lit("Unknown api_type: "), payloadApi))
     val failed = errorMsg.isNotNull
     st.select(

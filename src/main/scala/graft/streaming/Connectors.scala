@@ -136,8 +136,12 @@ object Connectors {
     }
   }
 
-  /** [[kafkaStringSource]] bound from a parsed [[PipelineConf]]: one
-    * subscription over all request topics, SASL + offsets applied. */
+  /** S1 — Kafka value-as-string source over the request topics
+    * (`util/FlinkJobUtils.java:28-62`), bound from a parsed
+    * [[PipelineConf]]: SASL and starting offsets (the reference's
+    * EARLIEST/LATEST/COMMITTED modes) applied. One subscription covers
+    * all 5 request topics; `topic` survives as a column (the Spark-side
+    * improvement over 5 separate sources, SURVEY §2.1 S1). */
   def kafkaRequestSource(spark: SparkSession, conf: PipelineConf): DataFrame = {
     // topics parse as optional (a response-only deployment omits them),
     // but SUBSCRIBING to none is always a config error — fail with the
@@ -152,21 +156,6 @@ object Connectors {
       .load()
       .select(col("value").cast("string").as("value"), col("topic"))
   }
-
-  /** S1 — Kafka value-as-string source over n topics
-    * (`util/FlinkJobUtils.java:28-62`; starting offsets map to the
-    * reference's EARLIEST/LATEST/COMMITTED modes). One subscription
-    * covers all 5 request topics; `topic` survives as a column (the
-    * Spark-side improvement over 5 separate sources, SURVEY §2.1 S1). */
-  def kafkaStringSource(spark: SparkSession, bootstrap: String,
-      topics: Seq[String], startingOffsets: String = "earliest"): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topics.mkString(","))
-      .option("startingOffsets", startingOffsets)
-      .load()
-      .select(col("value").cast("string").as("value"), col("topic"))
 
   /** K4 — Kafka sink with per-row topic routing: ONE sink with a `topic`
     * column replaces the reference's 5 hand-wired producers

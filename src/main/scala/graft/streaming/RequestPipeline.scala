@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model.InvoiceModel
+import graft.operators.RequestOps.{fallback, groupId, rejectReason}
 
 /** Streaming restatement of reference job 1 (SURVEY §3.1,
   * `/root/reference/src/main/java/com/thaihoc/job/InvoiceRequest.java:25-162`):
@@ -16,7 +17,9 @@ import graft.model.InvoiceModel
   * generator covers the reference's UDTF-style flatMap,
   * `InvoiceRequestTransformer.java:34-53`); element-level failures
   * become rows in the retry output instead of poisoning the batch,
-  * mirroring the element-scoped try/catch at `:42-49`. The `foreachBatch`
+  * mirroring the element-scoped try/catch at `:42-49`. The T3 fallback,
+  * the reject taxonomy and T4's `group_id` are the oracle-checked
+  * definitions in `RequestOps`. The `foreachBatch`
   * multi-write replaces Flink side-output tags: one cached micro-batch,
   * two filtered writes — in production the writers are
   * `Connectors.jdbcBatchAppend` (K1) and the K2 DML apply; the harness
@@ -40,24 +43,29 @@ object RequestPipeline {
           .as(Seq("pos", "e")))
       .select(
         col("pos"),
-        coalesce(col("e.stax"), col("e.inv.stax")).as("stax"),
-        coalesce(col("e.sid"), col("e.inv.sid")).as("sid"),
-        coalesce(col("e.syncid"), col("e.inv.syncid"), uuid()).as("syncid"),
+        fallback("stax").as("stax"),
+        fallback("sid").as("sid"),
+        coalesce(fallback("syncid"), uuid()).as("syncid"),
         col("e.api_type").cast("tinyint").as("api_type"),
         to_json(col("e")).as("inv"),
-        pmod(col("pos"), lit(InvoiceModel.GroupIdBuckets)).cast("tinyint").as("group_id"),
-        when(coalesce(col("e.stax"), col("e.inv.stax")).isNull, "stax is null")
-          .when(coalesce(col("e.sid"), col("e.inv.sid")).isNull, "sid is null")
-          .when(col("e.api_type").isNull, "api_type is null")
+        groupId(col("pos")).as("group_id"),
+        rejectReason(fallback("stax"), fallback("sid"), col("e.api_type"))
           .as("error_message"))
 
+  /** The K1 staging row: [[InvoiceModel.asyncInvInSchema]] minus the
+    * auto-increment `id`, in its order. Each supplied column binds by
+    * name and casts to its declared type; every other field is a null
+    * of that type — the reference's 18-column binding
+    * (`job/InvoiceRequest.java:111-143`: `tax_schema` IS the extracted
+    * stax, response/callback columns null at ingest, retry 0, state 0). */
+  private def stagingRow(bound: Map[String, Column]): Seq[Column] =
+    InvoiceModel.asyncInvInSchema.fields.toSeq.filter(_.name != "id").map(f =>
+      bound.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name))
+
   /** Wire the transform to a micro-batched dual sink: valid rows append
-    * to `<outDir>/async_inv_in` (K1) with the reference's full 18-column
-    * binding (`job/InvoiceRequest.java:111-143`: `tax_schema` IS the
-    * extracted stax, response/callback columns null at ingest, retry 0,
-    * state 0), rejects to `<outDir>/invoice_retry` (K2 CREATE branch,
-    * retry_count 0 / PENDING per
-    * `InvoiceRequestTransformer.java:158-168`). */
+    * to `<outDir>/async_inv_in` (K1, [[stagingRow]]), rejects to
+    * `<outDir>/invoice_retry` (K2 CREATE branch, retry_count 0 /
+    * PENDING per `InvoiceRequestTransformer.java:158-168`). */
   def run(packets: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =
     transform(packets).writeStream
       .option("checkpointLocation", checkpointDir)
@@ -65,24 +73,16 @@ object RequestPipeline {
         val b = batch.persist()
         try {
           b.filter(col("error_message").isNull)
-            .select(
-              col("stax").as("tax_schema"),
-              col("inv"),
-              col("api_type"),
-              lit(null).cast("tinyint").as("res_type"),
-              lit(null).cast("string").as("fpt_einvoice_res_code"),
-              lit(null).cast("string").as("fpt_einvoice_res_msg"),
-              lit(null).cast("string").as("fpt_einvoice_res_json"),
-              lit(0).cast("tinyint").as("retry"),
-              lit(0).cast("tinyint").as("state"),
-              col("group_id"),
-              current_timestamp().as("created_date"),
-              lit(null).cast("timestamp").as("updated_date"),
-              lit(null).cast("string").as("callback_res_code"),
-              lit(null).cast("string").as("callback_res_msg"),
-              lit(null).cast("string").as("callback_res_json"),
-              col("sid"), col("syncid"),
-              lit(null).cast("string").as("process_kafka"))
+            .select(stagingRow(Map(
+              "tax_schema" -> col("stax"),
+              "inv" -> col("inv"),
+              "api_type" -> col("api_type"),
+              "retry" -> lit(0),
+              "state" -> lit(0),
+              "group_id" -> col("group_id"),
+              "created_date" -> current_timestamp(),
+              "sid" -> col("sid"),
+              "syncid" -> col("syncid"))): _*)
             .write.mode("append").parquet(s"$outDir/async_inv_in")
           b.filter(col("error_message").isNotNull)
             .select(col("inv").as("payload"), col("error_message"),

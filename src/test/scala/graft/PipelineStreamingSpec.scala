@@ -3,6 +3,9 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.model.InvoiceModel
+import graft.operators.RequestOps
+import graft.sources.Tables
 import graft.streaming.{RequestPipeline, ResponsePipeline}
 import graft.streaming.MicroBatcher.Rec
 
@@ -55,6 +58,45 @@ class PipelineStreamingSpec extends SparkSpec {
       assert(retry.filter(col("state") =!= "PENDING" ||
         col("retry_count") =!= 0).count() === 0)
     } finally q.stop()
+  }
+
+  test("request pipeline == t3: one-element fixture packets stage and reject exactly as t3_validate / t3_rejects") {
+    // every fixture element, as RequestOps builds it for the oracle-
+    // checked queries, sent through the streaming transform on its own
+    val packets = RequestOps.withElementJson(Tables.events(spark, Sf))
+      .select(concat(lit("""{"inv_pack":["""), col("j"), lit("]}")).as("value"))
+    val out = RequestPipeline.transform(packets)
+    def reasonCounts(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("error_message").isNotNull).groupBy("error_message").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val expected = reasonCounts(RequestOps.rejects(spark, Sf))
+    assert(expected.keySet === Set("stax is null", "sid is null", "api_type is null"),
+      "the fixture no longer exercises every reject reason")
+    assert(reasonCounts(out) === expected)
+    val staged = out.filter(col("error_message").isNull)
+      .select(col("stax"), col("sid"), col("api_type").cast("int"))
+    val valid = RequestOps.validate(spark, Sf).select("stax", "sid", "api_type")
+    assert(valid.count() > 0)
+    assert(staged.count() === valid.count())
+    assert(staged.exceptAll(valid).isEmpty && valid.exceptAll(staged).isEmpty,
+      "staged (stax, sid, api_type) rows differ from t3_validate's")
+  }
+
+  test("request pipeline: a written async_inv_in has the declared staging schema minus id") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[String]
+    val out = tmp("k1_schema_out")
+    val q = RequestPipeline.run(in.toDF(), out, tmp("k1_schema_ck"))
+    try {
+      in.addData(pk("""{"sid":"S1","stax":"T1","api_type":10}"""))
+      q.processAllAvailable()
+    } finally q.stop()
+    val written = spark.read.parquet(s"$out/async_inv_in").schema
+      .map(f => f.name -> f.dataType)
+    val declared = InvoiceModel.asyncInvInSchema.filter(_.name != "id")
+      .map(f => f.name -> f.dataType)
+    assert(written === declared)
   }
 
   test("S2 incremental poll: advancing the id watermark never re-reads a row") {
