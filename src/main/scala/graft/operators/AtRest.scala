@@ -116,6 +116,25 @@ object AtRest {
     } finally { pool.shutdown(); () }
   }
 
+  /** Doc-bucket count of the per-doc stats tables (the postings
+    * index's `doclen`, the shingle index's `docstats`). Like the term
+    * and shingle bucket counts, 16 is harness sizing — the targeting
+    * is correct at any count. */
+  val DocBuckets = 16
+
+  /** THE doc-bucket rule of every per-doc stats table: a pure function
+    * of doc_id, so a forget request's target partitions come from the
+    * request's own ids (the c6 shard rule applied to index metadata),
+    * and an append lands each doc where a later forget looks for it. */
+  private[graft] def docBucketCol: Column =
+    pmod(col("doc_id"), lit(DocBuckets.toLong)).cast("int")
+
+  /** The doc buckets a request's `doc_id`s fall in — a per-doc stats
+    * forget's target list, O(DocBuckets) driver metadata. */
+  private[graft] def docBucketsOf(ids: DataFrame): Seq[Int] =
+    ids.select(docBucketCol).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
+
   /** The bucket directories of a partitioned table, lazily, as
     * (bucket, directory) — empty for a missing table directory. */
   private def bucketDirs(s: SparkSession, table: String,

@@ -1238,35 +1238,25 @@ object DedupOps {
     *   - `docstats/` — (doc_id, n_shingles): the per-doc totals, so a
     *     serve never touches text.
     * Dictionary and stats derive from the WRITTEN postings (one read
-    * of the new files — ir15's no-second-corpus-pass rule). */
-  /** The forgettable docstats layout's partition attribute (d31) —
-    * ir22's bucketDoclen convention on this family: per-doc stats
-    * partition by doc bucket so a forget request targets them
-    * directly instead of rewriting a doc-count-bounded table. */
-  private[graft] def docStatsBucketCol: Column =
-    pmod(col("doc_id"), lit(16L)).cast("int")
-
-  /** Build the shingle index. `bucketStats` picks the docstats
-    * layout: `true` = the forgettable doc-bucketed layout (d31),
-    * `false` = the legacy flat layout (d22/d23, append-only). No
-    * default — a caller states the layout, and must pass the SAME
-    * choice to [[forgetShingleIndex]]'s `bucketedStats` (the r17
-    * ADVICE foot-gun: asymmetric defaults let a default-paired
-    * build/forget target a partition column the layout lacks). */
+    * of the new files — ir15's no-second-corpus-pass rule). The stats
+    * partition by doc bucket ([[AtRest.docBucketCol]], as `ds_bucket`),
+    * so a forget request targets them directly and an append lands
+    * where a forget looks. */
   private[graft] def writeShingleIndex(s: SparkSession, root: String,
-      docs: DataFrame, bucketStats: Boolean): Unit = {
+      docs: DataFrame): Unit = {
     AtRest.land(s, s"$root/postings", "sh_bucket", shinglePostings(docs),
       "overwrite")
     val p = s.read.parquet(s"$root/postings")
     AtRest.land(s, s"$root/shset", "sh_bucket",
       p.select(col("sh_bucket"), col("h")).distinct(), "overwrite")
-    val stats = p.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    if (bucketStats)
-      AtRest.land(s, s"$root/docstats", "ds_bucket",
-        stats.withColumn("ds_bucket", docStatsBucketCol), "overwrite")
-    else
-      stats.write.mode("overwrite").parquet(s"$root/docstats")
+    AtRest.land(s, s"$root/docstats", "ds_bucket", docStatsOf(p),
+      "overwrite")
   }
+
+  /** (doc_id, n_shingles, ds_bucket) over a postings frame. */
+  private def docStatsOf(p: DataFrame): DataFrame =
+    p.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
+      .withColumn("ds_bucket", AtRest.docBucketCol)
 
   /** APPEND: fold a fresh batch into the standing index — exactly-once
     * under retry (ir16's discipline: every new-row frame anti-joins
@@ -1296,11 +1286,11 @@ object DedupOps {
         .join(s.read.parquet(s"$root/shset").select(col("h")),
           Seq("h"), "left_anti"),
       "append")
-    full.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-      .join(s.read.parquet(s"$root/docstats").select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-      .write.mode("append").parquet(s"$root/docstats")
+    AtRest.land(s, s"$root/docstats", "ds_bucket",
+      docStatsOf(full)
+        .join(s.read.parquet(s"$root/docstats").select(col("doc_id")),
+          Seq("doc_id"), "left_anti"),
+      "append")
   }
 
   /** FORGET from the shingle index (d31) — ir22's request-content
@@ -1312,15 +1302,12 @@ object DedupOps {
     * touched buckets' dictionary recounts from the swept postings
     * (the ir22 blockmeta discipline; an additive dictionary would
     * keep d12's membership audit flagging content that no longer
-    * exists). `docstats` in the forgettable layout is DOC-BUCKETED
-    * (ir22's bucketDoclen convention), so the request's ids target it
-    * directly — request-sized IO, where the d22/d23 in-place layout
-    * would rewrite a doc-count-bounded table; `bucketedStats = false`
-    * keeps the anti-join rewrite for that legacy layout. Idempotent:
-    * a rerun re-derives the same targets and re-stages the same
-    * survivors. */
+    * exists). `docstats` is DOC-BUCKETED (ir22's doclen layout), so
+    * the request's ids target it directly — request-sized IO, never a
+    * doc-count-bounded rewrite. Idempotent: a rerun re-derives the
+    * same targets and re-stages the same survivors. */
   private[graft] def forgetShingleIndex(s: SparkSession, root: String,
-      deleted: DataFrame, bucketedStats: Boolean): Unit = {
+      deleted: DataFrame): Unit = {
     val delP = shinglePostings(deleted)
       .select(col("doc_id"), col("sh_bucket")).distinct()
       .localCheckpoint()
@@ -1335,18 +1322,9 @@ object DedupOps {
           .filter(col("sh_bucket").isin(tBuckets: _*))
           .select(col("sh_bucket"), col("h")).distinct())
     }
-    if (bucketedStats) {
-      val dBuckets = ids.select(docStatsBucketCol.as("b")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      AtRest.sweepBuckets(s, s"$root/docstats", "ds_bucket", dBuckets,
-        ids, Seq("doc_id"))
-      ()
-    } else {
-      s.read.parquet(s"$root/docstats")
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-        .write.mode("overwrite").parquet(s"$root/docstats")
-    }
+    AtRest.sweepBuckets(s, s"$root/docstats", "ds_bucket",
+      AtRest.docBucketsOf(ids), ids, Seq("doc_id"))
+    ()
   }
 
   /** D31 — FORGET EXECUTED AGAINST THE AT-REST SHINGLE INDEX: build
@@ -1360,19 +1338,17 @@ object DedupOps {
     * stats.
     *
     * 100 TB plan: a forget's IO is the deleted docs' shingle-hash
-    * buckets plus their doc-stat buckets (the forgettable layout
-    * doc-buckets the stats — ir22's bucketDoclen convention) —
-    * request-content-bounded end to end; the probe's serve stays
-    * DPP-pruned to probe buckets. */
+    * buckets plus their doc-stat buckets (the stats are
+    * doc-bucketed, like ir22's doclen) — request-content-bounded end
+    * to end; the probe's serve stays DPP-pruned to probe buckets. */
   def decontamForget(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ShingleExpressions.hashedShingleSet
     val root = SimilarityOps.indexRoot(s, dir) + "/shindex31"
     val docs = Tables.documents(s, dir)
     val train = docs.filter(col("doc_id") % EvalMod =!= 0)
-    writeShingleIndex(s, root, train, bucketStats = true)
+    writeShingleIndex(s, root, train)
     forgetShingleIndex(s, root, train.filter(
-      col("doc_id") % TextOps.ForgetMod === TextOps.ForgetRem),
-      bucketedStats = true)
+      col("doc_id") % TextOps.ForgetMod === TextOps.ForgetRem))
     val probe = docs.filter(col("doc_id") % EvalMod === 0)
       .select(explode(hashedShingleSet(tokens(col("text")), DecontamK))
         .as("p_h"))
@@ -1421,8 +1397,7 @@ object DedupOps {
     import graft.functions.ShingleExpressions.hashedShingleSet
     val root = SimilarityOps.indexRoot(s, dir) + "/shindex22"
     val docs = Tables.documents(s, dir)
-    writeShingleIndex(s, root, docs.filter(col("doc_id") % EvalMod =!= 0),
-      bucketStats = false)
+    writeShingleIndex(s, root, docs.filter(col("doc_id") % EvalMod =!= 0))
     val probe = docs.filter(col("doc_id") % EvalMod === 0)
       .select(explode(hashedShingleSet(tokens(col("text")), DecontamK))
         .as("p_h"))
@@ -1455,7 +1430,7 @@ object DedupOps {
     CacheScope.persist(tagged) // three consumers: build, append, probe
     val train = tagged.filter(col("split") === "train")
     writeShingleIndex(s, root,
-      train.filter(col("doc_id") % IncomingMod =!= 0), bucketStats = false)
+      train.filter(col("doc_id") % IncomingMod =!= 0))
     appendShingleIndex(s, root,
       train.filter(col("doc_id") % IncomingMod === 0))
     tagged.filter(col("split") =!= "train")
@@ -1573,18 +1548,19 @@ object DedupOps {
     // touches the batch's hash buckets, so only THOSE buckets are
     // read, merged by addition and replaced via dynamic partition
     // overwrite (a merged bucket is never empty: the delta
-    // contributed to it — no directory-drop guard needed)
+    // contributed to it — a plain dynamic overwrite, no drop guard)
     val deltaDf = newRows.groupBy(col("h_bucket"), col("h"))
       .agg(count(lit(1)).as("nd")).localCheckpoint()
     val dfBuckets = deltaDf.select(col("h_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (dfBuckets.nonEmpty) {
-      AtRest.overwriteBuckets(s, s"$root/wdf", "h_bucket", dfBuckets,
+      AtRest.land(s, s"$root/wdf", "h_bucket",
         s.read.parquet(s"$root/wdf")
           .filter(col("h_bucket").isin(dfBuckets: _*))
           .unionByName(deltaDf)
           .groupBy(col("h_bucket"), col("h"))
-          .agg(sum(col("nd")).as("nd")))
+          .agg(sum(col("nd")).as("nd")),
+        "dynamic")
     }
     // the merged over-cap set: tiny by the |fp|/Cap bound — its rows
     // broadcast into the eviction anti-join and the append filter

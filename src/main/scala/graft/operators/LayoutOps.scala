@@ -136,9 +136,10 @@ object LayoutOps {
 
   /** LY2 — the READ half of the z-order layout (ly1 audits the write):
     * a rectangle query on (user, day) served from the at-rest
-    * cell-partitioned table. BUILD writes [[zCoords]] (+ event_id)
-    * partitioned by cell — the clustered layout a z-order writer
-    * emits; SERVE plans the rectangle driver-side with
+    * cell-partitioned table. BUILD is [[writeZorder]] — [[zCoords]]
+    * (+ event_id) partitioned by cell, the clustered layout a z-order
+    * writer emits, plus its stats sidecar; SERVE is [[rectangleRead]],
+    * which plans the rectangle driver-side with
     * [[cellsForRange]] (O(rectangle cells), independent of table size)
     * into a STATIC `cell IN (...)` partition predicate — directory
     * pruning on EITHER dimension, no file of a non-intersecting cell
@@ -156,27 +157,17 @@ object LayoutOps {
     * sort when filtering on the second dimension. */
   def zorderRangeRead(s: SparkSession, dir: String): DataFrame = {
     val root = SimilarityOps.indexRoot(s, dir) + "/zorder"
-    // partition-column values read back as int (partition
-    // inference); cell < 2^22 by construction so the narrowing is
-    // lossless and the IN probe stays on the bare attribute
-    AtRest.land(s, root, "cell",
-      zCoords(Tables.events(s, dir), col("event_id"))
-        .withColumn("cell", col("cell").cast("int")),
-      "overwrite")
-    val cells = cellsForRange(RectU0, RectU1, RectD0, RectD1)
-    s.read.parquet(root)
-      .filter(col("cell").isin(cells.map(_.toInt): _*) &&
-        col("u").between(RectU0, RectU1) &&
-        col("day").between(RectD0, RectD1))
-      .select(col("event_id"), col("u"), col("day"),
-        col("cell").cast("long").as("cell"))
-      .transform(Common.presented(_, col("event_id")))
+    writeZorder(s, root, Tables.events(s, dir))
+    rectangleRead(s, root)
   }
 
   /** BUILD/APPEND shared core of the at-rest z-order table: the
     * clustered rows under `rows/` (partitionBy cell) and the per-cell
     * file-skipping stats under `stats/` (count/min/max — all
-    * associative, so the append merges them instead of recomputing). */
+    * associative, so the append merges them instead of recomputing).
+    * The cell reads back as int (partition inference); cell < 2^22 by
+    * construction, so the narrowing is lossless and a cell IN probe
+    * stays on the bare attribute. */
   private[graft] def writeZorder(s: SparkSession, root: String,
       ev: DataFrame): Unit = {
     AtRest.land(s, s"$root/rows", "cell",
@@ -202,10 +193,10 @@ object LayoutOps {
       .write.mode("overwrite").parquet(s"$root/stats")
   }
 
-  /** The rectangle read over a [[writeZorder]] layout — ly2's serve
-    * shape over the maintained table (ly2 itself keeps its original
-    * single-directory layout without the stats sidecar; the two reads
-    * are pinned row-identical by the shared oracle). */
+  /** The rectangle read over a [[writeZorder]] layout — the serve of
+    * ly2 (fresh build), ly3 (appended) and ly4 (forgotten): a STATIC
+    * `cell IN (...)` predicate from [[cellsForRange]] plus the exact
+    * BETWEEN residual. */
   private def rectangleRead(s: SparkSession, root: String): DataFrame = {
     val cells = cellsForRange(RectU0, RectU1, RectD0, RectD1)
     s.read.parquet(s"$root/rows")

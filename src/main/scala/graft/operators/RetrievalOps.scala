@@ -814,7 +814,7 @@ object RetrievalOps {
       .agg(sum(col("n_postings")).as("df"))
 
   private[graft] def writePostingsIndex(s: SparkSession, root: String,
-      docs: DataFrame, bucketDoclen: Boolean = false): Unit = {
+      docs: DataFrame): Unit = {
     AtRest.land(s, s"$root/postings", "term_bucket",
       postingsArtifacts(docs), "overwrite")
     // the two metadata chains are INDEPENDENT after the postings land
@@ -833,43 +833,32 @@ object RetrievalOps {
         // is what postings denormalize in), and the ONE artifact that
         // records zero-token documents, which the postings cannot: the
         // corpus constants derive from it, never from a docs re-scan.
-        // The FORGETTABLE layout (ir22) partitions it by doc bucket so a
-        // delete request rewrites only its own doc partitions; the
-        // append-only layouts keep the flat form (their doclen is only
-        // ever appended to, never rewritten)
-        val dlf = docLenOf(docs)
-        if (bucketDoclen)
-          AtRest.land(s, s"$root/doclen", "doc_bucket",
-            dlf.withColumn("doc_bucket", docBucketCol), "overwrite")
-        else dlf.write.mode("overwrite").parquet(s"$root/doclen")
-        constsOf(s.read.parquet(s"$root/doclen"))
-          .write.mode("overwrite").parquet(s"$root/consts")
+        // It partitions by doc bucket, so a delete request rewrites only
+        // its own doc partitions and an append lands where they look
+        AtRest.land(s, s"$root/doclen", "doc_bucket",
+          docLenOf(docs), "overwrite")
+        recountConsts(s, root)
       })
   }
 
+  /** (doc_id, dl, doc_bucket) — the doclen table's rows. */
   private def docLenOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), size(toks).as("dl"))
+      .withColumn("doc_bucket", AtRest.docBucketCol)
 
-  /** Doc-bucket count of the forgettable doclen layout (ir22). Like
-    * [[TermBuckets]], 16 is harness sizing — the targeting is correct
-    * at any count. */
-  val DocLenBuckets = 16
-
-  /** The doclen table's partition attribute for the FORGETTABLE
-    * layout: a pure function of doc_id, so a delete request's target
-    * doclen partitions come from the request itself (the c6 shard
-    * rule applied to index metadata). */
-  private[graft] def docBucketCol: Column =
-    (col("doc_id") % DocLenBuckets).cast("int")
-
-  /** One-row (n_docs, total_tokens, avgdl) over a (doc_id, dl) frame —
-    * [[corpusConsts]]'s exact trees with the integer total kept (the
-    * empty-side coalesce is ir7's null-sum guard). */
-  private def constsOf(dlf: DataFrame): DataFrame =
-    dlf.agg(count(lit(1)).as("n_docs"),
+  /** RECOUNT the one-row `consts` (n_docs, total_tokens, avgdl) from the
+    * at-rest doclen — [[corpusConsts]]'s exact trees with the integer
+    * total kept (the empty-side coalesce is ir7's null-sum guard).
+    * Idempotent where a += merge would double-count a retried batch;
+    * the plan reads doclen, never consts, so the overwrite needs no
+    * pin. Build, append, forget and heal all end with it. */
+  private def recountConsts(s: SparkSession, root: String): Unit =
+    s.read.parquet(s"$root/doclen")
+      .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl").cast("long")), lit(0L)).as("total_tokens"))
       .withColumn("avgdl",
         col("total_tokens").cast("double") / col("n_docs"))
+      .write.mode("overwrite").parquet(s"$root/consts")
 
   /** Fold an incoming batch into the standing index — the ir7 merge
     * made physical. Postings APPEND (per-doc facts; standing files
@@ -882,8 +871,8 @@ object RetrievalOps {
     * metadata buckets' files survive byte-identical,
     * RetrievalOpsSpec pins it). consts RECOUNTS from doclen (one row
     * out — idempotent where a += merge would double-count a retry).
-    * `localCheckpoint` cuts the read-modify-write cycle on each
-    * metadata table (the x15/x17 convention).
+    * [[AtRest.land]] pins the read-modify-write cycle on each
+    * self-reading metadata write (the x15/x17 convention).
     *
     * IDEMPOTENT under retry (x19's exactly-once discipline): the
     * batch's rows anti-join the standing postings' slim (tok, doc_id)
@@ -919,8 +908,8 @@ object RetrievalOps {
     // buckets, so only those buckets of the standing metadata are
     // read, merged and replaced — the touched-bucket list is O(16)
     // driver metadata (the d27 bookkeeping class), and a merged
-    // bucket is never empty (the delta contributed to it), so the
-    // dynamic overwrite needs no directory-drop guard
+    // bucket is never empty (the delta contributed to it), so a plain
+    // dynamic overwrite replaces exactly the touched buckets
     val deltaMeta = blockMetaOf(bp).localCheckpoint()
     val mBuckets = deltaMeta.select(col("term_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
@@ -929,37 +918,30 @@ object RetrievalOps {
     // postings or the pinned delta), so they overlap — guide §2.6
     AtRest.inParallel(
       () => if (mBuckets.nonEmpty) {
-        AtRest.overwriteBuckets(s, s"$root/blockmeta", "term_bucket",
-          mBuckets,
+        AtRest.land(s, s"$root/blockmeta", "term_bucket",
           s.read.parquet(s"$root/blockmeta")
             .filter(col("term_bucket").isin(mBuckets: _*))
             .unionByName(deltaMeta)
             .groupBy(col("term_bucket"), col("tok"), col("blk"))
             .agg(max(col("max_tf")).as("max_tf"),
               min(col("min_dl")).as("min_dl"),
-              sum(col("n_postings")).as("n_postings")))
-        AtRest.overwriteBuckets(s, s"$root/dict", "term_bucket", mBuckets,
+              sum(col("n_postings")).as("n_postings")),
+          "dynamic")
+        AtRest.land(s, s"$root/dict", "term_bucket",
           dictFromMeta(s.read.parquet(s"$root/blockmeta")
-            .filter(col("term_bucket").isin(mBuckets: _*))))
-        ()
+            .filter(col("term_bucket").isin(mBuckets: _*))),
+          "dynamic")
       },
       () => {
-        // doclen gets the same anti-join exactly-once guard, and the
-        // constants RECOUNT from the at-rest table (2 slim columns —
-        // idempotent by construction, where a +=-style merge would
-        // double-count a retried batch). Like `bp`, the anti-joined batch
-        // is pinned EAGERLY before the append: its plan reads the same
-        // path the write appends to, and only the at-write-time file
-        // listing keeps that safe — a retry after refreshByPath (or any
-        // caching of this frame) would re-list post-append and anti-join
-        // the batch against itself
-        docLenOf(batch)
-          .join(s.read.parquet(s"$root/doclen").select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-          .write.mode("append").parquet(s"$root/doclen")
-        constsOf(s.read.parquet(s"$root/doclen")).localCheckpoint()
-          .write.mode("overwrite").parquet(s"$root/consts")
+        // doclen gets the same anti-join exactly-once guard (land pins
+        // it: the plan reads the table it appends to), then the
+        // constants recount from the at-rest table
+        AtRest.land(s, s"$root/doclen", "doc_bucket",
+          docLenOf(batch)
+            .join(s.read.parquet(s"$root/doclen").select(col("doc_id")),
+              Seq("doc_id"), "left_anti"),
+          "append")
+        recountConsts(s, root)
       })
   }
 
@@ -976,8 +958,7 @@ object RetrievalOps {
       blockMetaOf(s.read.parquet(s"$root/postings")), Seq("term_bucket"))
     AtRest.healDerived(s, s"$root/dict",
       dictFromMeta(s.read.parquet(s"$root/blockmeta")), Seq("term_bucket"))
-    AtRest.healDerived(s, s"$root/consts",
-      constsOf(s.read.parquet(s"$root/doclen")))
+    recountConsts(s, root)
   }
 
   /** Data files per term_bucket partition of the at-rest postings —
@@ -1200,18 +1181,13 @@ object RetrievalOps {
     * recount from the table — idempotent at every crash point. */
   private def forgetDoclen(s: SparkSession, root: String,
       delIds: DataFrame): Unit = {
-    val req = delIds.withColumn("doc_bucket", docBucketCol)
-      .localCheckpoint()
-    val dBuckets = req.select(col("doc_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    AtRest.sweepBuckets(s, s"$root/doclen", "doc_bucket", dBuckets,
-      req.select(col("doc_id")), Seq("doc_id"))
-    constsOf(s.read.parquet(s"$root/doclen")).localCheckpoint()
-      .write.mode("overwrite").parquet(s"$root/consts")
+    AtRest.sweepBuckets(s, s"$root/doclen", "doc_bucket",
+      AtRest.docBucketsOf(delIds), delIds, Seq("doc_id"))
+    recountConsts(s, root)
   }
 
   /** IR22 — FORGET EXECUTED AGAINST THE AT-REST POSTINGS INDEX: build
-    * the full index (the forgettable layout — doclen doc-bucketed),
+    * the full index (doclen doc-bucketed, like every build),
     * EXECUTE the c4/c6 delete request (the `% ${TextOps.ForgetMod}`
     * cohort) with the term-targeted sweep ([[forgetPostingsIndex]]),
     * and SERVE ir15's partition-pruned probe from what remains. The
@@ -1232,7 +1208,7 @@ object RetrievalOps {
   def postingsForgetServe(s: SparkSession, dir: String): DataFrame = {
     val root = SimilarityOps.indexRoot(s, dir) + "/irindex22"
     val docs = Tables.documents(s, dir)
-    writePostingsIndex(s, root, docs, bucketDoclen = true)
+    writePostingsIndex(s, root, docs)
     forgetPostingsIndex(s, root,
       docs.filter(col("doc_id") % TextOps.ForgetMod === TextOps.ForgetRem))
     serveFromIndex(s, root)

@@ -144,11 +144,12 @@ class AtRestSpec extends SparkSpec {
       files == landed, "a retried append was not a no-op")
   }
 
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+
   test("guard: AtRest.land is the only bucketed parquet writer in src/main") {
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
     // a literal bucket column (`partitionBy("b")`) — every
     // Window.partitionBy takes col(...) — or, on a code line, any
     // argument that is neither col(...) nor empty (a writer handed a
@@ -166,6 +167,23 @@ class AtRestSpec extends SparkSpec {
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty,
       s"partitioned writers outside AtRest.land:\n${hits.mkString("\n")}")
+  }
+
+  test("guard: AtRest.land is the only appending writer in graft.operators") {
+    // every operator table is bucketed, and a plain append into a
+    // partitioned table lands at its root, where a partitioned read
+    // never looks (the flat per-doc stats appends lost their rows so)
+    val append = raw"""mode\(\s*("append"|SaveMode\.Append)""".r
+    val hits = for {
+      f <- scalaFiles(new java.io.File("src/main/scala/graft/operators"))
+      if f.getName != "AtRest.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .toSeq.zipWithIndex
+      if !Seq("*", "/*", "//").exists(line.trim.startsWith)
+      if append.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"appending writers outside AtRest.land:\n${hits.mkString("\n")}")
   }
 
   test("sweepBuckets: drops exactly the keyed rows from exactly the affected buckets; empty affected is a no-op") {

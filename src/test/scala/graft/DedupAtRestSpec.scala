@@ -28,12 +28,11 @@ class DedupAtRestSpec extends SparkSpec {
     val rootA = "target/graft-index/spec-d23-append"
     val rootB = "target/graft-index/spec-d23-rebuild"
     DedupOps.writeShingleIndex(spark, rootA,
-      train.filter(col("doc_id") % DedupOps.IncomingMod =!= 0),
-      bucketStats = false)
+      train.filter(col("doc_id") % DedupOps.IncomingMod =!= 0))
     DedupOps.appendShingleIndex(spark, rootA,
       train.filter(col("doc_id") % DedupOps.IncomingMod === 0))
     graft.operators.CacheScope.drain()
-    DedupOps.writeShingleIndex(spark, rootB, train, bucketStats = false)
+    DedupOps.writeShingleIndex(spark, rootB, train)
     // set-union dictionary + per-doc facts: appended == rebuilt, row-exact
     for (art <- Artifacts) {
       val a = spark.read.parquet(s"$rootA/$art")
@@ -58,8 +57,7 @@ class DedupAtRestSpec extends SparkSpec {
     val root = "target/graft-index/spec-d23-retry"
     val batch = train.filter(col("doc_id") % DedupOps.IncomingMod === 0)
     DedupOps.writeShingleIndex(spark, root,
-      train.filter(col("doc_id") % DedupOps.IncomingMod =!= 0),
-      bucketStats = false)
+      train.filter(col("doc_id") % DedupOps.IncomingMod =!= 0))
     DedupOps.appendShingleIndex(spark, root, batch)
     graft.operators.CacheScope.drain()
     def canon(art: String) = spark.read.parquet(s"$root/$art")
@@ -263,9 +261,8 @@ class DedupAtRestSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") % DedupOps.IncomingMod === 0)
     val rootC = "target/graft-index/spec-d22-crash"
     val rootF = "target/graft-index/spec-d22-crashref"
-    DedupOps.writeShingleIndex(spark, rootC, standing,
-      bucketStats = false)
-    DedupOps.writeShingleIndex(spark, rootF, docs, bucketStats = false)
+    DedupOps.writeShingleIndex(spark, rootC, standing)
+    DedupOps.writeShingleIndex(spark, rootF, docs)
     // simulate the torn append: HALF the batch's POSTINGS rows landed
     // (the doc_id parity cut), and the crash hit before the dictionary
     // delta and the stats rows ever wrote

@@ -82,12 +82,10 @@ class ForgetFamiliesSpec extends SparkSpec {
     val rootA = "target/graft-index/spec-d31-forget"
     val rootB = "target/graft-index/spec-d31-rebuild"
     rmRoot(rootA); rmRoot(rootB)
-    DedupOps.writeShingleIndex(spark, rootA, docs, bucketStats = true)
+    DedupOps.writeShingleIndex(spark, rootA, docs)
     val dictBefore = rows(s"$rootA/shset", "h")
-    DedupOps.forgetShingleIndex(spark, rootA, docs.filter(isDel),
-      bucketedStats = true)
-    DedupOps.writeShingleIndex(spark, rootB, docs.filter(!isDel),
-      bucketStats = true)
+    DedupOps.forgetShingleIndex(spark, rootA, docs.filter(isDel))
+    DedupOps.writeShingleIndex(spark, rootB, docs.filter(!isDel))
     assert(rows(s"$rootA/postings", "doc_id", "h", "sh_bucket") ==
       rows(s"$rootB/postings", "doc_id", "h", "sh_bucket"),
       "shingle postings forget != rebuild over survivors")
@@ -102,6 +100,29 @@ class ForgetFamiliesSpec extends SparkSpec {
     // and d12's membership audit would flag deleted content forever)
     assert(rows(s"$rootA/shset", "h").size < dictBefore.size,
       "fixture regression: no hash left the dictionary — subtraction untested")
+    rmRoot(rootA); rmRoot(rootB)
+  }
+
+  test("d31: shingle build(A) → append(B) → forget(D) == build((A ∪ B) − D) on all three artifacts") {
+    val docs = graft.sources.Tables.documents(spark, Sf)
+      .filter(col("doc_id") % DedupOps.EvalMod =!= 0)
+    val isNew = col("doc_id") % DedupOps.IncomingMod === 0
+    assert(docs.filter(isDel && isNew).count() > 0 &&
+      docs.filter(isDel && !isNew).count() > 0,
+      "fixture regression: the request misses one side of the append")
+    val rootA = "target/graft-index/spec-d31-compose"
+    val rootB = "target/graft-index/spec-d31-compose-rebuild"
+    rmRoot(rootA); rmRoot(rootB)
+    DedupOps.writeShingleIndex(spark, rootA, docs.filter(!isNew))
+    DedupOps.appendShingleIndex(spark, rootA, docs.filter(isNew))
+    CacheScope.drain()
+    DedupOps.forgetShingleIndex(spark, rootA, docs.filter(isDel))
+    DedupOps.writeShingleIndex(spark, rootB, docs.filter(!isDel))
+    for ((art, cols) <- Seq("postings" -> Seq("doc_id", "h", "sh_bucket"),
+        "shset" -> Seq("h", "sh_bucket"),
+        "docstats" -> Seq("doc_id", "n_shingles")))
+      assert(rows(s"$rootA/$art", cols: _*) == rows(s"$rootB/$art", cols: _*),
+        s"shingle $art after build→append→forget != rebuild")
     rmRoot(rootA); rmRoot(rootB)
   }
 
@@ -271,12 +292,11 @@ class ForgetFamiliesSpec extends SparkSpec {
     val rootA = "target/graft-index/spec-champ-forget"
     val rootB = "target/graft-index/spec-champ-rebuild"
     rmRoot(rootA); rmRoot(rootB)
-    RetrievalOps.writePostingsIndex(spark, rootA, docs, bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, rootA, docs)
     RetrievalOps.forgetPostingsIndex(spark, rootA, docs.filter(isDel))
     val served = RetrievalOps.championServeFrom(spark, rootA).collect().toSeq
     CacheScope.drain()
-    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel),
-      bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel))
     val rebuilt = RetrievalOps.championServeFrom(spark, rootB).collect().toSeq
     CacheScope.drain()
     assert(served == rebuilt,

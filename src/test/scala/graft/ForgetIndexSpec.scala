@@ -50,10 +50,9 @@ class ForgetIndexSpec extends SparkSpec {
     val rootA = "target/graft-index/spec-ir22-forget"
     val rootB = "target/graft-index/spec-ir22-rebuild"
     rmRoot(rootA); rmRoot(rootB)
-    RetrievalOps.writePostingsIndex(spark, rootA, docs, bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, rootA, docs)
     RetrievalOps.forgetPostingsIndex(spark, rootA, docs.filter(isDel))
-    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel),
-      bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel))
     val (a1, b1) = (allArtifacts(rootA), allArtifacts(rootB))
     a1.zip(b1).zipWithIndex.foreach { case ((a, b), i) =>
       assert(a == b, s"artifact $i diverged from the survivor rebuild")
@@ -63,6 +62,29 @@ class ForgetIndexSpec extends SparkSpec {
     RetrievalOps.forgetPostingsIndex(spark, rootA, docs.filter(isDel))
     allArtifacts(rootA).zip(b1).zipWithIndex.foreach { case ((a, b), i) =>
       assert(a == b, s"artifact $i drifted under a retried forget")
+    }
+    rmRoot(rootA); rmRoot(rootB)
+  }
+
+  test("ir22: build(A) → append(B) → forget(D) == build((A ∪ B) − D) on all five artifacts") {
+    val docs = graft.sources.Tables.documents(spark, Sf)
+    val isNew = col("doc_id") % graft.operators.DedupOps.IncomingMod === 0
+    val isDel = col("doc_id") % graft.operators.TextOps.ForgetMod ===
+      graft.operators.TextOps.ForgetRem
+    // the request deletes docs of both the build and the appended batch
+    assert(docs.filter(isDel && isNew).count() > 0 &&
+      docs.filter(isDel && !isNew).count() > 0,
+      "fixture regression: the request misses one side of the append")
+    val rootA = "target/graft-index/spec-ir22-compose"
+    val rootB = "target/graft-index/spec-ir22-compose-rebuild"
+    rmRoot(rootA); rmRoot(rootB)
+    RetrievalOps.writePostingsIndex(spark, rootA, docs.filter(!isNew))
+    RetrievalOps.appendPostingsIndex(spark, rootA, docs.filter(isNew))
+    RetrievalOps.forgetPostingsIndex(spark, rootA, docs.filter(isDel))
+    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel))
+    allArtifacts(rootA).zip(allArtifacts(rootB)).zipWithIndex.foreach {
+      case ((a, b), i) =>
+        assert(a == b, s"artifact $i of build→append→forget != rebuild")
     }
     rmRoot(rootA); rmRoot(rootB)
   }
@@ -92,7 +114,7 @@ class ForgetIndexSpec extends SparkSpec {
       "fixture words collide in one bucket — pick new words")
     val root = "target/graft-index/spec-ir22-planted"
     rmRoot(root)
-    RetrievalOps.writePostingsIndex(spark, root, docs, bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, root, docs)
     val before = bucketSig(s"$root/postings", "term_bucket")
     val isDel = col("doc_id") >= 100L
     RetrievalOps.forgetPostingsIndex(spark, root, docs.filter(isDel))
@@ -126,7 +148,7 @@ class ForgetIndexSpec extends SparkSpec {
     val root = "target/graft-index/spec-ir22-crash"
     val rootB = "target/graft-index/spec-ir22-crash-rebuild"
     rmRoot(root); rmRoot(rootB)
-    RetrievalOps.writePostingsIndex(spark, root, docs, bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, root, docs)
     // simulate the crash: run ONLY the postings row sweep (the first
     // write the real forget performs), then stop before any metadata
     val delIds = docs.filter(isDel).select(col("doc_id")).localCheckpoint()
@@ -144,8 +166,7 @@ class ForgetIndexSpec extends SparkSpec {
     assert(left == 0L, s"$left deleted postings visible at the crash point")
     // rerunning the interrupted forget completes to the rebuilt state
     RetrievalOps.forgetPostingsIndex(spark, root, docs.filter(isDel))
-    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel),
-      bucketDoclen = true)
+    RetrievalOps.writePostingsIndex(spark, rootB, docs.filter(!isDel))
     allArtifacts(root).zip(allArtifacts(rootB)).zipWithIndex.foreach {
       case ((a, b), i) =>
         assert(a == b, s"artifact $i wrong after crash-rerun recovery")

@@ -734,7 +734,7 @@ class PlanContractSpec extends SparkSpec {
     val ro = graft.operators.RetrievalOps
     val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/irpin22"
     ro.writePostingsIndex(spark, root,
-      graft.sources.Tables.documents(spark, Sf), bucketDoclen = true)
+      graft.sources.Tables.documents(spark, Sf))
     import spark.implicits._
     val targets = Seq(2, 9)
     val p = executed(ro.postingsForgetSurvivors(spark, root,
@@ -805,8 +805,7 @@ class PlanContractSpec extends SparkSpec {
     val d = graft.operators.DedupOps
     val r = graft.operators.RetrievalOps
     r.writePositionalIndex(spark, s"$base/sweeppin23", docs)
-    d.writeShingleIndex(spark, s"$base/sweeppin31", docs,
-      bucketStats = false)
+    d.writeShingleIndex(spark, s"$base/sweeppin31", docs)
     d.writeWinnowIndex(spark, s"$base/sweeppin32", docs)
     d.writeSimhashIndex(spark, s"$base/sweeppin33", docs)
     graft.operators.SimilarityOps.buildSq8Maintained(spark,

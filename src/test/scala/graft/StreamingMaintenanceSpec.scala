@@ -213,7 +213,7 @@ class StreamingMaintenanceSpec extends SparkSpec {
     assert(requests.size >= 5, "fixture regression: thin request cohort")
     val rootR = "target/graft-index/spec-stream-ir22-oneshot"
     rmRoot(rootR)
-    ro.writePostingsIndex(spark, rootR, docs, bucketDoclen = true)
+    ro.writePostingsIndex(spark, rootR, docs)
     ro.forgetPostingsIndex(spark, rootR, docs.filter(isDel))
     val expect = Seq(
       "postings" -> Seq("tok", "doc_id", "tf", "dl", "term_bucket"),
@@ -226,7 +226,7 @@ class StreamingMaintenanceSpec extends SparkSpec {
       val rnd = new scala.util.Random(seed)
       val rootS = s"target/graft-index/spec-stream-ir22-$seed"
       rmRoot(rootS)
-      ro.writePostingsIndex(spark, rootS, docs, bucketDoclen = true)
+      ro.writePostingsIndex(spark, rootS, docs)
       val in = MemoryStream[Doc]
       val q = in.toDF().writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -479,9 +479,8 @@ class StreamingMaintenanceSpec extends SparkSpec {
     val rootWn = "target/graft-index/spec-stream-d32-oneshot"
     val rootZo = "target/graft-index/spec-stream-ly4-oneshot"
     Seq(rootSh, rootWn, rootZo).foreach(rmRoot)
-    d.writeShingleIndex(spark, rootSh, docs, bucketStats = true)
-    d.forgetShingleIndex(spark, rootSh, docs.filter(isDel),
-      bucketedStats = true)
+    d.writeShingleIndex(spark, rootSh, docs)
+    d.forgetShingleIndex(spark, rootSh, docs.filter(isDel))
     d.writeWinnowIndex(spark, rootWn, docs)
     d.forgetWinnowIndex(spark, rootWn, docs.filter(isDel))
     ly.writeZorder(spark, rootZo, ev)
@@ -531,14 +530,14 @@ class StreamingMaintenanceSpec extends SparkSpec {
       val rW = s"target/graft-index/spec-stream-d32-$seed"
       val rZ = s"target/graft-index/spec-stream-ly4-$seed"
       Seq(rS, rW, rZ).foreach(rmRoot)
-      d.writeShingleIndex(spark, rS, docs, bucketStats = true)
+      d.writeShingleIndex(spark, rS, docs)
       d.writeWinnowIndex(spark, rW, docs)
       ly.writeZorder(spark, rZ, ev)
       val in = MemoryStream[Doc]
       val q = in.toDF().writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
           val req = b.select(col("doc_id"), col("text")).localCheckpoint()
-          d.forgetShingleIndex(spark, rS, req, bucketedStats = true)
+          d.forgetShingleIndex(spark, rS, req)
           d.forgetWinnowIndex(spark, rW, req)
           ()
         }
