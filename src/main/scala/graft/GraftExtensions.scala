@@ -20,70 +20,10 @@ import graft.functions.{BloomBuildAgg, BloomMightContain, FloatVecDot, HashedShi
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("float_vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
-      GraftExtensions.dotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_long"),
-      new ExpressionInfo(classOf[SimHashLong].getName, "simhash_long"),
-      GraftExtensions.simhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_shingle_set"),
-      new ExpressionInfo(classOf[HashedShingleSet].getName, "hashed_shingle_set"),
-      GraftExtensions.shingleSetBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      GraftExtensions.minhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("winnowed_fingerprint_set"),
-      new ExpressionInfo(classOf[graft.functions.WinnowedFingerprintSet].getName,
-        "winnowed_fingerprint_set"),
-      GraftExtensions.winnowSetBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      GraftExtensions.intersectBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("topk_by"),
-      new ExpressionInfo(classOf[TopKByAgg].getName, "topk_by"),
-      GraftExtensions.topkBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_build"),
-      new ExpressionInfo(classOf[BloomBuildAgg].getName, "bloom_build"),
-      GraftExtensions.bloomBuildBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      GraftExtensions.bloomProbeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cms_build"),
-      new ExpressionInfo(classOf[graft.functions.CmsBuildAgg].getName, "cms_build"),
-      GraftExtensions.cmsBuildBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[graft.functions.CmsEstimate].getName, "cms_estimate"),
-      GraftExtensions.cmsEstimateBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_bow_score"),
-      new ExpressionInfo(classOf[graft.functions.HashedBowScore].getName,
-        "hashed_bow_score"),
-      GraftExtensions.bowScoreBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("pack_codes"),
-      new ExpressionInfo(classOf[graft.functions.PackCodes].getName,
-        "pack_codes"),
-      GraftExtensions.packCodesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_sdc_dist"),
-      new ExpressionInfo(classOf[graft.functions.Sq8SdcDist].getName,
-        "sq8_sdc_dist"),
-      GraftExtensions.sq8SdcDistBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("asof_le"),
-      new ExpressionInfo(classOf[graft.plans.AsofLE].getName, "asof_le"),
-      GraftExtensions.asofLeBuilder))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     ext.injectResolutionRule(_ => graft.plans.AsofSqlRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
@@ -98,15 +38,7 @@ object GraftExtensions {
   private[graft] val simhashBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 2,
       "simhash_long(tokens, bits) takes an array<string> and a literal bit width")
-    val bits = args(1) match {
-      case Literal(v: Int, _) => v
-      case other => other.eval() match {
-        case i: Int => i
-        case _ => throw new IllegalArgumentException(
-          "simhash_long bit width must be an integer literal")
-      }
-    }
-    SimHashLong(args(0), bits)
+    SimHashLong(args(0), intLiteral(args(1), "simhash_long bit width"))
   }
 
   private def intLiteral(e: Expression, what: String): Int = e match {
@@ -208,22 +140,34 @@ object GraftExtensions {
     graft.functions.Sq8SdcDist(args(0), args(1))
   }
 
+  /** THE function table both registration paths walk: (SQL name,
+    * expression class, builder). Listed after the builders, which it
+    * reads at object initialization. */
+  private[graft] val functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("float_vec_dot", classOf[FloatVecDot], dotBuilder),
+    ("simhash_long", classOf[SimHashLong], simhashBuilder),
+    ("hashed_shingle_set", classOf[HashedShingleSet], shingleSetBuilder),
+    ("minhash_sig", classOf[MinHashSig], minhashBuilder),
+    ("winnowed_fingerprint_set",
+      classOf[graft.functions.WinnowedFingerprintSet], winnowSetBuilder),
+    ("sorted_intersect_count", classOf[SortedIntersectCount],
+      intersectBuilder),
+    ("topk_by", classOf[TopKByAgg], topkBuilder),
+    ("bloom_build", classOf[BloomBuildAgg], bloomBuildBuilder),
+    ("bloom_might_contain", classOf[BloomMightContain], bloomProbeBuilder),
+    ("cms_build", classOf[graft.functions.CmsBuildAgg], cmsBuildBuilder),
+    ("cms_estimate", classOf[graft.functions.CmsEstimate],
+      cmsEstimateBuilder),
+    ("hashed_bow_score", classOf[graft.functions.HashedBowScore],
+      bowScoreBuilder),
+    ("pack_codes", classOf[graft.functions.PackCodes], packCodesBuilder),
+    ("sq8_sdc_dist", classOf[graft.functions.Sq8SdcDist], sq8SdcDistBuilder),
+    ("asof_le", classOf[graft.plans.AsofLE], asofLeBuilder))
+
   /** Register every function on a live session. */
-  def register(spark: SparkSession): Unit = {
-    GraftSqlBridge.registerFunction(spark, "float_vec_dot", dotBuilder)
-    GraftSqlBridge.registerFunction(spark, "simhash_long", simhashBuilder)
-    GraftSqlBridge.registerFunction(spark, "hashed_shingle_set", shingleSetBuilder)
-    GraftSqlBridge.registerFunction(spark, "minhash_sig", minhashBuilder)
-    GraftSqlBridge.registerFunction(spark, "sorted_intersect_count", intersectBuilder)
-    GraftSqlBridge.registerFunction(spark, "winnowed_fingerprint_set", winnowSetBuilder)
-    GraftSqlBridge.registerFunction(spark, "topk_by", topkBuilder)
-    GraftSqlBridge.registerFunction(spark, "bloom_build", bloomBuildBuilder)
-    GraftSqlBridge.registerFunction(spark, "bloom_might_contain", bloomProbeBuilder)
-    GraftSqlBridge.registerFunction(spark, "asof_le", asofLeBuilder)
-    GraftSqlBridge.registerFunction(spark, "cms_build", cmsBuildBuilder)
-    GraftSqlBridge.registerFunction(spark, "cms_estimate", cmsEstimateBuilder)
-    GraftSqlBridge.registerFunction(spark, "hashed_bow_score", bowScoreBuilder)
-    GraftSqlBridge.registerFunction(spark, "pack_codes", packCodesBuilder)
-    GraftSqlBridge.registerFunction(spark, "sq8_sdc_dist", sq8SdcDistBuilder)
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      GraftSqlBridge.registerFunction(spark, name, builder)
+    }
 }

@@ -33,6 +33,18 @@ import java.util.concurrent.{CancellationException, ExecutionException,
   *      bucket leading so the writer's own required ordering cannot
   *      destroy a family's promised file order (the ir21 lesson).
   *
+  * Every DELTA of a maintained table — a forget's removal, an
+  * update's or takedown's replace, an enforcement's suppression —
+  * stages through ONE verb, [[AtRest.sweepBuckets]]: remove the keyed
+  * rows from the affected buckets, add the fresh ones, drop emptied
+  * bucket directories. Its tail, [[AtRest.overwriteBuckets]], rejects
+  * a stage holding a bucket outside the affected list before writing,
+  * and is called directly only by stages that RECOUNT a bucket from
+  * another table or migrate rows, plus d30's docsets sweep, whose
+  * declared-schema read spares a schema-inference job (AtRestSpec's
+  * sweep guard fails on any other direct call that hand-rolls the
+  * anti-join).
+  *
   * Every maintained family (postings, positional, shingle, bands,
   * winnow, SAX, z-order, vector cells) appends ≥1 new data
   * file per touched bucket per batch, so a daily-ingest deployment
@@ -326,7 +338,7 @@ object AtRest {
   // affected buckets that staged ZERO rows (dynamic overwrite only
   // touches partitions PRESENT in the data — the x17/d27/c6
   // empty-partition trap). Hand-rolled per family, this four-step
-  // tail re-risks three traps the repo has each caught exactly once:
+  // tail re-risks four traps the repo has each caught at least once:
   //   - the EMPTY-PARTITION drop: a bucket whose rows all vanish
   //     keeps its stale directory unless deleted explicitly;
   //   - the COLUMN-ORDER mismatch: a staged frame whose column order
@@ -334,20 +346,28 @@ object AtRest {
   //     d23 lesson);
   //   - the UNPINNED-STAGE self-read: the staged plan reads the very
   //     files the overwrite replaces, so it must materialize before
-  //     the write begins (the refreshByPath trap).
-  // overwriteBuckets owns the drop; land owns the column order and
-  // the self-read pin — the stage is pinned here regardless, because
-  // the drop set (affected − staged) must be read off it before the
-  // write.
+  //     the write begins (the refreshByPath trap);
+  //   - the STRAY BUCKET: a staged row outside `affected` would
+  //     replace its bucket wholesale with the stage's rows, silently
+  //     wiping that bucket's standing rows (the dq9 coinciding-
+  //     bucket trap) — rejected before anything is written.
+  // overwriteBuckets owns the drop and the stray check; land owns the
+  // column order and the self-read pin — the stage is pinned here
+  // regardless, because the present set (drop set and stray check)
+  // must be read off it before the write.
   // ---------------------------------------------------------------
 
   /** Replace exactly the `affected` buckets of a bucket-partitioned
-    * `table` with `staged`'s rows (any columns order; any subset —
-    * or superset — of `affected` may actually stage rows: a staged
-    * bucket outside `affected` is written too, an affected bucket
-    * with no staged rows has its directory dropped). Returns the
-    * bucket ids that received rows. Families that promise a PER-FILE
-    * row order pass it as `sortCols` ([[land]]'s rule 4).
+    * `table` with `staged`'s rows (any column order; any subset of
+    * `affected` may actually stage rows: an affected bucket with no
+    * staged rows has its directory dropped). A staged row in a bucket
+    * OUTSIDE `affected` fails the call, naming the bucket, before
+    * anything is written. Returns the bucket ids that received rows.
+    * Families that promise a PER-FILE row order pass it as `sortCols`
+    * ([[land]]'s rule 4). A maintained table's delta (remove keyed
+    * rows, add fresh ones) goes through [[sweepBuckets]]; this form
+    * is for stages that RECOUNT a bucket from another table (a
+    * dictionary, a stats table, a bottom-k) or migrate rows.
     *
     * EMPTIED-TABLE guard: when every partition directory of `table`
     * has already been dropped (a rerun after a total forget), the
@@ -364,6 +384,10 @@ object AtRest {
     val pinned = staged.localCheckpoint()
     val present = pinned.select(col(partitionCol)).distinct()
       .collect().map(_.getInt(0)).toSet
+    val stray = (present -- affected).toSeq.sorted
+    require(stray.isEmpty, s"overwriteBuckets on $table staged rows in " +
+      s"$partitionCol ${stray.mkString(", ")} outside the affected " +
+      "buckets; their standing rows would be replaced wholesale")
     if (present.nonEmpty)
       land(s, table, partitionCol, pinned, "dynamic", sortCols)
     val fs = fsOf(s, table)
@@ -374,10 +398,12 @@ object AtRest {
     present
   }
 
-  /** The sweep's survivor frame — exposed separately so
-    * PlanContractSpec can pin, per family, the STATIC `IN` partition
-    * predicate on the table scan (only the affected buckets'
-    * directories are listed or read) and the broadcast anti-join. */
+  /** The sweep's survivor frame: the `affected` buckets' rows minus
+    * every row whose `keys` match a row of `drop` — exposed separately
+    * so PlanContractSpec can pin, per family, the STATIC `IN`
+    * partition predicate on the table scan (only the affected
+    * buckets' directories are listed or read) and the broadcast
+    * anti-join. */
   private[graft] def sweepSurvivors(s: SparkSession, table: String,
       partitionCol: String, affected: Seq[Int], drop: DataFrame,
       keys: Seq[String]): DataFrame =
@@ -502,32 +528,40 @@ object AtRest {
       case Seq(bucketCol) => land(s, out, bucketCol, derived, "overwrite")
     }
 
-  /** The anti-join removal form of [[overwriteBuckets]] — the FORGET
-    * verb: drop from exactly the `affected` buckets every row whose
-    * `keys` match a row of `drop` (broadcast — request-sized), keep
-    * the rest byte-equal. Untouched buckets are never listed or
-    * read; an all-dropped bucket's directory is deleted. */
+  /** THE DELTA VERB of every maintained at-rest table: in exactly the
+    * `affected` buckets, remove every row whose `keys` match a row of
+    * `drop` (broadcast — request-sized) and land the `add` rows; every
+    * other row of those buckets stays byte-equal, and untouched
+    * buckets are never listed or read. Forgets pass no `add`; updates
+    * and takedowns pass the fresh rows, which must fall in `affected`
+    * ([[overwriteBuckets]] rejects a stray bucket before writing).
+    * An affected bucket left with no rows has its directory deleted.
+    * The stage is (survivors ∪ add): when `drop` keys every added row,
+    * a rerun with the same `drop` and `add` removes the landed rows
+    * and lands them again — a row-level no-op. */
   private[graft] def sweepBuckets(s: SparkSession, table: String,
       partitionCol: String, affected: Seq[Int], drop: DataFrame,
-      keys: Seq[String], sortCols: Seq[Column] = Nil): Set[Int] = {
+      keys: Seq[String], add: Option[DataFrame] = None,
+      sortCols: Seq[Column] = Nil): Set[Int] = {
     if (affected.isEmpty) return Set.empty
-    if (!bucketFiles(s, table, partitionCol).valuesIterator
-        .exists(_.nonEmpty)) {
-      // EMPTIED table (every bucket already dropped — e.g. a forget
-      // rerun after a total forget): nothing to sweep, and no files
-      // for the survivor read to infer a schema from (the r17 ADVICE
-      // emptied-table guard — TimeSeriesOps guards via saxOrigin;
-      // every other family gets the guard here). Stale empty affected
-      // dirs are still deleted so the layout converges.
+    val stage =
+      if (bucketFiles(s, table, partitionCol).valuesIterator
+          .exists(_.nonEmpty)) {
+        val survivors =
+          sweepSurvivors(s, table, partitionCol, affected, drop, keys)
+        Some(add.fold(survivors)(survivors.unionByName(_)))
+      } else add
+    // EMPTIED table (every bucket already dropped — e.g. a forget rerun
+    // after a total forget): no files for the survivor read to infer a
+    // schema from, so only the added rows stage; with none, the stale
+    // empty affected dirs are still deleted so the layout converges
+    stage.fold {
       val fs = fsOf(s, table)
       affected.foreach { b =>
         fs.delete(new Path(s"$table/$partitionCol=$b"), true)
         ()
       }
-      return Set.empty
-    }
-    overwriteBuckets(s, table, partitionCol, affected,
-      sweepSurvivors(s, table, partitionCol, affected, drop, keys),
-      sortCols)
+      Set.empty[Int]
+    }(overwriteBuckets(s, table, partitionCol, affected, _, sortCols))
   }
 }

@@ -222,8 +222,7 @@ object AuditOps {
 
   /** The release projection: the QI tuple plus the row key — the
     * shape a microdata release publishes (content stays home; tx9
-    * scrubs it separately). ONE derivation tree for the build and the
-    * enforcement's survivors. */
+    * scrubs it separately). */
   private def releaseRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("source"),
         lenBucket.as("len_bucket"))
@@ -233,19 +232,6 @@ object AuditOps {
       docs: DataFrame): Unit =
     AtRest.land(s, s"$root/release", "qi_bucket", releaseRows(docs),
       "overwrite")
-
-  /** The enforcement sweep's survivor frame — exposed so
-    * PlanContractSpec can pin the STATIC `qi_bucket IN` partition
-    * predicate on the release scan (only the violating cells'
-    * directories are listed or read). */
-  private[graft] def releaseEnforceSurvivors(s: SparkSession,
-      root: String, bad: DataFrame, targets: Seq[Int]): DataFrame =
-    s.read.parquet(s"$root/release")
-      .filter(col("qi_bucket").isin(targets: _*))
-      .join(broadcast(bad), Seq("lang", "source", "len_bucket"),
-        "left_anti")
-      .select(col("doc_id"), col("lang"), col("source"),
-        col("len_bucket"), col("qi_bucket"))
 
   /** EXECUTE the suppression dq3's audit calls for: recount the cells
     * from the files, take the under-K ones (attribute-bounded — langs
@@ -269,12 +255,10 @@ object AuditOps {
       .localCheckpoint()
     val targets = bad.select(col("qi_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    if (targets.nonEmpty) {
-      AtRest.overwriteBuckets(s, s"$root/release", "qi_bucket", targets,
-        releaseEnforceSurvivors(s, root,
-          bad.select(col("lang"), col("source"), col("len_bucket")),
-          targets))
-    }
+    AtRest.sweepBuckets(s, s"$root/release", "qi_bucket", targets,
+      bad.select(col("lang"), col("source"), col("len_bucket")),
+      Seq("lang", "source", "len_bucket"))
+    ()
   }
 
   /** GENERALIZE before suppressing (dq9's first stage) — Sweeney

@@ -1485,16 +1485,24 @@ object DedupOps {
       docs: DataFrame): Unit = {
     AtRest.land(s, s"$root/wfp", "h_bucket", bucketedWfp(docs), "overwrite")
     val w = s.read.parquet(s"$root/wfp")
-    AtRest.land(s, s"$root/wdf", "h_bucket",
-      w.groupBy(col("h_bucket"), col("h")).agg(count(lit(1)).as("nd")),
-      "overwrite")
-    val over = s.read.parquet(s"$root/wdf")
-      .filter(col("nd") > WinnowCap).select(col("h"))
+    AtRest.land(s, s"$root/wdf", "h_bucket", wdfOf(w), "overwrite")
     AtRest.land(s, s"$root/kept", "h_bucket",
-      w.join(broadcast(over), Seq("h"), "left_anti")
-        .select(col("doc_id"), col("h"), col("h_bucket")),
-      "overwrite")
+      keptOf(w, s.read.parquet(s"$root/wdf")), "overwrite")
   }
+
+  /** Per-hash document frequency of `wfp` rows — ONE derivation for
+    * the build, the heal, the append's delta and the forget's
+    * bucket-scoped recount. */
+  private def wdfOf(wfp: DataFrame): DataFrame =
+    wfp.groupBy(col("h_bucket"), col("h")).agg(count(lit(1)).as("nd"))
+
+  /** The capped serving rows: the `wfp` rows whose hash's document
+    * frequency in `wdf` is within [[WinnowCap]] — ONE derivation for
+    * the build, the heal and the forget's bucket-scoped rebuild. */
+  private def keptOf(wfp: DataFrame, wdf: DataFrame): DataFrame =
+    wfp.join(broadcast(wdf.filter(col("nd") > WinnowCap).select(col("h"))),
+        Seq("h"), "left_anti")
+      .select(col("doc_id"), col("h"), col("h_bucket"))
 
   /** APPEND: d19's merge made physical —
     *   1. the batch's fingerprints land in `wfp` behind the (h,
@@ -1549,8 +1557,7 @@ object DedupOps {
     // read, merged by addition and replaced via dynamic partition
     // overwrite (a merged bucket is never empty: the delta
     // contributed to it — a plain dynamic overwrite, no drop guard)
-    val deltaDf = newRows.groupBy(col("h_bucket"), col("h"))
-      .agg(count(lit(1)).as("nd")).localCheckpoint()
+    val deltaDf = wdfOf(newRows).localCheckpoint()
     val dfBuckets = deltaDf.select(col("h_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (dfBuckets.nonEmpty) {
@@ -1588,15 +1595,9 @@ object DedupOps {
     * state. */
   private[graft] def healWinnowIndex(s: SparkSession, root: String): Unit = {
     val w = s.read.parquet(s"$root/wfp")
-    AtRest.healDerived(s, s"$root/wdf",
-      w.groupBy(col("h_bucket"), col("h")).agg(count(lit(1)).as("nd")),
-      Seq("h_bucket"))
-    val over = s.read.parquet(s"$root/wdf")
-      .filter(col("nd") > WinnowCap).select(col("h"))
+    AtRest.healDerived(s, s"$root/wdf", wdfOf(w), Seq("h_bucket"))
     AtRest.healDerived(s, s"$root/kept",
-      w.join(broadcast(over), Seq("h"), "left_anti")
-        .select(col("doc_id"), col("h"), col("h_bucket")),
-      Seq("h_bucket"))
+      keptOf(w, s.read.parquet(s"$root/wdf")), Seq("h_bucket"))
   }
 
   /** d26's probe core: d18's verdict with the index side replaced by
@@ -1678,19 +1679,13 @@ object DedupOps {
     if (tBuckets.isEmpty) return
     AtRest.sweepBuckets(s, s"$root/wfp", "h_bucket", tBuckets,
       ids, Seq("doc_id"))
+    def inTargets(table: String) = s.read.parquet(s"$root/$table")
+      .filter(col("h_bucket").isin(tBuckets: _*))
     AtRest.overwriteBuckets(s, s"$root/wdf", "h_bucket", tBuckets,
-      s.read.parquet(s"$root/wfp")
-        .filter(col("h_bucket").isin(tBuckets: _*))
-        .groupBy(col("h_bucket"), col("h"))
-        .agg(count(lit(1)).as("nd")))
+      wdfOf(inTargets("wfp")))
     AtRest.overwriteBuckets(s, s"$root/kept", "h_bucket", tBuckets,
-      s.read.parquet(s"$root/wfp")
-        .filter(col("h_bucket").isin(tBuckets: _*))
-        .join(broadcast(s.read.parquet(s"$root/wdf")
-            .filter(col("h_bucket").isin(tBuckets: _*))
-            .filter(col("nd") > WinnowCap).select(col("h"))),
-          Seq("h"), "left_anti")
-        .select(col("doc_id"), col("h"), col("h_bucket")))
+      keptOf(inTargets("wfp"), inTargets("wdf")))
+    ()
   }
 
   /** D32 — FORGET EXECUTED AGAINST THE AT-REST WINNOWING INDEX: build
@@ -2211,6 +2206,39 @@ object DedupOps {
         l.withColumn("d_bucket", idBucketCol(col("doc_id"))), "overwrite"))
   }
 
+  /** The assignment's DELTA, shared by the merge ([[updateClusters]])
+    * and the forget ([[forgetClusters]]): `clusters` removes every row
+    * of the `touched` clusters, `members` every row of the `removal`
+    * ids, and both land the `fresh` (doc_id, cluster_id) rows through
+    * the shared delta verb. Affected buckets = the removed rows'
+    * buckets ∪ the fresh rows' (a merge or split can relabel into a
+    * new bucket; an emptied bucket's directory drops). All three
+    * inputs are pinned by the caller, so the two projections stage
+    * from them, never from the files the other replaces, and rewrite
+    * disjoint tables — overlapped (guide §2.6). */
+  private def rewriteAssignment(s: SparkSession, root: String,
+      touched: DataFrame, removal: DataFrame, fresh: DataFrame): Unit = {
+    def buckets(b: Column => Column, removed: DataFrame, key: String) =
+      removed.select(b(col(key)).as("b"))
+        .unionByName(fresh.select(b(col(key)).as("b")))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val affectedC = buckets(clusterBucketCol, touched, "cluster_id")
+    val affectedD = buckets(idBucketCol, removal, "doc_id")
+    AtRest.inParallel(
+      () => {
+        AtRest.sweepBuckets(s, s"$root/clusters", "c_bucket", affectedC,
+          touched, Seq("cluster_id"), add = Some(fresh
+            .withColumn("c_bucket", clusterBucketCol(col("cluster_id")))))
+        ()
+      },
+      () => {
+        AtRest.sweepBuckets(s, s"$root/members", "d_bucket", affectedD,
+          removal, Seq("doc_id"), add = Some(fresh
+            .withColumn("d_bucket", idBucketCol(col("doc_id")))))
+        ()
+      })
+  }
+
   /** BUILD (and the wholesale HEAL): components over the written
     * index's verified pairs — the band index is the base of record,
     * so a torn update recovers by this recount (the pair edges
@@ -2296,10 +2324,9 @@ object DedupOps {
     *      star edges ∪ the new pairs — never the historical edge set
     *      (d13's invariant: star contraction preserves connectivity
     *      exactly, so update == rebuild bit-exactly);
-    *   4. both projections rewrite ONLY the affected buckets via
-    *      dynamic partition overwrite, with the x17 directory-drop
-    *      guard on the clusters side (a bucket can lose every row to
-    *      a merge that relabels away from it).
+    *   4. both projections rewrite ONLY the affected buckets
+    *      ([[rewriteAssignment]]; a bucket that loses every row to a
+    *      merge relabeling away from it drops its directory).
     * A retried update recomputes the same pairs against the already-
     * merged state and re-emits identical rows — a row-level no-op. A
     * crash between the two projection writes leaves them inconsistent,
@@ -2331,41 +2358,9 @@ object DedupOps {
     val merged = merged0
       .select(col("doc_id"), col("label").as("cluster_id"))
       .localCheckpoint()
-    // clusters/: affected = old touched clusters' buckets ∪ the merged
-    // labels' buckets (a merge can relabel into a new bucket)
-    val affectedC = touched
-      .select(clusterBucketCol(col("cluster_id")).as("b"))
-      .unionByName(merged.select(clusterBucketCol(col("cluster_id")).as("b")))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // members/: affected = the relabeled nodes' doc buckets; every
-    // affected bucket receives ≥1 merged row by construction, so the
-    // shared verb's drop set is empty there. Both projections stage
-    // from pinned frames and rewrite disjoint tables — overlap the two
-    // overwrites (guide §2.6)
-    val affectedD = merged.select(idBucketCol(col("doc_id")).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    AtRest.inParallel(
-      () => {
-        AtRest.overwriteBuckets(s, s"$root/clusters", "c_bucket", affectedC,
-          s.read.parquet(s"$root/clusters")
-            .filter(col("c_bucket").isin(affectedC: _*))
-            .join(broadcast(touched), Seq("cluster_id"), "left_anti")
-            .select(col("doc_id"), col("cluster_id"))
-            .unionByName(merged)
-            .withColumn("c_bucket", clusterBucketCol(col("cluster_id"))))
-        ()
-      },
-      () => if (affectedD.nonEmpty) {
-        AtRest.overwriteBuckets(s, s"$root/members", "d_bucket", affectedD,
-          s.read.parquet(s"$root/members")
-            .filter(col("d_bucket").isin(affectedD: _*))
-            .join(broadcast(merged.select(col("doc_id"))), Seq("doc_id"),
-              "left_anti")
-            .select(col("doc_id"), col("cluster_id"))
-            .unionByName(merged)
-            .withColumn("d_bucket", idBucketCol(col("doc_id"))))
-        ()
-      })
+    // members: every relabeled node's row is replaced
+    rewriteAssignment(s, root, touched, merged.select(col("doc_id")),
+      merged)
   }
 
   /** D29 — MAINTAINED CLUSTER ASSIGNMENT AT REST: the dedup decision
@@ -2451,8 +2446,8 @@ object DedupOps {
           ids, Seq("doc_id"))
         ()
       },
-      // staged through readDocsets' explicit schema (the bg array's
-      // containsNull contract), so the shared verb only owns the tail
+      // staged through readDocsets' declared schema, which spares the
+      // schema-inference job the shared verb's plain read would add
       () => if (dBuckets.nonEmpty) {
         AtRest.overwriteBuckets(s, s"$root/docsets", "id_bucket", dBuckets,
           readDocsets(s, root)
@@ -2516,49 +2511,18 @@ object DedupOps {
     val (lab, _) = StarComponents.components(pairs)
     val newRows = lab.select(col("doc_id"), col("label").as("cluster_id"))
       .localCheckpoint()
-    // clusters/: drop the touched clusters' rows, land the relabeled
+    // clusters/: the touched clusters' rows give way to the relabeled
     // components (split halves, shrunk clusters); vanished clusters
-    // simply have no new rows
-    val affectedC = touched
-      .select(clusterBucketCol(col("cluster_id")).as("b"))
-      .unionByName(newRows.select(clusterBucketCol(col("cluster_id")).as("b")))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // members/: removal key = deleted ids ∪ the touched clusters' old
-    // members (the delIds arm is load-bearing — it is what lets a
-    // rerun after a mid-crash still scrub the deleted rows when the
-    // clusters projection no longer names their old cluster)
+    // simply have no new rows. members/: removal key = deleted ids ∪
+    // the touched clusters' old members (the delIds arm is load-
+    // bearing — it is what lets a rerun after a mid-crash still scrub
+    // the deleted rows when the clusters projection no longer names
+    // their old cluster); the rerun-scrub property is per-table and
+    // unchanged by the two projections' overlap
     val removal = delIds
       .unionByName(oldRows.select(col("doc_id"))).distinct()
       .localCheckpoint()
-    val affectedD = removal.select(idBucketCol(col("doc_id")).as("b"))
-      .unionByName(newRows.select(idBucketCol(col("doc_id")).as("b")))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // both projections stage from pinned frames (touched/newRows/
-    // removal) and rewrite disjoint tables — overlap (guide §2.6); the
-    // rerun-scrub property is per-table and unchanged by the order
-    AtRest.inParallel(
-      () => if (affectedC.nonEmpty) {
-        AtRest.overwriteBuckets(s, s"$root/clusters", "c_bucket",
-          affectedC,
-          s.read.parquet(s"$root/clusters")
-            .filter(col("c_bucket").isin(affectedC: _*))
-            .join(broadcast(touched), Seq("cluster_id"), "left_anti")
-            .select(col("doc_id"), col("cluster_id"))
-            .unionByName(newRows)
-            .withColumn("c_bucket", clusterBucketCol(col("cluster_id"))))
-        ()
-      },
-      () => if (affectedD.nonEmpty) {
-        AtRest.overwriteBuckets(s, s"$root/members", "d_bucket",
-          affectedD,
-          s.read.parquet(s"$root/members")
-            .filter(col("d_bucket").isin(affectedD: _*))
-            .join(broadcast(removal), Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("cluster_id"))
-            .unionByName(newRows)
-            .withColumn("d_bucket", idBucketCol(col("doc_id"))))
-        ()
-      })
+    rewriteAssignment(s, root, touched, removal, newRows)
   }
 
   /** D30 — FORGET AGAINST THE MAINTAINED CLUSTERS: build the index +

@@ -369,14 +369,6 @@ object MultimodalOps {
       "overwrite")
   }
 
-  /** The bands sweep's pruned scan — exposed so PlanContractSpec can
-    * pin the STATIC chunk_bucket predicate (only the affected groups'
-    * band directories are listed or read). */
-  private[graft] def bandsTakedownScan(s: SparkSession, root: String,
-      targets: Seq[Int]): DataFrame =
-    s.read.parquet(s"$root/bands")
-      .filter(col("chunk_bucket").isin(targets: _*))
-
   /** EXECUTE a takedown request against the store. Stages (the order
     * is the compliance order — bands first, so the serve is correct
     * the moment the visible artifact lands):
@@ -414,7 +406,12 @@ object MultimodalOps {
     val groups = reqFacts
       .select(col("kind"), col("digest"), col("phash")).distinct()
       .localCheckpoint()
-    val memb = s.read.parquet(s"$root/members")
+    // the members layout's schema is declared, not inferred: the sweep
+    // in stage 4 reads the table again, and a declared read costs no
+    // schema-inference job
+    val memb = s.read
+      .schema("kind STRING, digest STRING, media_id BIGINT, dg_bucket INT")
+      .parquet(s"$root/members")
       .filter(col("dg_bucket").isin(dBuckets: _*))
     val affected = memb.join(broadcast(groups.select(col("kind"),
       col("digest"))), Seq("kind", "digest"), "left_semi")
@@ -440,17 +437,12 @@ object MultimodalOps {
     val freshRows = repChunks(newReps
         .select(col("kind"), col("rep_id"), col("n_copies"), col("phash")))
       .withColumn("chunk_bucket", chunkBucketCol)
-    AtRest.overwriteBuckets(s, s"$root/bands", "chunk_bucket", cBuckets,
-      bandsTakedownScan(s, root, cBuckets)
-        .join(broadcast(dropKeys), Seq("kind", "rep_id"), "left_anti")
-        .unionByName(freshRows))
+    AtRest.sweepBuckets(s, s"$root/bands", "chunk_bucket", cBuckets,
+      dropKeys, Seq("kind", "rep_id"), add = Some(freshRows))
     // stage 4 — members
-    AtRest.overwriteBuckets(s, s"$root/members", "dg_bucket", dBuckets,
-      memb
-        .join(broadcast(reqFacts.select(col("media_id"))),
-          Seq("media_id"), "left_anti")
-        .select(col("kind"), col("digest"), col("media_id"),
-          col("dg_bucket")))
+    AtRest.sweepBuckets(s, s"$root/members", "dg_bucket", dBuckets,
+      reqFacts.select(col("media_id")), Seq("media_id"))
+    ()
   }
 
   /** M8 — TAKEDOWN EXECUTED AGAINST THE AT-REST pHASH INDEX: build

@@ -1034,8 +1034,10 @@ object RetrievalOps {
     * directories are listed), repartitioned so each bucket lands as
     * ONE file, staged, and written back with DYNAMIC partition
     * overwrite — untouched buckets' files are never rewritten
-    * (RetrievalOpsSpec pins their file sets byte-identical), and the
-    * metadata tables need nothing: compaction moves bytes, not rows.
+    * (RetrievalOpsSpec pins their file sets byte-identical). The
+    * doc-bucketed `doclen`, which every append also accretes, compacts
+    * by the same pass; blockmeta, dict and consts need nothing:
+    * compaction moves bytes, not rows.
     *
     * Restart-safe without a log: a crash between staging and the
     * overwrite reruns from the top (staging rebuilds from the intact
@@ -1050,9 +1052,15 @@ object RetrievalOps {
     * (bands, winnow, positional, SAX counts, …) runs the identical
     * bin-pack instead of re-implementing it per layout. */
   private[graft] def compactPostingsIndex(s: SparkSession, root: String,
-      targetFiles: Int = 1): Seq[Int] =
-    AtRest.compactBucketedTable(s, s"$root/postings", "term_bucket",
+      targetFiles: Int = 1): Seq[Int] = {
+    val compacted = AtRest.compactBucketedTable(s, s"$root/postings",
+      "term_bucket", targetFiles)
+    // the doc-bucketed doclen accretes one file per touched doc bucket
+    // per append too; consts derive from it and need nothing
+    AtRest.compactBucketedTable(s, s"$root/doclen", "doc_bucket",
       targetFiles)
+    compacted
+  }
 
   /** IR19 — COMPACTED-INDEX SERVE: the postings lifecycle closed.
     * BUILD the standing index, APPEND the incoming batch (ir16 —
@@ -1081,18 +1089,6 @@ object RetrievalOps {
     compactPostingsIndex(s, root)
     serveFromIndex(s, root)
   }
-
-  /** The forget sweep's survivor frame — exposed so PlanContractSpec
-    * can pin the STATIC `term_bucket IN` partition predicate on the
-    * postings scan (only the deleted docs' terms' directories are
-    * listed or read). */
-  private[graft] def postingsForgetSurvivors(s: SparkSession,
-      root: String, delIds: DataFrame, targets: Seq[Int]): DataFrame =
-    s.read.parquet(s"$root/postings")
-      .filter(col("term_bucket").isin(targets: _*))
-      .join(broadcast(delIds), Seq("doc_id"), "left_anti")
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-        col("term_bucket"))
 
   /** FORGET EXECUTED AGAINST THE AT-REST POSTINGS INDEX — the c6
     * delete discipline on the one layout where a row's partition is
@@ -1144,8 +1140,8 @@ object RetrievalOps {
     // from the pinned request — overlap them (guide §2.6)
     AtRest.inParallel(
       () => if (tBuckets.nonEmpty) {
-      AtRest.overwriteBuckets(s, s"$root/postings", "term_bucket",
-        tBuckets, postingsForgetSurvivors(s, root, delIds, tBuckets))
+      AtRest.sweepBuckets(s, s"$root/postings", "term_bucket",
+        tBuckets, delIds, Seq("doc_id"))
       // subtractive metadata: recount ONLY the touched buckets from
       // the post-delete postings, replace their partitions (the
       // shared verb drops all-emptied buckets' blockmeta dirs)

@@ -944,17 +944,6 @@ object TextOps {
     * exactly its survivors and each unreplaced one its originals, so a
     * rerun's anti-join re-stages both to the same end state, and a
     * manifest at ANY intermediate point reads a well-formed store. */
-  /** The forget rewrite's survivor frame — exposed so PlanContractSpec
-    * can pin the STATIC partition predicate on the store scan (only
-    * the request's target directories are listed or read). */
-  private[graft] def shardForgetSurvivors(s: SparkSession, root: String,
-      reqKeys: DataFrame, targets: Seq[Int]): DataFrame =
-    s.read.parquet(s"$root/shards")
-      .filter(col("shard_id").isin(targets: _*))
-      .join(broadcast(reqKeys), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("n_tok"), col("h"), col("text"),
-        col("shard_id"))
-
   private[graft] def forgetShardStore(s: SparkSession, root: String,
       request: DataFrame): Unit = {
     // pinned eagerly: the survivors' plan below reads the very files
@@ -963,10 +952,9 @@ object TextOps {
       .localCheckpoint()
     val targets = req.select(col("shard_id")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    if (targets.nonEmpty) {
-      AtRest.overwriteBuckets(s, s"$root/shards", "shard_id", targets,
-        shardForgetSurvivors(s, root, req.select(col("doc_id")), targets))
-    }
+    AtRest.sweepBuckets(s, s"$root/shards", "shard_id", targets,
+      req.select(col("doc_id")), Seq("doc_id"))
+    ()
   }
 
   /** The manifest recount over the written store — BIT-IDENTICAL to

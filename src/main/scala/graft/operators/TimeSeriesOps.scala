@@ -708,40 +708,8 @@ object TimeSeriesOps {
             s.read.parquet(s"$root/consts"))
           .withColumn("u_bucket", userBucketCol(col("user_id")))
           .localCheckpoint() // feeds the words staging AND the bands delta
-        // both derived rewrites stage from the PINNED old/new word
-        // frames (never the files the other replaces) and land in
-        // disjoint tables — overlap them (guide §2.6). Each side:
-        // replace the touched buckets — every untouched user's row
-        // survives, every touched user's row is REPLACED (canonical
-        // order, stage pinning and the zero-survivor bucket drop all
-        // live in the shared verb); bands' affected buckets = the
-        // touched users' old ∪ new band keys' buckets
-        // (≤ 2·NumSegs·|touched|, listed driver-side)
-        AtRest.inParallel(
-          () => {
-            AtRest.overwriteBuckets(s, s"$root/words", "u_bucket", tBuckets,
-              s.read.parquet(s"$root/words")
-                .filter(col("u_bucket").isin(tBuckets: _*))
-                .join(broadcast(touched), Seq("user_id"), "left_anti")
-                .unionByName(newWords))
-            ()
-          },
-          () => {
-            val newBands = bandKeys(newWords)
-              .withColumn("bb_bucket", saxBandBucketCol(col("b"), col("bk")))
-              .select(col("user_id"), col("b"), col("bk"), col("bb_bucket"))
-              .localCheckpoint()
-            val bBuckets = bandKeys(oldWords)
-              .select(saxBandBucketCol(col("b"), col("bk")).as("bb_bucket"))
-              .unionByName(newBands.select(col("bb_bucket")))
-              .distinct().collect().map(_.getInt(0)).toSeq.sorted
-            AtRest.overwriteBuckets(s, s"$root/bands", "bb_bucket", bBuckets,
-              s.read.parquet(s"$root/bands")
-                .filter(col("bb_bucket").isin(bBuckets: _*))
-                .join(broadcast(touched), Seq("user_id"), "left_anti")
-                .unionByName(newBands))
-            ()
-          })
+        rewriteSaxDerived(s, root, touched, tBuckets, oldWords,
+          Some(newWords))
       }
     }
   }
@@ -818,24 +786,44 @@ object TimeSeriesOps {
       if (crashBeforeConsts) return // spec-planted crash point
       nc.write.mode("overwrite").parquet(s"$root/consts")
     } else {
-      // 3. bucket-scoped derived sweeps — disjoint tables, targets
-      // from the pinned request/oldWords: overlap (guide §2.6)
-      val bBuckets = bandKeys(oldWords)
-        .select(saxBandBucketCol(col("b"), col("bk")).as("bb_bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      AtRest.inParallel(
-        () => {
-          AtRest.sweepBuckets(s, s"$root/words", "u_bucket", uBuckets,
-            ids, Seq("user_id"))
-          ()
-        },
-        () => {
-          AtRest.sweepBuckets(s, s"$root/bands", "bb_bucket", bBuckets,
-            ids, Seq("user_id"))
-          ()
-        })
+      // 3. bucket-scoped derived sweeps
+      rewriteSaxDerived(s, root, ids, uBuckets, oldWords, None)
     }
   }
+
+  /** The derived tables' DELTA, shared by the update (ts10) and the
+    * forget (ts12): in `words` (the `users`' buckets, `uBuckets`) and
+    * `bands` (the buckets of the users' old ∪ new band keys,
+    * ≤ 2·NumSegs·|users|, listed driver-side) every row of the
+    * `users` is removed and their `newWords` (None for a forget) and
+    * its band keys land through the shared delta verb — every other
+    * user's row survives, and an emptied bucket drops its directory.
+    * Both sides stage from the PINNED old/new word frames (never the
+    * files the other replaces) and land in disjoint tables — overlap
+    * them (guide §2.6). */
+  private def rewriteSaxDerived(s: SparkSession, root: String,
+      users: DataFrame, uBuckets: Seq[Int], oldWords: DataFrame,
+      newWords: Option[DataFrame]): Unit =
+    AtRest.inParallel(
+      () => {
+        AtRest.sweepBuckets(s, s"$root/words", "u_bucket", uBuckets,
+          users, Seq("user_id"), add = newWords)
+        ()
+      },
+      () => {
+        val newBands = newWords.map(w => bandKeys(w)
+          .withColumn("bb_bucket", saxBandBucketCol(col("b"), col("bk")))
+          .select(col("user_id"), col("b"), col("bk"), col("bb_bucket"))
+          .localCheckpoint())
+        val oldB = bandKeys(oldWords)
+          .select(saxBandBucketCol(col("b"), col("bk")).as("bb_bucket"))
+        val bBuckets = newBands
+          .fold(oldB)(nb => oldB.unionByName(nb.select(col("bb_bucket"))))
+          .distinct().collect().map(_.getInt(0)).toSeq.sorted
+        AtRest.sweepBuckets(s, s"$root/bands", "bb_bucket", bBuckets,
+          users, Seq("user_id"), add = newBands)
+        ()
+      })
 
   /** TS12 — FORGET USERS FROM THE AT-REST SAX INDEX: build the full
     * index, EXECUTE the c4/c6 delete cohort ([[forgetSaxIndex]]), and

@@ -46,10 +46,10 @@ object MicroBatcher {
       items: Seq[String], reason: String)
 
   /** Buffer carried in GroupState: pending rows + per-key packet
-    * sequence counter + keys of the rows currently buffered + wall time
-    * the oldest pending row was buffered (0 when empty). */
-  case class Buf(pending: List[Rec], seq: Long, seenKeys: Set[String],
-      firstAt: Long)
+    * sequence counter + wall time the oldest pending row was buffered
+    * (0 when empty). The dedup set is the pending rows' own keys, so
+    * the state holds each buffered key once. */
+  case class Buf(pending: List[Rec], seq: Long, firstAt: Long)
 
   /** `clock` is injectable for deterministic tests; production uses the
     * wall clock, as the reference does
@@ -62,10 +62,11 @@ object MicroBatcher {
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (key: Int, rows: Iterator[Rec], state: GroupState[Buf]) =>
           val now = clock()
-          val prior = state.getOption.getOrElse(Buf(Nil, 0L, Set.empty, 0L))
+          val prior = state.getOption.getOrElse(Buf(Nil, 0L, 0L))
           // dedup new rows against the current buffer (G3, `:110-121`);
           // a timer call (hasTimedOut) brings no rows
-          val fresh = rows.filterNot(r => prior.seenKeys(r.recordKey))
+          val seen = prior.pending.iterator.map(_.recordKey).toSet
+          val fresh = rows.filterNot(r => seen(r.recordKey))
             .toList.distinctBy(_.recordKey)
           val all = prior.pending ++ fresh
           // count path: drain full packets (`:130-140`)
@@ -97,7 +98,7 @@ object MicroBatcher {
           // remainder is not overdue), so an emptied state is inert
           // until new input.
           state.update(Buf(kept, prior.seq + full.size + timeoutPackets.size,
-            kept.map(_.recordKey).toSet, if (kept.isEmpty) 0L else firstAt))
+            if (kept.isEmpty) 0L else firstAt))
           if (kept.nonEmpty) state.setTimeoutDuration(firstAt + timeoutMs - now)
           (countPackets ++ timeoutPackets).iterator
       }

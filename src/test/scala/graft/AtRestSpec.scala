@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.AtRest
 
-/** Unit pins for the shared maintenance verbs themselves — the three
+/** Unit pins for the shared maintenance verbs themselves — the four
   * traps [[graft.operators.AtRest.overwriteBuckets]] exists to own
   * (empty-partition drop, canonical column order, unpinned-stage
-  * self-read) exercised directly on a synthetic table, so a
-  * regression in the verb fails HERE with a one-table reproduction
-  * instead of inside some family's 30-second lifecycle test. */
+  * self-read, stray bucket) and the delta verb
+  * [[graft.operators.AtRest.sweepBuckets]] — exercised directly on a
+  * synthetic table, so a regression in the verb fails HERE with a
+  * one-table reproduction instead of inside some family's 30-second
+  * lifecycle test. */
 class AtRestSpec extends SparkSpec {
 
   private def rmRoot(root: String): Unit = {
@@ -259,6 +261,104 @@ class AtRestSpec extends SparkSpec {
     val present = AtRest.overwriteBuckets(spark, root, "b", Seq(1), staged)
     assert(present == Set(1) && rows(root) == Set((7L, "reseed", 1)),
       "re-seeding an emptied table through overwriteBuckets failed")
+  }
+
+  private def fileSig(root: String): Map[String, (Long, Long)] =
+    new java.io.File(root).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+
+  test("overwriteBuckets: a staged row OUTSIDE affected fails, naming the bucket, before any file changes") {
+    import spark.implicits._
+    val root = "target/graft-index/spec-atrest-stray"
+    rmRoot(root); seed(root)
+    val before = fileSig(root)
+    val rowsBefore = rows(root)
+    // bucket 3 is not affected: writing it would replace its 10
+    // standing rows with the one staged row
+    val staged = Seq((100L, "new", 1), (103L, "stray", 3))
+      .toDF("id", "payload", "b")
+    val e = intercept[IllegalArgumentException] {
+      AtRest.overwriteBuckets(spark, root, "b", Seq(1, 2), staged)
+    }
+    assert(e.getMessage.contains("b 3"), s"error does not name bucket 3: ${e.getMessage}")
+    assert(fileSig(root) == before && rows(root) == rowsBefore,
+      "a rejected stage changed the table")
+  }
+
+  test("sweepBuckets: a remove+add sweep replaces exactly the keyed rows, leaves untouched buckets byte-identical, and reruns as a row-level no-op") {
+    import spark.implicits._
+    val root = "target/graft-index/spec-atrest-delta"
+    rmRoot(root); seed(root)
+    def untouchedFiles = fileSig(root)
+      .filter(f => f._1.contains("/b=0/") || f._1.contains("/b=3/"))
+    val untouched = untouchedFiles
+    // id 1 (bucket 1) is replaced, id 2 (bucket 2) removed, id 102
+    // added to bucket 2; id 5 (bucket 1) is neither keyed nor added
+    val drop = Seq(1L, 2L).toDF("id")
+    val add = Seq((1L, "v1-new", 1), (102L, "added", 2))
+      .toDF("id", "payload", "b")
+    def sweep() = AtRest.sweepBuckets(spark, root, "b", Seq(1, 2), drop,
+      Seq("id"), add = Some(add))
+    assert(sweep() == Set(1, 2))
+    val expected = (0L until 40L).filterNot(Set(1L, 2L))
+      .map(i => (i, s"v$i", (i % 4).toInt)).toSet +
+      ((1L, "v1-new", 1)) + ((102L, "added", 2))
+    assert(rows(root) == expected, "the delta replaced the wrong rows")
+    assert(untouchedFiles == untouched, "an untouched bucket's files changed")
+    sweep()
+    assert(rows(root) == expected, "a rerun of the delta changed rows")
+  }
+
+  test("sweepBuckets: on an EMPTIED table the added rows land, exactly those") {
+    import spark.implicits._
+    val root = "target/graft-index/spec-atrest-emptied-add"
+    rmRoot(root); seed(root)
+    val all = (0L until 40L).toDF("id")
+    AtRest.sweepBuckets(spark, root, "b", Seq(0, 1, 2, 3), all, Seq("id"))
+    new java.io.File(s"$root/b=2").mkdirs() // a stale empty affected dir
+    val present = AtRest.sweepBuckets(spark, root, "b", Seq(1, 2), all,
+      Seq("id"), add = Some(Seq((7L, "reseed", 1)).toDF("id", "payload", "b")))
+    assert(present == Set(1) && rows(root) == Set((7L, "reseed", 1)),
+      s"the emptied-table delta landed ${rows(root)}")
+    assert(!new java.io.File(s"$root/b=2").exists(),
+      "the stale empty affected dir survived")
+  }
+
+  test("guard: every delta of a maintained table stages through AtRest.sweepBuckets") {
+    // an overwriteBuckets call whose stage hand-rolls the anti-join, or
+    // comes from a per-family survivor/scan helper, is a second copy of
+    // the delta verb (and must list the added rows' buckets by hand)
+    val helper = raw"""\b\w+(Survivors|Scan)\(""".r
+    def argsAt(text: String, open: Int): String = {
+      var depth = 0; var i = open; var inStr = false
+      val sb = new StringBuilder
+      while (i < text.length && !(depth == 0 && i > open)) {
+        val c = text(i)
+        if (inStr) { if (c == '"' && text(i - 1) != '\\') inStr = false }
+        else if (c == '"') inStr = true
+        else if (c == '(') depth += 1
+        else if (c == ')') depth -= 1
+        sb += c; i += 1
+      }
+      sb.toString
+    }
+    // the one direct delta kept: the d30 docsets stage reads through
+    // DedupOps.readDocsets' declared schema, which spares the schema-
+    // inference job the verb's plain read of the table costs
+    val exempt = Seq("s\"$root/docsets\"")
+    val call = "AtRest.overwriteBuckets("
+    val hits = for {
+      f <- scalaFiles(new java.io.File("src/main/scala/graft/operators"))
+      text = scala.io.Source.fromFile(f, "UTF-8").mkString
+      at <- Iterator.iterate(text.indexOf(call))(i => text.indexOf(call, i + 1))
+        .takeWhile(_ >= 0).toSeq
+      args = argsAt(text, at + call.length - 1)
+      if !exempt.exists(args.contains)
+      if args.contains("\"left_anti\"") || helper.findFirstIn(args).nonEmpty
+    } yield s"${f.getPath}:${text.take(at).count(_ == '\n') + 1}"
+    assert(hits.isEmpty,
+      s"hand-rolled sweep stages outside AtRest.sweepBuckets:\n${hits.mkString("\n")}")
   }
 
   test("healDerived: the derivation may READ the very table it replaces (the pin), partitioned and flat") {

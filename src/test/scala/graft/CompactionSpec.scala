@@ -228,6 +228,32 @@ class CompactionSpec extends SparkSpec {
     assertCompactionInvariants(root, "members", "dg_bucket")
   }
 
+  test("ir19: compaction packs the doc-bucketed doclen too — build + two appends leave at most one file per doclen bucket, doclen and consts rows unchanged") {
+    import spark.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    val root = "target/graft-index/spec-compact-doclen"
+    rmRoot(root)
+    RetrievalOps.writePostingsIndex(spark, root,
+      graft.sources.Tables.documents(spark, Sf))
+    // two appends, each spreading over several doc buckets
+    RetrievalOps.appendPostingsIndex(spark, root,
+      (930001L to 930040L).map(i => (i, s"doclenprobe t$i")).toDF("doc_id", "text"))
+    RetrievalOps.appendPostingsIndex(spark, root,
+      (940001L to 940040L).map(i => (i, s"doclenprobe u$i")).toDF("doc_id", "text"))
+    def canon(art: String) = spark.read.parquet(s"$root/$art")
+      .select(to_json(struct(col("*"))).as("j"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    val (doclenBefore, constsBefore) = (canon("doclen"), canon("consts"))
+    assert(fileSig(root, "doclen", "doc_bucket").values.exists(_.size > 1),
+      "fixture regression: the appends accreted no doclen bucket")
+    RetrievalOps.compactPostingsIndex(spark, root)
+    val after = fileSig(root, "doclen", "doc_bucket")
+    assert(after.nonEmpty && after.values.forall(_.size <= 1),
+      s"doclen buckets left with several files: ${after.filter(_._2.size > 1).keys}")
+    assert(canon("doclen") == doclenBefore, "compaction changed doclen rows")
+    assert(canon("consts") == constsBefore, "compaction changed consts")
+  }
+
   test("ir19 crash point: stage written, apply never ran — serve intact; the rerun completes") {
     import spark.implicits._
     spark.sharedState.cacheManager.clearCache()

@@ -77,4 +77,40 @@ class ExtensionsBuildSpec extends AnyFunSuite {
       SparkSession.clearDefaultSession()
     }
   }
+
+  test("the build-time and live-session paths expose the same SQL function names") {
+    def fresh(extensions: Boolean): SparkSession = {
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .foreach(_.stop())
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val b = SparkSession.builder()
+        .master("local[2]")
+        .appName("graft-extensions-names")
+        .config("spark.ui.enabled", "false")
+      (if (extensions) b.config("spark.sql.extensions", "graft.GraftExtensions")
+       else b).getOrCreate()
+    }
+    def names(s: SparkSession): Set[String] =
+      s.catalog.listFunctions().collect().map(_.name).toSet
+    def closed[A](s: SparkSession)(f: SparkSession => A): A =
+      try f(s) finally {
+        s.stop()
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+      }
+    val built = closed(fresh(extensions = true))(names)
+    val (plain, live) = closed(fresh(extensions = false)) { s =>
+      val before = names(s)
+      GraftExtensions.register(s)
+      (before, names(s))
+    }
+    val table = GraftExtensions.functions.map(_._1).toSet
+    assert(table.size == GraftExtensions.functions.size,
+      "a function name is listed twice in the registration table")
+    assert(built -- plain == table,
+      s"build-time path: ${built -- plain} vs table $table")
+    assert(live -- plain == table,
+      s"live-session path: ${live -- plain} vs table $table")
+  }
 }

@@ -156,7 +156,11 @@ class ForgetIndexSpec extends SparkSpec {
       .join(delIds, Seq("doc_id"), "left_semi")
       .select(col("term_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    RetrievalOps.postingsForgetSurvivors(spark, root, delIds, tBuckets)
+    // in the table's own column order, like the forget's own write
+    val order = spark.read.parquet(s"$root/postings").columns.map(col)
+    graft.operators.AtRest.sweepSurvivors(spark, s"$root/postings",
+        "term_bucket", tBuckets, delIds, Seq("doc_id"))
+      .select(order: _*)
       .localCheckpoint()
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("term_bucket").parquet(s"$root/postings")

@@ -708,91 +708,65 @@ class PlanContractSpec extends SparkSpec {
       "a consumer bypassed the cached distinct set and re-scanned parquet")
   }
 
-  test("c6: the forget's survivor read carries a STATIC shard predicate and lists only target dirs") {
-    val tx = graft.operators.TextOps
-    val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/shardpin6"
-    tx.writeShardStore(spark, root, graft.sources.Tables.documents(spark, Sf))
-    import spark.implicits._
-    val targets = Seq(3, 7)
-    val p = executed(tx.shardForgetSurvivors(spark, root,
-      Seq(30L, 70L).toDF("doc_id"), targets))
-    val storeScans = scans(p).filter(
-      _.relation.location.rootPaths.exists(_.toString.contains("shardpin6")))
-    assert(storeScans.nonEmpty, "store scan missing from the survivor plan")
-    val pf = storeScans.head.partitionFilters
-    assert(pf.exists(_.toString.contains("shard_id")),
-      s"survivor read lost its shard_id partition predicate: $pf")
-    val dirs = targets.map(b => s"shard_id=$b/").toSet
-    val listed = storeScans.head.relation.location
-      .listFiles(pf, storeScans.head.dataFilters)
-      .flatMap(_.files.map(_.getPath.toString))
-    assert(listed.nonEmpty && listed.forall(f => dirs.exists(f.contains)),
-      s"survivor read listed files outside the target shards: ${listed.take(3)}")
-  }
-
-  test("ir22: the forget sweep's survivor read carries a STATIC term_bucket predicate and lists only target dirs") {
-    val ro = graft.operators.RetrievalOps
-    val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/irpin22"
-    ro.writePostingsIndex(spark, root,
-      graft.sources.Tables.documents(spark, Sf))
-    import spark.implicits._
-    val targets = Seq(2, 9)
-    val p = executed(ro.postingsForgetSurvivors(spark, root,
-      Seq(30L, 70L).toDF("doc_id"), targets))
+  // pins a sweep's survivor read (the AtRest.sweepSurvivors tree every
+  // AtRest.sweepBuckets delta routes through): a STATIC predicate on the
+  // bucket column, only the target directories listed, and the request
+  // side broadcast into the anti-join
+  private def assertSweepPinned(table: String, pcol: String, targets: Seq[Int],
+      req: DataFrame, keys: Seq[String], tag: String): Unit = {
+    val p = executed(graft.operators.AtRest.sweepSurvivors(spark,
+      table, pcol, targets, req, keys))
     val idxScans = scans(p).filter(
-      _.relation.location.rootPaths.exists(_.toString.contains("irpin22")))
-    assert(idxScans.nonEmpty, "postings scan missing from the survivor plan")
+      _.relation.location.rootPaths.exists(_.toString.contains(tag)))
+    assert(idxScans.nonEmpty, s"$tag: table scan missing from the survivor plan")
     val pf = idxScans.head.partitionFilters
-    assert(pf.exists(_.toString.contains("term_bucket")),
-      s"survivor read lost its term_bucket partition predicate: $pf")
-    val dirs = targets.map(b => s"term_bucket=$b/").toSet
+    assert(pf.exists(_.toString.contains(pcol)),
+      s"$tag: survivor read lost its $pcol partition predicate: $pf")
+    val dirs = targets.map(b => s"$pcol=$b/").toSet
     val listed = idxScans.head.relation.location
       .listFiles(pf, idxScans.head.dataFilters)
       .flatMap(_.files.map(_.getPath.toString))
     assert(listed.nonEmpty && listed.forall(f => dirs.exists(f.contains)),
-      s"survivor read listed files outside the target buckets: ${listed.take(3)}")
+      s"$tag: survivor read listed files outside the target buckets: ${listed.take(3)}")
+    assert(collectAll(p) { case b: BroadcastExchangeExec => b }.nonEmpty,
+      s"$tag: the request side must broadcast into the anti-join")
+  }
+
+  test("c6: the forget's survivor read carries a STATIC shard predicate and lists only target dirs") {
+    val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/shardpin6"
+    graft.operators.TextOps.writeShardStore(spark, root,
+      graft.sources.Tables.documents(spark, Sf))
+    import spark.implicits._
+    assertSweepPinned(s"$root/shards", "shard_id", Seq(3, 7),
+      Seq(30L, 70L).toDF("doc_id"), Seq("doc_id"), "shardpin6")
+  }
+
+  test("ir22: the forget sweep's survivor read carries a STATIC term_bucket predicate and lists only target dirs") {
+    val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/irpin22"
+    graft.operators.RetrievalOps.writePostingsIndex(spark, root,
+      graft.sources.Tables.documents(spark, Sf))
+    import spark.implicits._
+    assertSweepPinned(s"$root/postings", "term_bucket", Seq(2, 9),
+      Seq(30L, 70L).toDF("doc_id"), Seq("doc_id"), "irpin22")
   }
 
   test("dq8: the enforcement's survivor read carries a STATIC qi_bucket predicate and lists only violating dirs") {
-    val ao = graft.operators.AuditOps
     val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/dqpin8"
-    ao.writeRelease(spark, root, graft.sources.Tables.documents(spark, Sf))
+    graft.operators.AuditOps.writeRelease(spark, root,
+      graft.sources.Tables.documents(spark, Sf))
     import spark.implicits._
-    val targets = Seq(1, 6)
     val bad = Seq(("xx", "web", 3)).toDF("lang", "source", "len_bucket")
-    val p = executed(ao.releaseEnforceSurvivors(spark, root, bad, targets))
-    val relScans = scans(p).filter(
-      _.relation.location.rootPaths.exists(_.toString.contains("dqpin8")))
-    assert(relScans.nonEmpty, "release scan missing from the survivor plan")
-    val pf = relScans.head.partitionFilters
-    assert(pf.exists(_.toString.contains("qi_bucket")),
-      s"survivor read lost its qi_bucket partition predicate: $pf")
-    val dirs = targets.map(b => s"qi_bucket=$b/").toSet
-    val listed = relScans.head.relation.location
-      .listFiles(pf, relScans.head.dataFilters)
-      .flatMap(_.files.map(_.getPath.toString))
-    assert(listed.nonEmpty && listed.forall(f => dirs.exists(f.contains)),
-      s"survivor read listed files outside the violating buckets: ${listed.take(3)}")
+    assertSweepPinned(s"$root/release", "qi_bucket", Seq(1, 6),
+      bad, Seq("lang", "source", "len_bucket"), "dqpin8")
   }
 
   test("m8: the takedown's bands scan carries a STATIC chunk_bucket predicate and lists only target dirs") {
     val mm = graft.operators.MultimodalOps
     val root = graft.operators.SimilarityOps.indexRoot(spark, Sf) + "/m8pin"
     mm.writePhashStore(spark, root, mm.media(spark, Sf))
-    val targets = Seq(4, 11)
-    val p = executed(mm.bandsTakedownScan(spark, root, targets))
-    val idxScans = scans(p).filter(
-      _.relation.location.rootPaths.exists(_.toString.contains("m8pin")))
-    assert(idxScans.nonEmpty, "bands scan missing from the sweep plan")
-    val pf = idxScans.head.partitionFilters
-    assert(pf.exists(_.toString.contains("chunk_bucket")),
-      s"sweep read lost its chunk_bucket partition predicate: $pf")
-    val dirs = targets.map(b => s"chunk_bucket=$b/").toSet
-    val listed = idxScans.head.relation.location
-      .listFiles(pf, idxScans.head.dataFilters)
-      .flatMap(_.files.map(_.getPath.toString))
-    assert(listed.nonEmpty && listed.forall(f => dirs.exists(f.contains)),
-      s"sweep read listed files outside the target buckets: ${listed.take(3)}")
+    import spark.implicits._
+    assertSweepPinned(s"$root/bands", "chunk_bucket", Seq(4, 11),
+      Seq(("image", 30L)).toDF("kind", "rep_id"), Seq("kind", "rep_id"), "m8pin")
   }
 
   test("shared sweep verb: every round-17 forget's survivor read carries a STATIC bucket predicate and lists only target dirs (ir23/d31/d32/d33/x33)") {
@@ -816,24 +790,9 @@ class PlanContractSpec extends SparkSpec {
       (s"$base/sweeppin32/kept", "h_bucket", "doc_id", "sweeppin32"),
       (s"$base/sweeppin33/chunks", "chunk_bucket", "doc_id", "sweeppin33"),
       (s"$base/sweeppinx33/codes", "cell_id", "vec_id", "sweeppinx33"))
-    val targets = Seq(2, 9)
     families.foreach { case (table, pcol, key, tag) =>
-      val p = executed(graft.operators.AtRest.sweepSurvivors(spark,
-        table, pcol, targets, Seq(30L, 70L).toDF(key), Seq(key)))
-      val idxScans = scans(p).filter(
-        _.relation.location.rootPaths.exists(_.toString.contains(tag)))
-      assert(idxScans.nonEmpty, s"$tag: table scan missing from the survivor plan")
-      val pf = idxScans.head.partitionFilters
-      assert(pf.exists(_.toString.contains(pcol)),
-        s"$tag: survivor read lost its $pcol partition predicate: $pf")
-      val dirs = targets.map(b => s"$pcol=$b/").toSet
-      val listed = idxScans.head.relation.location
-        .listFiles(pf, idxScans.head.dataFilters)
-        .flatMap(_.files.map(_.getPath.toString))
-      assert(listed.nonEmpty && listed.forall(f => dirs.exists(f.contains)),
-        s"$tag: survivor read listed files outside the target buckets: ${listed.take(3)}")
-      assert(collectAll(p) { case b: BroadcastExchangeExec => b }.nonEmpty,
-        s"$tag: the request side must broadcast into the anti-join")
+      assertSweepPinned(table, pcol, Seq(2, 9),
+        Seq(30L, 70L).toDF(key), Seq(key), tag)
     }
   }
 

@@ -133,7 +133,8 @@ class ShardAtRestSpec extends SparkSpec {
     // partition got replaced with its survivors, the rest still hold
     // their originals — then the operator reruns from the top
     val crashed = byShard.keys.min
-    TextOps.shardForgetSurvivors(spark, rootA, req, Seq(crashed))
+    graft.operators.AtRest.sweepSurvivors(spark, s"$rootA/shards",
+        "shard_id", Seq(crashed), req, Seq("doc_id"))
       .localCheckpoint()
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
