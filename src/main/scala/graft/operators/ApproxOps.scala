@@ -426,7 +426,7 @@ object ApproxOps {
     if (targets.nonEmpty) {
       AtRest.overwriteBuckets(s, s"$root/kmv", "h_bucket", targets,
         bottomKPerBucket(
-          s.read.parquet(s"$root/kmv")
+          AtRest.read(s, s"$root/kmv")
             .filter(col("h_bucket").isin(targets: _*))
             .unionByName(delta).distinct()))
     }
@@ -449,7 +449,7 @@ object ApproxOps {
   private def perLangSketch(s: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("lang")).orderBy(col("h"))
-    s.read.parquet(s"$root/kmv")
+    AtRest.read(s, s"$root/kmv")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= KmvK)
       .groupBy(col("lang"))

@@ -3,26 +3,31 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import scala.jdk.CollectionConverters._
 import java.util.concurrent.{CancellationException, ExecutionException,
   ExecutorCompletionService, Executors}
 
 /** Shared maintenance for the bucket-partitioned at-rest index
-  * layouts, and their ONE writer. Every bucketed parquet write in the
+  * layouts, and their ONE reader and ONE writer. Every scan of an
+  * at-rest table in `graft.operators` goes through [[AtRest.read]],
+  * which types the scan from one data file's footer on the driver, so
+  * no read starts a schema-inference job (AtRestSpec's guard fails on
+  * any other parquet read there). Every bucketed parquet write in the
   * program — a family's build, append, forget, heal, compaction and
   * re-bucketing — lands through [[AtRest.land]] (AtRestSpec's guard
   * fails on a partitioned writer anywhere else in `src/main`; the
   * byte-target compaction stage is the one in-file exception).
   * `land` owns, once, the rules each call site used to re-argue:
   *   1. CANONICAL COLUMN ORDER: an append or dynamic overwrite into a
-  *      table that already has files projects the table's own column
-  *      order (read from one file footer), so a directory never mixes
-  *      two field orders (the d23 trap); a whole-table overwrite keeps
-  *      the frame's order;
+  *      table that already has files projects the column order
+  *      [[AtRest.read]] returns, so a directory never mixes two field
+  *      orders (the d23 trap); a whole-table overwrite keeps the
+  *      frame's order;
   *   2. CLUSTER BY BUCKET: one `repartition(bucket)` exchange, so each
   *      bucket lands as ONE file instead of tasks × buckets files;
   *   3. PIN ONLY WHEN NEEDED: the frame is `localCheckpoint`ed exactly
@@ -40,10 +45,8 @@ import java.util.concurrent.{CancellationException, ExecutionException,
   * bucket directories. Its tail, [[AtRest.overwriteBuckets]], rejects
   * a stage holding a bucket outside the affected list before writing,
   * and is called directly only by stages that RECOUNT a bucket from
-  * another table or migrate rows, plus d30's docsets sweep, whose
-  * declared-schema read spares a schema-inference job (AtRestSpec's
-  * sweep guard fails on any other direct call that hand-rolls the
-  * anti-join).
+  * another table or migrate rows (AtRestSpec's sweep guard fails on a
+  * direct call that hand-rolls the anti-join).
   *
   * Every maintained family (postings, positional, shingle, bands,
   * winnow, SAX, z-order, vector cells) appends ≥1 new data
@@ -147,22 +150,6 @@ object AtRest {
     ids.select(docBucketCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
-  /** The bucket directories of a partitioned table, lazily, as
-    * (bucket, directory) — empty for a missing table directory. */
-  private def bucketDirs(s: SparkSession, table: String,
-      partitionCol: String): Iterator[(Int, Path)] = {
-    val fs = fsOf(s, table)
-    if (!fs.exists(new Path(table))) return Iterator.empty
-    fs.listStatus(new Path(table)).iterator
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol="))
-      .map(d => d.getPath.getName.stripPrefix(s"$partitionCol=").toInt ->
-        d.getPath)
-  }
-
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-
   /** Data files per bucket partition of a partitioned table —
     * driver-side FS listing, O(#files) layout metadata (the same
     * bookkeeping a table format's manifest gives for free). A missing
@@ -171,26 +158,56 @@ object AtRest {
   private[graft] def bucketFiles(s: SparkSession, table: String,
       partitionCol: String): Map[Int, Seq[FileStatus]] = {
     val fs = fsOf(s, table)
-    bucketDirs(s, table, partitionCol)
-      .map { case (b, d) => b -> dataFiles(fs, d) }.toMap
+    if (!fs.exists(new Path(table))) return Map.empty
+    fs.listStatus(new Path(table)).iterator
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$partitionCol="))
+      .map(d => d.getPath.getName.stripPrefix(s"$partitionCol=").toInt ->
+        fs.listStatus(d.getPath).toSeq
+          .filter(_.getPath.getName.endsWith(".parquet")))
+      .toMap
   }
 
-  /** The column order a read of `table` returns — its files' data
-    * columns, then the bucket column — read from ONE data file's
-    * footer on the driver (no schema-inference job); None while the
-    * table holds no data file. */
-  private def fileOrder(s: SparkSession, table: String,
-      bucketCol: String): Option[Seq[String]] = {
+  /** The first data file of `table` — at its root, or in a `<col>=<n>`
+    * bucket directory, whose column comes with it — skipping the
+    * `_`/`.` names Spark's own listing skips; None for a missing or
+    * file-less table. One driver-side walk, stopped at the first file. */
+  private[graft] def firstDataFile(s: SparkSession,
+      table: String): Option[(FileStatus, Option[String])] = {
     val fs = fsOf(s, table)
-    bucketDirs(s, table, bucketCol).flatMap(d => dataFiles(fs, d._2))
-      .nextOption().map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st,
-          s.sparkContext.hadoopConfiguration))
-        try r.getFileMetaData.getSchema.getFields.asScala
-          .map(_.getName).toSeq :+ bucketCol
-        finally r.close()
-      }
+    def listed(p: Path) = fs.listStatus(p).iterator
+      .filterNot(st => "_.".contains(st.getPath.getName.head))
+    if (!fs.exists(new Path(table))) None
+    else listed(new Path(table)).flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isFile) Iterator(st -> Option.empty[String])
+      else if (name.contains("=")) listed(st.getPath).filter(_.isFile)
+        .map(_ -> Some(name.takeWhile(_ != '=')))
+      else Iterator.empty
+    }.nextOption()
   }
+
+  /** The schema a read of `table` returns — the Spark row schema in one
+    * data file's footer, then the bucket column as `int`, the type
+    * partition inference gives it — read on the driver, so no Spark job
+    * runs; None while the table holds no data file. */
+  private def schemaOf(s: SparkSession, table: String): Option[StructType] =
+    firstDataFile(s, table).map { case (st, bucketCol) =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st,
+        s.sparkContext.hadoopConfiguration))
+      val data = try DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+        finally r.close()
+      bucketCol.fold(data)(data.add(_, IntegerType))
+    }
+
+  /** THE at-rest reader: a scan of `table` typed from [[schemaOf]], so
+    * it starts no Spark job of its own and still carries a
+    * `HadoopFsRelation` ([[readsTable]] sees it). A table with no data
+    * file fails exactly as a plain read does. */
+  private[graft] def read(s: SparkSession, table: String): DataFrame =
+    schemaOf(s, table).fold(s.read.parquet(table))(
+      s.read.schema(_).parquet(table))
 
   /** Whether `df`'s analyzed plan (subqueries included) scans `table`,
     * a path under it, or a directory holding it — the frames a write
@@ -210,7 +227,8 @@ object AtRest {
   }
 
   /** THE bucketed at-rest writer (see the object doc for the four
-    * rules it owns). `mode` is `append`, `overwrite` (the whole table)
+    * rules it owns; rule 1's order is the schema [[read]] takes from
+    * the table's footer). `mode` is `append`, `overwrite` (the whole table)
     * or `dynamic` (dynamic partition overwrite: only the buckets
     * present in `df` are replaced). */
   private[graft] def land(s: SparkSession, table: String, bucketCol: String,
@@ -219,8 +237,8 @@ object AtRest {
       s"land mode must be append, overwrite or dynamic: $mode")
     val ordered =
       if (mode == "overwrite") df
-      else fileOrder(s, table, bucketCol)
-        .fold(df)(cols => df.select(cols.map(col): _*))
+      else schemaOf(s, table)
+        .fold(df)(t => df.select(t.fieldNames.toSeq.map(col): _*))
     val clustered = ordered.repartition(col(bucketCol))
     val stable =
       if (readsTable(s, df, table)) clustered.localCheckpoint() else clustered
@@ -249,7 +267,7 @@ object AtRest {
       partitionCol: String, buckets: Seq[Int],
       sortCols: Seq[Column] = Nil): Unit =
     land(s, s"${table}_staging", partitionCol,
-      s.read.parquet(table).filter(col(partitionCol).isin(buckets: _*)),
+      read(s, table).filter(col(partitionCol).isin(buckets: _*)),
       "overwrite", sortCols)
 
   /** Replace exactly the staged buckets via dynamic partition
@@ -258,7 +276,7 @@ object AtRest {
     * staging write overwrites it wholesale). */
   private[graft] def applyCompaction(s: SparkSession, table: String,
       partitionCol: String, sortCols: Seq[Column] = Nil): Unit = {
-    land(s, table, partitionCol, s.read.parquet(s"${table}_staging"),
+    land(s, table, partitionCol, read(s, s"${table}_staging"),
       "dynamic", sortCols)
     fsOf(s, table).delete(new Path(s"${table}_staging"), true)
     ()
@@ -309,7 +327,7 @@ object AtRest {
           df.write.mode("overwrite")
             .option("partitionOverwriteMode", overwrite)
             .partitionBy(partitionCol).parquet(out)
-        spreadWrite(s.read.parquet(table)
+        spreadWrite(read(s, table)
           .filter(col(partitionCol).isin(affected: _*))
           .withColumn("__salt", pmod(monotonically_increasing_id(), nOf))
           .repartition(math.max(1, aPlan.values.sum),
@@ -318,7 +336,7 @@ object AtRest {
           .transform(d => if (sortCols.isEmpty) d
             else d.sortWithinPartitions(col(partitionCol) +: sortCols: _*)),
           s"${table}_staging", "static")
-        spreadWrite(s.read.parquet(s"${table}_staging"), table, "dynamic")
+        spreadWrite(read(s, s"${table}_staging"), table, "dynamic")
         fsOf(s, table).delete(new Path(s"${table}_staging"), true)
       }
       return affected
@@ -407,7 +425,7 @@ object AtRest {
   private[graft] def sweepSurvivors(s: SparkSession, table: String,
       partitionCol: String, affected: Seq[Int], drop: DataFrame,
       keys: Seq[String]): DataFrame =
-    s.read.parquet(table)
+    read(s, table)
       .filter(col(partitionCol).isin(affected: _*))
       .join(broadcast(drop), keys, "left_anti")
 
@@ -472,9 +490,8 @@ object AtRest {
       crashAfterLand: Boolean = false): Unit = {
     require(newN > oldN && newN % oldN == 0,
       s"re-bucket grows by an integer factor: $oldN -> $newN")
-    if (!bucketFiles(s, table, partitionCol).valuesIterator
-        .exists(_.nonEmpty)) return // emptied table: nothing to move
-    val rows = s.read.parquet(table)
+    if (firstDataFile(s, table).isEmpty) return // emptied: nothing to move
+    val rows = read(s, table)
     val movers = rows.filter(col(partitionCol) < oldN)
       .withColumn("__nb", newBucket)
       .filter(col("__nb") =!= col(partitionCol))
@@ -498,7 +515,7 @@ object AtRest {
     if (crashAfterLand) return // spec-planted crash point: (1)→(2)
     // 2. RESOLVE: the affected old buckets keep exactly their stayers
     overwriteBuckets(s, table, partitionCol, affected,
-      s.read.parquet(table)
+      read(s, table)
         .filter(col(partitionCol).isin(affected: _*))
         .filter(newBucket === col(partitionCol)),
       sortCols)
@@ -536,24 +553,24 @@ object AtRest {
     * and takedowns pass the fresh rows, which must fall in `affected`
     * ([[overwriteBuckets]] rejects a stray bucket before writing).
     * An affected bucket left with no rows has its directory deleted.
-    * The stage is (survivors ∪ add): when `drop` keys every added row,
-    * a rerun with the same `drop` and `add` removes the landed rows
-    * and lands them again — a row-level no-op. */
+    * The stage is (survivors ∪ add), the survivors scanned through
+    * [[read]]: when `drop` keys every added row, a rerun with the same
+    * `drop` and `add` removes the landed rows and lands them again — a
+    * row-level no-op. */
   private[graft] def sweepBuckets(s: SparkSession, table: String,
       partitionCol: String, affected: Seq[Int], drop: DataFrame,
       keys: Seq[String], add: Option[DataFrame] = None,
       sortCols: Seq[Column] = Nil): Set[Int] = {
     if (affected.isEmpty) return Set.empty
     val stage =
-      if (bucketFiles(s, table, partitionCol).valuesIterator
-          .exists(_.nonEmpty)) {
+      if (firstDataFile(s, table).nonEmpty) {
         val survivors =
           sweepSurvivors(s, table, partitionCol, affected, drop, keys)
         Some(add.fold(survivors)(survivors.unionByName(_)))
       } else add
     // EMPTIED table (every bucket already dropped — e.g. a forget rerun
-    // after a total forget): no files for the survivor read to infer a
-    // schema from, so only the added rows stage; with none, the stale
+    // after a total forget): no data file for the survivor read to take
+    // a schema from, so only the added rows stage; with none, the stale
     // empty affected dirs are still deleted so the layout converges
     stage.fold {
       val fs = fsOf(s, table)

@@ -247,7 +247,7 @@ object AuditOps {
     * publishes a row the completed enforcement would not. */
   private[graft] def enforceKAnonymity(s: SparkSession,
       root: String): Unit = {
-    val bad = s.read.parquet(s"$root/release")
+    val bad = AtRest.read(s, s"$root/release")
       .groupBy(col("lang"), col("source"), col("len_bucket"),
         col("qi_bucket"))
       .agg(count(lit(1)).as("n_docs"))
@@ -319,7 +319,7 @@ object AuditOps {
       else Nil
     val complete = gens.filter(st => fs.exists(
       new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-    val cells = s.read.parquet(s"$root/release")
+    val cells = AtRest.read(s, s"$root/release")
       .groupBy(col("lang"), col("source"), col("len_bucket"),
         col("qi_bucket"))
       .agg(count(lit(1)).as("n_docs"))
@@ -329,8 +329,8 @@ object AuditOps {
         (col("len_bucket") / 2).cast("int").as("band"))
       .distinct()
     val badBands = (if (complete.nonEmpty)
-        freshBad.unionByName(
-          s.read.parquet(complete.map(_.getPath.toString): _*)).distinct()
+        complete.map(g => AtRest.read(s, g.getPath.toString))
+          .foldLeft(freshBad)(_ unionByName _).distinct()
       else freshBad)
       .localCheckpoint()
     // the cells that physically move: odd buckets of bad bands
@@ -355,7 +355,7 @@ object AuditOps {
       badBands.write.mode("overwrite")
         .parquet(s"$intent/gen=$next")
       if (crashAfterIntent) return // spec-planted crash point: (0)→(1)
-      val inOld = s.read.parquet(s"$root/release")
+      val inOld = AtRest.read(s, s"$root/release")
         .filter(col("qi_bucket").isin(oldBuckets: _*))
       val moverKeys = movers
         .select(col("lang"), col("source"), col("len_bucket"))
@@ -380,7 +380,7 @@ object AuditOps {
       // yet-unmoved OLD row for an already-landed copy and silently
       // drop the move
       AtRest.land(s, s"$root/release", "qi_bucket",
-        moved.join(s.read.parquet(s"$root/release")
+        moved.join(AtRest.read(s, s"$root/release")
             .filter(col("qi_bucket").isin(newBuckets: _*))
             .select(col("doc_id"), col("len_bucket")),
           Seq("doc_id", "len_bucket"), "left_anti"),
@@ -426,7 +426,7 @@ object AuditOps {
     writeRelease(s, root, Tables.documents(s, dir))
     generalizeKAnonymity(s, root)
     enforceKAnonymity(s, root)
-    kAnonCells(s.read.parquet(s"$root/release")
+    kAnonCells(AtRest.read(s, s"$root/release")
         .groupBy(col("lang"), col("source"), col("len_bucket"))
         .agg(count(lit(1)).as("n_docs")))
       .transform(Common.presented(_,
@@ -454,7 +454,7 @@ object AuditOps {
     val root = SimilarityOps.indexRoot(s, dir) + "/release8"
     writeRelease(s, root, Tables.documents(s, dir))
     enforceKAnonymity(s, root)
-    kAnonCells(s.read.parquet(s"$root/release")
+    kAnonCells(AtRest.read(s, s"$root/release")
         .groupBy(col("lang"), col("source"), col("len_bucket"))
         .agg(count(lit(1)).as("n_docs")))
       .transform(Common.presented(_,

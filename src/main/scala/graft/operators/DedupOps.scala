@@ -1246,7 +1246,7 @@ object DedupOps {
       docs: DataFrame): Unit = {
     AtRest.land(s, s"$root/postings", "sh_bucket", shinglePostings(docs),
       "overwrite")
-    val p = s.read.parquet(s"$root/postings")
+    val p = AtRest.read(s, s"$root/postings")
     AtRest.land(s, s"$root/shset", "sh_bucket",
       p.select(col("sh_bucket"), col("h")).distinct(), "overwrite")
     AtRest.land(s, s"$root/docstats", "ds_bucket", docStatsOf(p),
@@ -1277,18 +1277,18 @@ object DedupOps {
     // three consumers: postings anti-join, dictionary delta, stats
     CacheScope.persist(full)
     AtRest.land(s, s"$root/postings", "sh_bucket",
-      full.join(s.read.parquet(s"$root/postings")
+      full.join(AtRest.read(s, s"$root/postings")
           .select(col("h"), col("doc_id")),
         Seq("h", "doc_id"), "left_anti"),
       "append")
     AtRest.land(s, s"$root/shset", "sh_bucket",
       full.select(col("sh_bucket"), col("h")).distinct()
-        .join(s.read.parquet(s"$root/shset").select(col("h")),
+        .join(AtRest.read(s, s"$root/shset").select(col("h")),
           Seq("h"), "left_anti"),
       "append")
     AtRest.land(s, s"$root/docstats", "ds_bucket",
       docStatsOf(full)
-        .join(s.read.parquet(s"$root/docstats").select(col("doc_id")),
+        .join(AtRest.read(s, s"$root/docstats").select(col("doc_id")),
           Seq("doc_id"), "left_anti"),
       "append")
   }
@@ -1318,7 +1318,7 @@ object DedupOps {
       AtRest.sweepBuckets(s, s"$root/postings", "sh_bucket", tBuckets,
         ids, Seq("doc_id"))
       AtRest.overwriteBuckets(s, s"$root/shset", "sh_bucket", tBuckets,
-        s.read.parquet(s"$root/postings")
+        AtRest.read(s, s"$root/postings")
           .filter(col("sh_bucket").isin(tBuckets: _*))
           .select(col("sh_bucket"), col("h")).distinct())
     }
@@ -1367,12 +1367,12 @@ object DedupOps {
     * non-probed bucket is ever touched. */
   private[graft] def serveDecontamFrom(s: SparkSession, root: String,
       probe: DataFrame): DataFrame = {
-    val hits = s.read.parquet(s"$root/postings")
+    val hits = AtRest.read(s, s"$root/postings")
       .join(broadcast(probe),
         col("sh_bucket") === col("p_bucket") && col("h") === col("p_h"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("hit_cnt"))
-    s.read.parquet(s"$root/docstats")
+    AtRest.read(s, s"$root/docstats")
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_shingles"),
         coalesce(col("hit_cnt"), lit(0L)).as("n_overlap"))
@@ -1436,7 +1436,7 @@ object DedupOps {
     tagged.filter(col("split") =!= "train")
       .select(col("doc_id"), col("split"),
         explode(hashedShingleSet(tokens(col("text")), DecontamK)).as("h"))
-      .join(s.read.parquet(s"$root/shset")
+      .join(AtRest.read(s, s"$root/shset")
           .select(col("h"), lit(1).as("in_train")),
         Seq("h"), "left")
       .groupBy(col("doc_id"), col("split"))
@@ -1484,10 +1484,10 @@ object DedupOps {
   private[graft] def writeWinnowIndex(s: SparkSession, root: String,
       docs: DataFrame): Unit = {
     AtRest.land(s, s"$root/wfp", "h_bucket", bucketedWfp(docs), "overwrite")
-    val w = s.read.parquet(s"$root/wfp")
+    val w = AtRest.read(s, s"$root/wfp")
     AtRest.land(s, s"$root/wdf", "h_bucket", wdfOf(w), "overwrite")
     AtRest.land(s, s"$root/kept", "h_bucket",
-      keptOf(w, s.read.parquet(s"$root/wdf")), "overwrite")
+      keptOf(w, AtRest.read(s, s"$root/wdf")), "overwrite")
   }
 
   /** Per-hash document frequency of `wfp` rows — ONE derivation for
@@ -1540,7 +1540,7 @@ object DedupOps {
     // pinned for the stats delta and the `kept` append below: re-read
     // after its own land, the anti-join would filter itself out
     val newRows = bfp
-      .join(s.read.parquet(s"$root/wfp").select(col("h"), col("doc_id")),
+      .join(AtRest.read(s, s"$root/wfp").select(col("h"), col("doc_id")),
         Seq("h", "doc_id"), "left_anti")
       .localCheckpoint()
     AtRest.land(s, s"$root/wfp", "h_bucket", newRows, "append")
@@ -1548,7 +1548,7 @@ object DedupOps {
     // hashes an earlier append already evicted — this batch's
     // eviction rewrite must be driven by the CROSSING delta, not by
     // every bucket that ever held boilerplate
-    val preOver = s.read.parquet(s"$root/wdf")
+    val preOver = AtRest.read(s, s"$root/wdf")
       .filter(col("nd") > WinnowCap).select(col("h"))
       .localCheckpoint()
     // the DF merge is BUCKET-SCOPED (round 16): wdf holds one row per
@@ -1562,7 +1562,7 @@ object DedupOps {
       .collect().map(_.getInt(0)).toSeq.sorted
     if (dfBuckets.nonEmpty) {
       AtRest.land(s, s"$root/wdf", "h_bucket",
-        s.read.parquet(s"$root/wdf")
+        AtRest.read(s, s"$root/wdf")
           .filter(col("h_bucket").isin(dfBuckets: _*))
           .unionByName(deltaDf)
           .groupBy(col("h_bucket"), col("h"))
@@ -1571,7 +1571,7 @@ object DedupOps {
     }
     // the merged over-cap set: tiny by the |fp|/Cap bound — its rows
     // broadcast into the eviction anti-join and the append filter
-    val over = s.read.parquet(s"$root/wdf")
+    val over = AtRest.read(s, s"$root/wdf")
       .filter(col("nd") > WinnowCap).select(col("h"), col("h_bucket"))
       .localCheckpoint()
     val evictBuckets = over.join(preOver, Seq("h"), "left_anti")
@@ -1594,10 +1594,10 @@ object DedupOps {
     * row-level no-op) then this heal restores the exact rebuilt
     * state. */
   private[graft] def healWinnowIndex(s: SparkSession, root: String): Unit = {
-    val w = s.read.parquet(s"$root/wfp")
+    val w = AtRest.read(s, s"$root/wfp")
     AtRest.healDerived(s, s"$root/wdf", wdfOf(w), Seq("h_bucket"))
     AtRest.healDerived(s, s"$root/kept",
-      keptOf(w, s.read.parquet(s"$root/wdf")), Seq("h_bucket"))
+      keptOf(w, AtRest.read(s, s"$root/wdf")), Seq("h_bucket"))
   }
 
   /** d26's probe core: d18's verdict with the index side replaced by
@@ -1617,7 +1617,7 @@ object DedupOps {
       // descends from a persisted frame, so without a visible filter
       // the PartitionPruning rule never inserts the pruning subquery
       .filter(col("p_bucket") >= 0)
-    val hits = s.read.parquet(s"$root/kept")
+    val hits = AtRest.read(s, s"$root/kept")
       .join(broadcast(probe),
         col("h_bucket") === col("p_bucket") && col("h") === col("p_h"))
       .select(col("p_doc").as("doc_id"), col("doc_id").as("match_doc"))
@@ -1679,7 +1679,7 @@ object DedupOps {
     if (tBuckets.isEmpty) return
     AtRest.sweepBuckets(s, s"$root/wfp", "h_bucket", tBuckets,
       ids, Seq("doc_id"))
-    def inTargets(table: String) = s.read.parquet(s"$root/$table")
+    def inTargets(table: String) = AtRest.read(s, s"$root/$table")
       .filter(col("h_bucket").isin(tBuckets: _*))
     AtRest.overwriteBuckets(s, s"$root/wdf", "h_bucket", tBuckets,
       wdfOf(inTargets("wfp")))
@@ -1708,7 +1708,7 @@ object DedupOps {
     writeWinnowIndex(s, root, docs)
     forgetWinnowIndex(s, root, docs.filter(
       col("doc_id") % TextOps.ForgetMod === TextOps.ForgetRem))
-    s.read.parquet(s"$root/kept")
+    AtRest.read(s, s"$root/kept")
       .select(col("doc_id"), col("h"))
       .transform(Common.presented(_, col("doc_id"), col("h")))
   }
@@ -1733,7 +1733,7 @@ object DedupOps {
       docs.filter(col("doc_id") % IncomingMod =!= 0))
     appendWinnowIndex(s, root,
       docs.filter(col("doc_id") % IncomingMod === 0))
-    s.read.parquet(s"$root/kept")
+    AtRest.read(s, s"$root/kept")
       .select(col("doc_id"), col("h"))
       .transform(Common.presented(_, col("doc_id"), col("h")))
   }
@@ -1820,30 +1820,15 @@ object DedupOps {
     AtRest.land(s, s"$root/docsets", "id_bucket",
       hsets.select(col("doc_id"), col("bg"),
           idBucketCol(col("doc_id")).as("id_bucket"))
-        .join(s.read.parquet(s"$root/docsets").select(col("doc_id")),
+        .join(AtRest.read(s, s"$root/docsets").select(col("doc_id")),
           Seq("doc_id"), "left_anti"),
       "append")
     AtRest.land(s, s"$root/bands", "band_bucket",
       bandRows(hsets)
-        .join(s.read.parquet(s"$root/bands")
+        .join(AtRest.read(s, s"$root/bands")
             .select(col("doc_id"), col("band")),
           Seq("doc_id", "band"), "left_anti"),
       "append")
-  }
-
-  /** The docsets read with the layout contract RE-ASSERTED: parquet
-    * read-back defaults every array to nullable elements, but the
-    * written sets come from [[graft.functions.HashedShingleSet]]
-    * (containsNull = false) and the compiled sorted-merge verify
-    * rightly REJECTS nullable elements rather than miscounting them —
-    * so the reader declares the type the writer guaranteed. */
-  private def readDocsets(s: SparkSession, root: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.read.schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("bg", ArrayType(LongType, containsNull = false)),
-        StructField("id_bucket", IntegerType))))
-      .parquet(s"$root/docsets")
   }
 
   /** The d2 verify + flag tree over candidate pairs and two
@@ -1888,13 +1873,13 @@ object DedupOps {
     * cluster build (ONE pair rule, so the maintained clusters cannot
     * drift from the audit's edges). */
   private[graft] def bandPairsFrom(s: SparkSession, root: String): DataFrame = {
-    val bands = s.read.parquet(s"$root/bands")
+    val bands = AtRest.read(s, s"$root/bands")
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    val ds = readDocsets(s, root).select(col("doc_id"), col("bg"))
+    val ds = AtRest.read(s, s"$root/docsets").select(col("doc_id"), col("bg"))
     verifyPairs(cand, ds, ds)
   }
 
@@ -1947,7 +1932,7 @@ object DedupOps {
       // PartitionPruning rule cannot see them — without a visible
       // selective predicate the bands scan silently reads every bucket
       .filter(col("p_bucket") >= 0)
-    val cand = s.read.parquet(s"$root/bands")
+    val cand = AtRest.read(s, s"$root/bands")
       .join(broadcast(probe),
         col("band_bucket") === col("p_bucket") &&
           col("band") === col("p_band") && col("sig") === col("p_sig"))
@@ -1955,7 +1940,7 @@ object DedupOps {
       .distinct()
     val slb = cand.withColumn("b_bucket", idBucketCol(col("b")))
       .filter(col("b_bucket") >= 0) // same load-bearing domain constraint
-    val fetched = readDocsets(s, root)
+    val fetched = AtRest.read(s, s"$root/docsets")
       .join(broadcast(slb),
         col("id_bucket") === col("b_bucket") && col("doc_id") === col("b"))
       .select(col("a"), col("b"), col("bg").as("bgb"))
@@ -2036,7 +2021,7 @@ object DedupOps {
       batch: DataFrame): Unit =
     AtRest.land(s, s"$root/chunks", "chunk_bucket",
       simChunkRows(simhash60Of(batch))
-        .join(s.read.parquet(s"$root/chunks")
+        .join(AtRest.read(s, s"$root/chunks")
             .select(col("doc_id"), col("band")),
           Seq("doc_id", "band"), "left_anti"),
       "append")
@@ -2068,7 +2053,7 @@ object DedupOps {
     * build-append form (d28) and the post-forget form (d33), so the
     * two serves cannot drift. */
   private def simhashAuditFrom(s: SparkSession, root: String): DataFrame = {
-    val chunks = s.read.parquet(s"$root/chunks")
+    val chunks = AtRest.read(s, s"$root/chunks")
     val cand = chunks.as("x").join(chunks.as("y"),
         col("x.band") === col("y.band") && col("x.chunk") === col("y.chunk") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -2144,7 +2129,7 @@ object DedupOps {
       // descends from a persisted frame, so without a visible filter
       // the PartitionPruning rule never inserts the pruning subquery
       .filter(col("p_bucket") >= 0)
-    val verdicts = s.read.parquet(s"$root/chunks")
+    val verdicts = AtRest.read(s, s"$root/chunks")
       .join(broadcast(probe),
         col("chunk_bucket") === col("p_bucket") &&
           col("band") === col("p_band") && col("chunk") === col("p_chunk"))
@@ -2269,7 +2254,7 @@ object DedupOps {
         col("sig").as("p_sig"), col("band_bucket").as("p_bucket"))
       // load-bearing selective predicate (x17's lesson)
       .filter(col("p_bucket") >= 0)
-    val cand = s.read.parquet(s"$root/bands")
+    val cand = AtRest.read(s, s"$root/bands")
       .join(broadcast(probe),
         col("band_bucket") === col("p_bucket") &&
           col("band") === col("p_band") && col("sig") === col("p_sig"))
@@ -2279,7 +2264,7 @@ object DedupOps {
       .distinct()
       .withColumn("a_bucket", idBucketCol(col("a")))
       .filter(col("a_bucket") >= 0)
-    val fa = readDocsets(s, root)
+    val fa = AtRest.read(s, s"$root/docsets")
       .join(broadcast(cand),
         col("id_bucket") === col("a_bucket") && col("doc_id") === col("a"))
       .select(col("a"), col("b"), col("bg").as("bga"))
@@ -2288,7 +2273,7 @@ object DedupOps {
     val inter = graft.functions.ShingleExpressions
       .sortedIntersectCount(col("bga"), col("bgb")).cast("long")
     val uni = (size(col("bga")) + size(col("bgb"))).cast("long") - inter
-    readDocsets(s, root)
+    AtRest.read(s, s"$root/docsets")
       .join(broadcast(fa),
         col("id_bucket") === col("b_bucket") && col("doc_id") === col("b"))
       .select(col("a"), col("b"), col("bga"), col("bg").as("bgb"))
@@ -2306,7 +2291,7 @@ object DedupOps {
       .withColumn("e_bucket", idBucketCol(col("d")))
       // load-bearing selective predicate (x17's lesson)
       .filter(col("e_bucket") >= 0)
-    s.read.parquet(s"$root/members")
+    AtRest.read(s, s"$root/members")
       .join(broadcast(e),
         col("d_bucket") === col("e_bucket") && col("doc_id") === col("d"))
       .select(col("doc_id"), col("cluster_id"))
@@ -2347,7 +2332,7 @@ object DedupOps {
       .collect().map(_.getInt(0)).toSeq.sorted
     val stars =
       if (tBuckets.isEmpty) newPairs.limit(0)
-      else s.read.parquet(s"$root/clusters")
+      else AtRest.read(s, s"$root/clusters")
         .filter(col("c_bucket").isin(tBuckets: _*))
         .join(broadcast(touched), Seq("cluster_id"))
         .filter(col("doc_id") =!= col("cluster_id"))
@@ -2388,7 +2373,7 @@ object DedupOps {
     appendBandIndex(s, root, batch)
     updateClusters(s, root, batch)
     shapeClusters(s, dir,
-      s.read.parquet(s"$root/clusters")
+      AtRest.read(s, s"$root/clusters")
         .select(col("doc_id"), col("cluster_id").as("label")))
   }
 
@@ -2415,7 +2400,7 @@ object DedupOps {
       .withColumn("e_bucket", idBucketCol(col("d")))
       // load-bearing selective predicate (x17's lesson)
       .filter(col("e_bucket") >= 0)
-    readDocsets(s, root)
+    AtRest.read(s, s"$root/docsets")
       .join(broadcast(e),
         col("id_bucket") === col("e_bucket") && col("doc_id") === col("d"))
       .select(col("doc_id"), col("bg"))
@@ -2446,13 +2431,9 @@ object DedupOps {
           ids, Seq("doc_id"))
         ()
       },
-      // staged through readDocsets' declared schema, which spares the
-      // schema-inference job the shared verb's plain read would add
-      () => if (dBuckets.nonEmpty) {
-        AtRest.overwriteBuckets(s, s"$root/docsets", "id_bucket", dBuckets,
-          readDocsets(s, root)
-            .filter(col("id_bucket").isin(dBuckets: _*))
-            .join(broadcast(ids), Seq("doc_id"), "left_anti"))
+      () => {
+        AtRest.sweepBuckets(s, s"$root/docsets", "id_bucket", dBuckets,
+          ids, Seq("doc_id"))
         ()
       })
   }
@@ -2490,7 +2471,7 @@ object DedupOps {
     val oldRows =
       if (tBuckets.isEmpty) delIds.limit(0)
         .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      else s.read.parquet(s"$root/clusters")
+      else AtRest.read(s, s"$root/clusters")
         .filter(col("c_bucket").isin(tBuckets: _*))
         .join(broadcast(touched), Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"))
@@ -2547,7 +2528,7 @@ object DedupOps {
     val isDel = col("doc_id") % TextOps.ForgetMod === TextOps.ForgetRem
     forgetClusters(s, root, docs.filter(isDel).select(col("doc_id")))
     shapeClustersOver(docs.filter(!isDel),
-      s.read.parquet(s"$root/clusters")
+      AtRest.read(s, s"$root/clusters")
         .select(col("doc_id"), col("cluster_id").as("label")))
   }
 

@@ -173,7 +173,7 @@ object LayoutOps {
     AtRest.land(s, s"$root/rows", "cell",
       zCoords(ev, col("event_id")).withColumn("cell", col("cell").cast("int")),
       "overwrite")
-    cellAgg(s.read.parquet(s"$root/rows"))
+    cellAgg(AtRest.read(s, s"$root/rows"))
       .write.mode("overwrite").parquet(s"$root/stats")
   }
 
@@ -182,7 +182,7 @@ object LayoutOps {
     val bc = CacheScope.persist(zCoords(batch, col("event_id"))
       .withColumn("cell", col("cell").cast("int")))
     AtRest.land(s, s"$root/rows", "cell", bc, "append")
-    s.read.parquet(s"$root/stats")
+    AtRest.read(s, s"$root/stats")
       .unionByName(cellAgg(bc))
       .groupBy(col("cell"))
       .agg(sum(col("n_rows")).as("n_rows"),
@@ -199,7 +199,7 @@ object LayoutOps {
     * BETWEEN residual. */
   private def rectangleRead(s: SparkSession, root: String): DataFrame = {
     val cells = cellsForRange(RectU0, RectU1, RectD0, RectD1)
-    s.read.parquet(s"$root/rows")
+    AtRest.read(s, s"$root/rows")
       .filter(col("cell").isin(cells.map(_.toInt): _*) &&
         col("u").between(RectU0, RectU1) &&
         col("day").between(RectD0, RectD1))
@@ -248,7 +248,7 @@ object LayoutOps {
   private[graft] def forgetZorder(s: SparkSession, root: String,
       delUs: Seq[Long]): Unit = {
     if (delUs.isEmpty) return
-    val b = s.read.parquet(s"$root/stats")
+    val b = AtRest.read(s, s"$root/stats")
       .agg(min(col("day_min")), max(col("day_max"))).collect()(0)
     if (b.isNullAt(0)) return
     val cells = delUs.flatMap(u => cellsForRange(u, u, b.getLong(0),
@@ -260,9 +260,9 @@ object LayoutOps {
         org.apache.spark.sql.types.StructField("u",
           org.apache.spark.sql.types.LongType))))
     AtRest.sweepBuckets(s, s"$root/rows", "cell", cells, req, Seq("u"))
-    s.read.parquet(s"$root/stats")
+    AtRest.read(s, s"$root/stats")
       .filter(!col("cell").isin(cells: _*))
-      .unionByName(cellAgg(s.read.parquet(s"$root/rows")
+      .unionByName(cellAgg(AtRest.read(s, s"$root/rows")
         .filter(col("cell").isin(cells: _*))
         .select(col("u"), col("day"), col("cell"))))
       // the pinned merge is KB-scale: land it as ONE sidecar file
@@ -288,7 +288,7 @@ object LayoutOps {
     // the request: every u ≡ ForgetRem (mod ForgetMod) in the indexed
     // u range — the range bound is one KB stats read, and the id list
     // is driver metadata (request-sized, the c6 convention)
-    val maxU = s.read.parquet(s"$root/stats")
+    val maxU = AtRest.read(s, s"$root/stats")
       .agg(max(col("u_max"))).collect()(0).getLong(0)
     forgetZorder(s, root,
       (0L to maxU).filter(_ % TextOps.ForgetMod == TextOps.ForgetRem))

@@ -289,7 +289,7 @@ object MultimodalOps {
     AtRest.land(s, s"$root/bands", "chunk_bucket",
       phashChunks(s, dir).withColumn("chunk_bucket", chunkBucketCol),
       "overwrite")
-    phashPairs(s.read.parquet(s"$root/bands").drop("chunk_bucket"))
+    phashPairs(AtRest.read(s, s"$root/bands").drop("chunk_bucket"))
       .transform(Common.presented(_, col("kind"), col("a"), col("b")))
   }
 
@@ -307,7 +307,7 @@ object MultimodalOps {
         col("band").as("p_band"), col("chunk").as("p_chunk"))
       .withColumn("p_bucket",
         pmod(col("p_chunk") + col("p_band"), lit(ChunkBuckets)).cast("int"))
-    s.read.parquet(s"$root/bands")
+    AtRest.read(s, s"$root/bands")
       .join(broadcast(p),
         col("chunk_bucket") === col("p_bucket") &&
           col("kind") === col("p_kind") && col("band") === col("p_band") &&
@@ -406,12 +406,7 @@ object MultimodalOps {
     val groups = reqFacts
       .select(col("kind"), col("digest"), col("phash")).distinct()
       .localCheckpoint()
-    // the members layout's schema is declared, not inferred: the sweep
-    // in stage 4 reads the table again, and a declared read costs no
-    // schema-inference job
-    val memb = s.read
-      .schema("kind STRING, digest STRING, media_id BIGINT, dg_bucket INT")
-      .parquet(s"$root/members")
+    val memb = AtRest.read(s, s"$root/members")
       .filter(col("dg_bucket").isin(dBuckets: _*))
     val affected = memb.join(broadcast(groups.select(col("kind"),
       col("digest"))), Seq("kind", "digest"), "left_semi")
@@ -466,7 +461,7 @@ object MultimodalOps {
     writePhashStore(s, root, med)
     takedownPhash(s, root,
       med.filter(col("media_id") % TextOps.ForgetMod === TextOps.ForgetRem))
-    phashPairs(s.read.parquet(s"$root/bands").drop("chunk_bucket"))
+    phashPairs(AtRest.read(s, s"$root/bands").drop("chunk_bucket"))
       .transform(Common.presented(_, col("kind"), col("a"), col("b")))
   }
 

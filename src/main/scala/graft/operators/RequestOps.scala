@@ -95,14 +95,23 @@ object RequestOps {
   private[graft] def fallback(field: String): Column =
     coalesce(col(s"e.$field"), col(s"e.inv.$field"))
 
-  /** T3 reject taxonomy: the first missing required field, in the
-    * reference's throw order (stax `:65` → sid `:78` → api_type
-    * `:95`); null when the element is valid. Shared by [[rejectsCore]]
-    * and `RequestPipeline.transform`. */
-  private[graft] def rejectReason(stax: Column, sid: Column, apiType: Column): Column =
-    when(stax.isNull, lit("stax is null"))
-      .when(sid.isNull, lit("sid is null"))
-      .when(apiType.isNull, lit("api_type is null"))
+  /** T3's required fields and reject reasons in the reference's throw
+    * order (stax `:65` → sid `:78` → api_type `:95`): the ONE statement
+    * of T3 validity that [[rejectReason]] and [[isValid]] both fold. */
+  private def requiredLegs(stax: Column, sid: Column, apiType: Column) =
+    Seq(stax -> "stax is null", sid -> "sid is null", apiType -> "api_type is null")
+
+  /** T3 reject taxonomy: the first missing required field; null when
+    * the element is valid. Shared by [[rejectsCore]] and
+    * `RequestPipeline.transform`. */
+  private[graft] def rejectReason(stax: Column, sid: Column, apiType: Column): Column = {
+    val (c0, r0) +: rest = requiredLegs(stax, sid, apiType): @unchecked
+    rest.foldLeft(when(c0.isNull, lit(r0))) { case (w, (c, r)) => w.when(c.isNull, lit(r)) }
+  }
+
+  /** T3 validity: every required field present. */
+  private def isValid(stax: Column, sid: Column, apiType: Column): Column =
+    requiredLegs(stax, sid, apiType).map(_._1.isNotNull).reduce(_ && _)
 
   /** T4 `group_id = pos % groupIdBuckets`: the round-robin bucket from
     * the element's packet position (`InvoiceRequestTransformer.java:101-102`).
@@ -138,7 +147,7 @@ object RequestOps {
     * so only its provenance is projected, per SURVEY §5.5). */
   def validate(s: SparkSession, dir: String): DataFrame =
     extracted(s, dir)
-      .filter(col("stax").isNotNull && col("sid").isNotNull && col("api_type").isNotNull)
+      .filter(isValid(col("stax"), col("sid"), col("api_type")))
       .select(
         col("event_id"),
         col("stax"),

@@ -824,9 +824,9 @@ object RetrievalOps {
     AtRest.inParallel(
       () => {
         AtRest.land(s, s"$root/blockmeta", "term_bucket",
-          blockMetaOf(s.read.parquet(s"$root/postings")), "overwrite")
+          blockMetaOf(AtRest.read(s, s"$root/postings")), "overwrite")
         AtRest.land(s, s"$root/dict", "term_bucket",
-          dictFromMeta(s.read.parquet(s"$root/blockmeta")), "overwrite")
+          dictFromMeta(AtRest.read(s, s"$root/blockmeta")), "overwrite")
       },
       () => {
         // the per-doc length table — index metadata in its own right (dl
@@ -853,7 +853,7 @@ object RetrievalOps {
     * the plan reads doclen, never consts, so the overwrite needs no
     * pin. Build, append, forget and heal all end with it. */
   private def recountConsts(s: SparkSession, root: String): Unit =
-    s.read.parquet(s"$root/doclen")
+    AtRest.read(s, s"$root/doclen")
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl").cast("long")), lit(0L)).as("total_tokens"))
       .withColumn("avgdl",
@@ -896,7 +896,7 @@ object RetrievalOps {
     // and filter ITSELF out, silently dropping the batch from the
     // metadata merge (the checkpoint severs the lineage first)
     val bp = postingsArtifacts(batch)
-      .join(s.read.parquet(s"$root/postings")
+      .join(AtRest.read(s, s"$root/postings")
         .select(col("tok"), col("doc_id")), Seq("tok", "doc_id"),
         "left_anti")
       .localCheckpoint()
@@ -919,7 +919,7 @@ object RetrievalOps {
     AtRest.inParallel(
       () => if (mBuckets.nonEmpty) {
         AtRest.land(s, s"$root/blockmeta", "term_bucket",
-          s.read.parquet(s"$root/blockmeta")
+          AtRest.read(s, s"$root/blockmeta")
             .filter(col("term_bucket").isin(mBuckets: _*))
             .unionByName(deltaMeta)
             .groupBy(col("term_bucket"), col("tok"), col("blk"))
@@ -928,7 +928,7 @@ object RetrievalOps {
               sum(col("n_postings")).as("n_postings")),
           "dynamic")
         AtRest.land(s, s"$root/dict", "term_bucket",
-          dictFromMeta(s.read.parquet(s"$root/blockmeta")
+          dictFromMeta(AtRest.read(s, s"$root/blockmeta")
             .filter(col("term_bucket").isin(mBuckets: _*))),
           "dynamic")
       },
@@ -938,7 +938,7 @@ object RetrievalOps {
         // constants recount from the at-rest table
         AtRest.land(s, s"$root/doclen", "doc_bucket",
           docLenOf(batch)
-            .join(s.read.parquet(s"$root/doclen").select(col("doc_id")),
+            .join(AtRest.read(s, s"$root/doclen").select(col("doc_id")),
               Seq("doc_id"), "left_anti"),
           "append")
         recountConsts(s, root)
@@ -955,9 +955,9 @@ object RetrievalOps {
   private[graft] def healPostingsMetadata(s: SparkSession,
       root: String): Unit = {
     AtRest.healDerived(s, s"$root/blockmeta",
-      blockMetaOf(s.read.parquet(s"$root/postings")), Seq("term_bucket"))
+      blockMetaOf(AtRest.read(s, s"$root/postings")), Seq("term_bucket"))
     AtRest.healDerived(s, s"$root/dict",
-      dictFromMeta(s.read.parquet(s"$root/blockmeta")), Seq("term_bucket"))
+      dictFromMeta(AtRest.read(s, s"$root/blockmeta")), Seq("term_bucket"))
     recountConsts(s, root)
   }
 
@@ -1147,12 +1147,12 @@ object RetrievalOps {
       // shared verb drops all-emptied buckets' blockmeta dirs)
       val mStaged = AtRest.overwriteBuckets(s, s"$root/blockmeta",
         "term_bucket", tBuckets,
-        blockMetaOf(s.read.parquet(s"$root/postings")
+        blockMetaOf(AtRest.read(s, s"$root/postings")
           .filter(col("term_bucket").isin(tBuckets: _*))))
       if (mStaged.nonEmpty) {
         AtRest.overwriteBuckets(s, s"$root/dict", "term_bucket",
           tBuckets,
-          dictFromMeta(s.read.parquet(s"$root/blockmeta")
+          dictFromMeta(AtRest.read(s, s"$root/blockmeta")
             .filter(col("term_bucket").isin(mStaged.toSeq: _*))))
       } else {
         // every touched bucket emptied: blockmeta holds no readable
@@ -1243,15 +1243,15 @@ object RetrievalOps {
       // visible comparison the PartitionPruning rule never inserts
       // the pruning subquery on either read
       .filter(col("p_bucket") >= 0)
-    val probed = s.read.parquet(s"$root/postings")
+    val probed = AtRest.read(s, s"$root/postings")
       .join(broadcast(probeTerms),
         col("term_bucket") === col("p_bucket") && col("tok") === col("p_tok"))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-    val dict = s.read.parquet(s"$root/dict")
+    val dict = AtRest.read(s, s"$root/dict")
       .join(broadcast(probeTerms),
         col("term_bucket") === col("p_bucket") && col("tok") === col("p_tok"))
       .select(col("tok"), col("df"))
-    val consts = s.read.parquet(s"$root/consts")
+    val consts = AtRest.read(s, s"$root/consts")
       .select(col("n_docs"), col("avgdl"))
     serveQueryBatch(queries, probed, dict, consts)
       .transform(Common.presented(_, col("query_id"), col("rank")))
@@ -1272,11 +1272,11 @@ object RetrievalOps {
       n: Int = TermBuckets): DataFrame = {
     val dfAggs = QueryTerms.map(t =>
       coalesce(max(when(col("tok") === t, col("df"))), lit(0L)).as(s"df_$t"))
-    val dfs = s.read.parquet(s"$root/dict")
+    val dfs = AtRest.read(s, s"$root/dict")
       .filter(col("term_bucket").isin(probeBuckets(n): _*) &&
         col("tok").isin(QueryTerms: _*))
       .agg(dfAggs.head, dfAggs.tail: _*)
-    s.read.parquet(s"$root/consts").crossJoin(dfs)
+    AtRest.read(s, s"$root/consts").crossJoin(dfs)
   }
 
   /** The partition-pruned probe read: ONLY the query terms' bucket
@@ -1285,7 +1285,7 @@ object RetrievalOps {
     * keeps the probed terms inside those buckets. */
   private def probedPostings(s: SparkSession, root: String,
       n: Int = TermBuckets): DataFrame =
-    s.read.parquet(s"$root/postings")
+    AtRest.read(s, s"$root/postings")
       .filter(col("term_bucket").isin(probeBuckets(n): _*) &&
         col("tok").isin(QueryTerms: _*))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
@@ -1380,7 +1380,7 @@ object RetrievalOps {
           tfPart(col("max_tf"), col("min_dl").cast("double") / col("avgdl")))
         .otherwise(els)
     }
-    val meta = s.read.parquet(s"$root/blockmeta")
+    val meta = AtRest.read(s, s"$root/blockmeta")
       .filter(col("term_bucket").isin(probeBuckets(): _*) &&
         col("tok").isin(QueryTerms: _*))
       .crossJoin(broadcast(stats))
@@ -1461,7 +1461,7 @@ object RetrievalOps {
       batch: DataFrame): Unit =
     AtRest.land(s, s"$root/positional", "term_bucket",
       positionalRows(batch)
-        .join(s.read.parquet(s"$root/positional")
+        .join(AtRest.read(s, s"$root/positional")
             .select(col("tok"), col("doc_id"), col("pos")),
           Seq("tok", "doc_id", "pos"), "left_anti"),
       "append", positionalOrder)
@@ -1516,7 +1516,7 @@ object RetrievalOps {
     val (w1, w2) = Phrase
     val buckets = Seq(w1, w2).map(termBucketOf(_)).distinct
     phraseFromPositional(
-      s.read.parquet(s"$root/positional")
+      AtRest.read(s, s"$root/positional")
         .filter(col("term_bucket").isin(buckets: _*) &&
           col("tok").isin(w1, w2))
         .select(col("doc_id"), col("dl"), col("pos"), col("tok")))

@@ -774,7 +774,7 @@ object SimilarityOps {
     * instead. */
   private def refreshOccupancy(s: SparkSession, root: String): Unit =
     AtRest.healDerived(s, s"$root/occupancy",
-      s.read.parquet(s"$root/codes")
+      AtRest.read(s, s"$root/codes")
         .groupBy(col("cell_id").cast("long").as("cell_id"))
         .agg(count(lit(1)).as("n_cell_existing")))
 
@@ -788,7 +788,7 @@ object SimilarityOps {
     * ONE reader shared by the serve and append paths, so the two can
     * never drift on the code layout (e.g. a [[PqM]] change). */
   private def readCodes(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/codes")
+    AtRest.read(s, s"$root/codes")
       .select(col("vec_id"), col("cell_id"),
         posexplode(array(col("code0"), col("code1"), col("code2"), col("code3"))))
       .withColumnRenamed("pos", "m").withColumnRenamed("col", "code")
@@ -796,12 +796,12 @@ object SimilarityOps {
   private[graft] def serveFrom(s: SparkSession, root: String, queries: DataFrame,
       nProbe: Int): DataFrame = {
     val codes = readCodes(s, root)
-    val probes = coarseProbe(queries, s.read.parquet(s"$root/coarse"), nProbe)
+    val probes = coarseProbe(queries, AtRest.read(s, s"$root/coarse"), nProbe)
       .select(col("vec_id").as("query_id"),
         col("cell_id").cast("int").as("q_cell"))
     val qsub = pqSubvectors(queries, "query_id", "qm", "qs")
     val dt = qsub.join(probes, Seq("query_id"))
-      .join(s.read.parquet(s"$root/pq"), col("qm") === col("cm"))
+      .join(AtRest.read(s, s"$root/pq"), col("qm") === col("cm"))
       .select(col("query_id"), col("q_cell"), col("qm").as("m"), col("cent_id"),
         pqD2(col("qs"), col("cs")).as("pd"))
     val adc = codes.join(broadcast(dt),
@@ -956,9 +956,9 @@ object SimilarityOps {
     * FROZEN index, so manifests are invariant to micro-batch cuts. */
   private[graft] def appendManifest(s: SparkSession, root: String,
       incoming: DataFrame, cacheBatch: Boolean = true): DataFrame = {
-    val coarse = s.read.parquet(s"$root/coarse")
-    val cents = s.read.parquet(s"$root/pq")
-    val occupancy = s.read.parquet(s"$root/occupancy")
+    val coarse = AtRest.read(s, s"$root/coarse")
+    val cents = AtRest.read(s, s"$root/pq")
+    val occupancy = AtRest.read(s, s"$root/occupancy")
     val exCodes = readCodes(s, root)
     // one batch pass carries cell + subvectors together: the ADC table,
     // the encode, and the manifest row all derive from the assigned
@@ -1057,7 +1057,7 @@ object SimilarityOps {
     // must not land the same vector twice — rows already present in
     // their target cells drop out via a DPP-pruned standing read (the
     // admission check's shape: only the target cells' files scan)
-    val standing = s.read.parquet(s"$root/codes")
+    val standing = AtRest.read(s, s"$root/codes")
       .join(broadcast(targetCells), Seq("cell_id"))
       .select(col("vec_id"))
     AtRest.land(s, s"$root/codes", "cell_id",
@@ -1068,11 +1068,11 @@ object SimilarityOps {
     // second write SELF-HEALING: a rerun after a crash between the
     // codes append and the stats write finds `fresh` empty yet still
     // repairs the touched cells' counts.
-    val touched = s.read.parquet(s"$root/codes")
+    val touched = AtRest.read(s, s"$root/codes")
       .join(broadcast(targetCells), Seq("cell_id"))
       .groupBy(col("cell_id").cast("long").as("cell_id"))
       .agg(count(lit(1)).as("n_cell_existing"))
-    s.read.parquet(s"$root/occupancy").localCheckpoint()
+    AtRest.read(s, s"$root/occupancy").localCheckpoint()
       .join(targetCells.select(col("cell_id").cast("long").as("cell_id")),
         Seq("cell_id"), "left_anti")
       .unionByName(touched)
@@ -1129,7 +1129,7 @@ object SimilarityOps {
     * mark and the rewrite are separate, restartable steps). */
   private[graft] def markTombstones(s: SparkSession, root: String,
       deletePred: Column = col("vec_id") % DeleteMod === DeleteRem): Unit =
-    s.read.parquet(s"$root/codes")
+    AtRest.read(s, s"$root/codes")
       .filter(deletePred)
       .select(col("vec_id"), col("cell_id"))
       .write.mode("overwrite").parquet(s"$root/tombstones")
@@ -1141,14 +1141,14 @@ object SimilarityOps {
     * (PlanContractSpec asserts it), then the tombstoned vec_ids drop
     * out by anti-join. */
   private[graft] def compactionStage(s: SparkSession, root: String): DataFrame = {
-    val tombs = s.read.parquet(s"$root/tombstones")
+    val tombs = AtRest.read(s, s"$root/tombstones")
     // the cell_id >= 0 domain constraint (cells are coarse-centroid
     // ids) is load-bearing: Spark's PartitionPruning rule only inserts
     // the pruning subquery when the build side carries a selective
     // predicate — without one the codes scan silently reads every cell
     val affected = tombs.filter(col("cell_id") >= 0)
       .select(col("cell_id")).distinct()
-    s.read.parquet(s"$root/codes")
+    AtRest.read(s, s"$root/codes")
       .join(broadcast(affected), Seq("cell_id"))
       .join(tombs.select(col("vec_id")), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("code0"), col("code1"), col("code2"),
@@ -1176,7 +1176,7 @@ object SimilarityOps {
       deletePred: Column = col("vec_id") % DeleteMod === DeleteRem,
       crashAfterOverwrite: Boolean = false): Unit = {
     markTombstones(s, root, deletePred)
-    val tombs = s.read.parquet(s"$root/tombstones").localCheckpoint()
+    val tombs = AtRest.read(s, s"$root/tombstones").localCheckpoint()
     // restart-safe: a re-run after a completed OR crashed compaction
     // resolves an EMPTY delete set (the tombstoned ids are already
     // gone from the codes), so there is nothing to stage — but the
@@ -1202,7 +1202,7 @@ object SimilarityOps {
     // _SUCCESS) — nothing to overwrite, and no schema to read
     if (stagedCells.nonEmpty)
       AtRest.land(s, s"$root/codes", "cell_id",
-        s.read.parquet(s"$root/staging"), "dynamic")
+        AtRest.read(s, s"$root/staging"), "dynamic")
     if (crashAfterOverwrite) return // spec-planted crash point
     // the empty-partition drop: tombstoned cells that staged ZERO
     // survivors keep their stale directory under dynamic overwrite —
@@ -1224,17 +1224,16 @@ object SimilarityOps {
     // an all-cells-deleted compaction leaves codes with no files at
     // all — nothing to recount (the emptied-table guard class)
     val recounted =
-      if (!AtRest.bucketFiles(s, s"$root/codes", "cell_id")
-          .valuesIterator.exists(_.nonEmpty))
-        s.read.parquet(s"$root/occupancy")
+      if (AtRest.firstDataFile(s, s"$root/codes").isEmpty)
+        AtRest.read(s, s"$root/occupancy")
           .filter(lit(false))
           .select(col("cell_id"), col("n_cell_existing"))
       else
-        s.read.parquet(s"$root/codes")
+        AtRest.read(s, s"$root/codes")
           .filter(col("cell_id").isin(affected.map(_.toInt): _*))
           .groupBy(col("cell_id").cast("long").as("cell_id"))
           .agg(count(lit(1)).as("n_cell_existing"))
-    s.read.parquet(s"$root/occupancy").localCheckpoint()
+    AtRest.read(s, s"$root/occupancy").localCheckpoint()
       .filter(!col("cell_id").isin(affected.map(_.toLong): _*))
       .unionByName(recounted.localCheckpoint())
       .write.mode("overwrite").parquet(s"$root/occupancy")
@@ -1487,7 +1486,7 @@ object SimilarityOps {
     val root = indexRoot(s, dir) + "/sq8"
     sq8Packed(sq8Codes(s, dir).select(col("vec_id"), col("d"), col("code")))
       .write.mode("overwrite").parquet(root)
-    val t = s.read.parquet(root)
+    val t = AtRest.read(s, root)
     val q = t.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("codes").as("qcodes"))
     val w = Window.partitionBy(col("query_id"))
@@ -1544,7 +1543,7 @@ object SimilarityOps {
     * without it the planner (correctly, in general) declines and the
     * codes scan reads every cell. */
   private def sq8IndexQueries(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/queries")
+    AtRest.read(s, s"$root/queries")
       .filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("codes").as("qcodes"),
         col("cell_id").as("q_cell"))
@@ -1577,7 +1576,7 @@ object SimilarityOps {
   def sq8CellServe(s: SparkSession, dir: String): DataFrame = {
     val root = indexRoot(s, dir) + "/sq8cells"
     buildSq8CellIndex(s, dir, root)
-    sq8CellServeAgainst(s.read.parquet(s"$root/codes"),
+    sq8CellServeAgainst(AtRest.read(s, s"$root/codes"),
         sq8IndexQueries(s, root))
       .transform(Common.presented(_, col("query_id"), col("rank")))
   }
@@ -1618,8 +1617,8 @@ object SimilarityOps {
       vecs: DataFrame): DataFrame = {
     val withV = vecs.select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", sqrt(dotD(col("v"), col("v"))))
-    sq8Packed(sq8EncodeWith(vecs, s.read.parquet(s"$root/quant")))
-      .join(coarseAssign(withV, s.read.parquet(s"$root/cents"))
+    sq8Packed(sq8EncodeWith(vecs, AtRest.read(s, s"$root/quant")))
+      .join(coarseAssign(withV, AtRest.read(s, s"$root/cents"))
           .select(col("vec_id"), col("cell_id").cast("int").as("cell_id")),
         Seq("vec_id"))
       .select(col("vec_id"), col("codes"), col("cell_id"))
@@ -1643,7 +1642,7 @@ object SimilarityOps {
       .write.mode("overwrite").parquet(s"$root/cents")
     AtRest.land(s, s"$root/codes", "cell_id",
       sq8RowsWith(s, root, standing), "overwrite")
-    s.read.parquet(s"$root/codes").filter(col("vec_id") < NumQueries)
+    AtRest.read(s, s"$root/codes").filter(col("vec_id") < NumQueries)
       .select(col("vec_id"), col("codes"), col("cell_id"))
       .write.mode("overwrite").parquet(s"$root/queries")
   }
@@ -1656,7 +1655,7 @@ object SimilarityOps {
       batch: DataFrame): Unit =
     AtRest.land(s, s"$root/codes", "cell_id",
       sq8RowsWith(s, root, batch)
-        .join(s.read.parquet(s"$root/codes").select(col("vec_id")),
+        .join(AtRest.read(s, s"$root/codes").select(col("vec_id")),
           Seq("vec_id"), "left_anti"),
       "append")
 
@@ -1673,12 +1672,12 @@ object SimilarityOps {
     val ids = delVecs.select(col("vec_id")).distinct().localCheckpoint()
     val withV = delVecs.select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", sqrt(dotD(col("v"), col("v"))))
-    val cells = coarseAssign(withV, s.read.parquet(s"$root/cents"))
+    val cells = coarseAssign(withV, AtRest.read(s, s"$root/cents"))
       .select(col("cell_id").cast("int").as("c")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     AtRest.sweepBuckets(s, s"$root/codes", "cell_id", cells,
       ids, Seq("vec_id"))
-    s.read.parquet(s"$root/queries")
+    AtRest.read(s, s"$root/queries")
       .join(broadcast(ids), Seq("vec_id"), "left_anti")
       .localCheckpoint()
       .write.mode("overwrite").parquet(s"$root/queries")
@@ -1709,7 +1708,7 @@ object SimilarityOps {
     appendSq8Maintained(s, root, emb.filter(isBatch))
     forgetSq8Maintained(s, root,
       emb.filter(col("vec_id") % DeleteMod === DeleteRem))
-    sq8CellServeAgainst(s.read.parquet(s"$root/codes"),
+    sq8CellServeAgainst(AtRest.read(s, s"$root/codes"),
         sq8IndexQueries(s, root))
       .transform(Common.presented(_, col("query_id"), col("rank")))
   }
@@ -1884,7 +1883,7 @@ object SimilarityOps {
           pmod(col("vec_id"), lit(FloatBuckets.toLong)).cast("int")
             .as("id_bucket")),
       "overwrite")
-    val t = s.read.parquet(s"$root/codes")
+    val t = AtRest.read(s, s"$root/codes")
     val q = sq8IndexQueries(s, root)
     val ws = Window.partitionBy(col("query_id"))
       .orderBy(col("code_d2"), col("vec_id"))
@@ -1901,7 +1900,7 @@ object SimilarityOps {
     // through the id-bucketed at-rest table — the broadcast shortlist
     // joins the bare id_bucket partition attribute, so DPP reads only
     // the buckets holding shortlist ids (PlanContractSpec pins it)
-    val fl = s.read.parquet(s"$root/floats")
+    val fl = AtRest.read(s, s"$root/floats")
     val slb = shortlist.select(col("query_id"), col("vec_id").as("n_id"),
       col("cell_id"), col("code_d2"),
       pmod(col("vec_id"), lit(FloatBuckets.toLong)).cast("int")
@@ -1915,7 +1914,7 @@ object SimilarityOps {
       .withColumn("nrm", sqrt(dotD(col("v"), col("v"))))
     // query floats: a STATIC bucket predicate (query ids are known)
     val qBuckets = (0 until NumQueries).map(_ % FloatBuckets).distinct
-    val qv = s.read.parquet(s"$root/floats")
+    val qv = AtRest.read(s, s"$root/floats")
       .filter(col("id_bucket").isin(qBuckets: _*) &&
         col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -1963,7 +1962,7 @@ object SimilarityOps {
       batch: DataFrame): Unit =
     AtRest.land(s, s"$root/signatures", "id_bucket",
       signRows(batch)
-        .join(s.read.parquet(s"$root/signatures").select(col("vec_id")),
+        .join(AtRest.read(s, s"$root/signatures").select(col("vec_id")),
           Seq("vec_id"), "left_anti"),
       "append")
 
@@ -1989,7 +1988,7 @@ object SimilarityOps {
     * build-only serve (x31) and the maintained lifecycle (x32), so
     * the two paths cannot drift. */
   private[graft] def signServeFrom(s: SparkSession, root: String): DataFrame = {
-    val sig = s.read.parquet(s"$root/signatures")
+    val sig = AtRest.read(s, s"$root/signatures")
     val qBuckets = (0 until NumQueries).map(_ % FloatBuckets).distinct
     val q = sig
       .filter(col("id_bucket").isin(qBuckets: _*) &&

@@ -922,7 +922,7 @@ object TextOps {
       batch: DataFrame): Unit =
     AtRest.land(s, s"$root/shards", "shard_id",
       shardStoreRows(batch)
-        .join(s.read.parquet(s"$root/shards").select(col("doc_id")),
+        .join(AtRest.read(s, s"$root/shards").select(col("doc_id")),
           Seq("doc_id"), "left_anti"),
       "append")
 
@@ -965,7 +965,7 @@ object TextOps {
   private[graft] def shardManifestFrom(s: SparkSession,
       root: String): DataFrame = {
     val whole = org.apache.spark.sql.expressions.Window.partitionBy()
-    s.read.parquet(s"$root/shards")
+    AtRest.read(s, s"$root/shards")
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"),
         expr("bit_xor(h)").as("digest"))

@@ -565,13 +565,13 @@ object TimeSeriesOps {
       consts: DataFrame): Unit = {
     AtRest.land(s, s"$root/words", "u_bucket",
       saxWordsWith(
-          s.read.parquet(s"$root/counts")
+          AtRest.read(s, s"$root/counts")
             .select(col("user_id"), col("day"), col("cnt")),
           consts)
         .withColumn("u_bucket", userBucketCol(col("user_id"))),
       "overwrite")
     AtRest.land(s, s"$root/bands", "bb_bucket",
-      bandKeys(s.read.parquet(s"$root/words"))
+      bandKeys(AtRest.read(s, s"$root/words"))
         .withColumn("bb_bucket", saxBandBucketCol(col("b"), col("bk")))
         .select(col("user_id"), col("b"), col("bk"), col("bb_bucket")),
       "overwrite")
@@ -582,7 +582,7 @@ object TimeSeriesOps {
     * emptied-index marker (a NULL d0 row would poison every later
     * origin read; [[saxOrigin]] treats no-rows as "no origin"). */
   private def recountedOrigin(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(s"$root/counts").agg(min(col("day")).as("d0"))
+    AtRest.read(s, s"$root/counts").agg(min(col("day")).as("d0"))
       .filter(col("d0").isNotNull)
       .localCheckpoint()
 
@@ -592,7 +592,7 @@ object TimeSeriesOps {
     * emptied store must re-seed rather than NPE (the r16 ADVICE
     * emptied-index arm). */
   private[graft] def saxOrigin(s: SparkSession, root: String): Option[Long] = {
-    val r = s.read.parquet(s"$root/consts").collect()
+    val r = AtRest.read(s, s"$root/consts").collect()
     if (r.isEmpty || r(0).isNullAt(0)) None else Some(r(0).getLong(0))
   }
 
@@ -653,7 +653,7 @@ object TimeSeriesOps {
     val landed = batch
       .select(col("user_id"), col("day"), col("cnt"),
         userBucketCol(col("user_id")).as("u_bucket"))
-      .join(s.read.parquet(s"$root/counts")
+      .join(AtRest.read(s, s"$root/counts")
           .select(col("user_id"), col("day")),
         Seq("user_id", "day"), "left_anti")
       // pinned for `touched` below: re-read after the append, the
@@ -695,17 +695,17 @@ object TimeSeriesOps {
       if (tBuckets.nonEmpty) {
         // the touched users' OLD band keys, pinned BEFORE the words
         // overwrite below replaces the files they derive from
-        val oldWords = s.read.parquet(s"$root/words")
+        val oldWords = AtRest.read(s, s"$root/words")
           .filter(col("u_bucket").isin(tBuckets: _*))
           .join(broadcast(touched), Seq("user_id"))
           .select(col("user_id"), col("word"))
           .localCheckpoint()
         val newWords = saxWordsWith(
-            s.read.parquet(s"$root/counts")
+            AtRest.read(s, s"$root/counts")
               .filter(col("u_bucket").isin(tBuckets: _*))
               .join(broadcast(touched), Seq("user_id"))
               .select(col("user_id"), col("day"), col("cnt")),
-            s.read.parquet(s"$root/consts"))
+            AtRest.read(s, s"$root/consts"))
           .withColumn("u_bucket", userBucketCol(col("user_id")))
           .localCheckpoint() // feeds the words staging AND the bands delta
         rewriteSaxDerived(s, root, touched, tBuckets, oldWords,
@@ -747,7 +747,7 @@ object TimeSeriesOps {
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
     if (uBuckets.isEmpty) return
     val fs = AtRest.fsOf(s, root)
-    val oldWords = s.read.parquet(s"$root/words")
+    val oldWords = AtRest.read(s, s"$root/words")
       .filter(col("u_bucket").isin(uBuckets: _*))
       .join(broadcast(ids), Seq("user_id"))
       .select(col("user_id"), col("word"))
@@ -759,8 +759,7 @@ object TimeSeriesOps {
     // 2. did the deleted users own the grid origin? (FS-listed first:
     // a forget of the LAST users leaves counts with no data files,
     // which no parquet read can infer a schema from)
-    val baseEmpty = AtRest.bucketFiles(s, s"$root/counts", "u_bucket")
-      .values.forall(_.isEmpty)
+    val baseEmpty = AtRest.firstDataFile(s, s"$root/counts").isEmpty
     if (baseEmpty) {
       // the index EMPTIED: drop the derived dirs wholesale and mark
       // consts with ZERO rows — never a NULL-d0 row, which every
@@ -769,7 +768,7 @@ object TimeSeriesOps {
       // zero-row consts as "no origin" and rebuilds from its batch.
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/words"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/bands"), true)
-      s.read.parquet(s"$root/consts").filter(lit(false))
+      AtRest.read(s, s"$root/consts").filter(lit(false))
         .localCheckpoint()
         .write.mode("overwrite").parquet(s"$root/consts")
       return
@@ -878,7 +877,7 @@ object TimeSeriesOps {
   private[graft] def saxServeFrom(s: SparkSession, root: String): DataFrame = {
     val probeBucket = (ProbeUser % SaxUserBuckets).toInt
     val probeBands = bandKeys(
-        s.read.parquet(s"$root/words")
+        AtRest.read(s, s"$root/words")
           .filter(col("u_bucket") === probeBucket)
           .filter(col("user_id") === ProbeUser))
       .select(col("b").as("p_b"), col("bk").as("p_bk"))
@@ -887,7 +886,7 @@ object TimeSeriesOps {
       // visible comparison the PartitionPruning rule never inserts
       // the pruning subquery
       .filter(col("p_bucket") >= 0)
-    val cand = s.read.parquet(s"$root/bands")
+    val cand = AtRest.read(s, s"$root/bands")
       .join(broadcast(probeBands),
         col("bb_bucket") === col("p_bucket") && col("b") === col("p_b") &&
           col("bk") === col("p_bk"))
@@ -901,11 +900,11 @@ object TimeSeriesOps {
       .select(col("user_id").as("w_user"),
         userBucketCol(col("user_id")).as("w_bucket"))
       .filter(col("w_bucket") >= 0) // same load-bearing domain constraint
-    val cc = s.read.parquet(s"$root/counts")
+    val cc = AtRest.read(s, s"$root/counts")
       .join(broadcast(want),
         col("u_bucket") === col("w_bucket") && col("user_id") === col("w_user"))
       .select(col("user_id"), col("day"), col("cnt"))
-      .unionByName(s.read.parquet(s"$root/counts")
+      .unionByName(AtRest.read(s, s"$root/counts")
         .filter(col("u_bucket") === probeBucket &&
           col("user_id") === ProbeUser)
         .select(col("user_id"), col("day"), col("cnt")))
@@ -963,7 +962,7 @@ object TimeSeriesOps {
     writeSaxIndex(s, root, dayCounts(s, dir))
     val pBuckets = (0 until NumProbes).map(_ % SaxUserBuckets).distinct
     val pBands = bandKeys(
-        s.read.parquet(s"$root/words")
+        AtRest.read(s, s"$root/words")
           .filter(col("u_bucket").isin(pBuckets: _*))
           .filter(col("user_id") < NumProbes))
       .select(col("user_id").as("p_user"), col("b").as("p_b"),
@@ -971,7 +970,7 @@ object TimeSeriesOps {
       .withColumn("p_bucket", saxBandBucketCol(col("p_b"), col("p_bk")))
       // load-bearing selective predicate (x17's lesson)
       .filter(col("p_bucket") >= 0)
-    val cand = s.read.parquet(s"$root/bands")
+    val cand = AtRest.read(s, s"$root/bands")
       .join(broadcast(pBands),
         col("bb_bucket") === col("p_bucket") && col("b") === col("p_b") &&
           col("bk") === col("p_bk"))
@@ -983,12 +982,12 @@ object TimeSeriesOps {
     val want = cand.select(col("user_id").as("w_user")).distinct()
       .withColumn("w_bucket", userBucketCol(col("w_user")))
       .filter(col("w_bucket") >= 0) // same load-bearing domain constraint
-    val candCounts = s.read.parquet(s"$root/counts")
+    val candCounts = AtRest.read(s, s"$root/counts")
       .join(broadcast(want),
         col("u_bucket") === col("w_bucket") && col("user_id") === col("w_user"))
       .select(col("user_id"), col("day"), col("cnt"))
     CacheScope.persist(candCounts)
-    val probeCounts = s.read.parquet(s"$root/counts")
+    val probeCounts = AtRest.read(s, s"$root/counts")
       .filter(col("u_bucket").isin(pBuckets: _*) &&
         col("user_id") < NumProbes)
       .select(col("user_id").as("p_user"), col("day"), col("cnt").as("cp"))
@@ -1051,7 +1050,7 @@ object TimeSeriesOps {
       .select(col("user_id"), col("day"), col("cnt"))
     writeSaxIndex(s, root, standing)
     updateSaxIndex(s, root, batch)
-    saxIndexTail(s.read.parquet(s"$root/words")
+    saxIndexTail(AtRest.read(s, s"$root/words")
       .select(col("user_id"), col("word"), col("n_active_segs")))
   }
 

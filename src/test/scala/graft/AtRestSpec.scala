@@ -7,7 +7,8 @@ import graft.operators.AtRest
   * traps [[graft.operators.AtRest.overwriteBuckets]] exists to own
   * (empty-partition drop, canonical column order, unpinned-stage
   * self-read, stray bucket) and the delta verb
-  * [[graft.operators.AtRest.sweepBuckets]] — exercised directly on a
+  * [[graft.operators.AtRest.sweepBuckets]] and the footer-typed reader
+  * [[graft.operators.AtRest.read]] — exercised directly on a
   * synthetic table, so a regression in the verb fails HERE with a
   * one-table reproduction instead of inside some family's 30-second
   * lifecycle test. */
@@ -188,6 +189,66 @@ class AtRestSpec extends SparkSpec {
       s"appending writers outside AtRest.land:\n${hits.mkString("\n")}")
   }
 
+  test("guard: AtRest.read is the only at-rest reader in graft.operators") {
+    // a plain read starts a schema-inference job per call, and a
+    // hand-declared schema is a second copy of the table's layout
+    val reader = raw"""\.read\.(parquet|schema)\(""".r
+    val hits = for {
+      f <- scalaFiles(new java.io.File("src/main/scala/graft/operators"))
+      if f.getName != "AtRest.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .toSeq.zipWithIndex
+      code = !Seq("*", "/*", "//").exists(line.trim.startsWith)
+      if reader.findFirstIn(line).nonEmpty ||
+        (code && line.trim.endsWith(".read"))
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"at-rest reads outside AtRest.read:\n${hits.mkString("\n")}")
+  }
+
+  test("read: the footer-typed scan has a plain read's schema and starts no Spark job") {
+    import spark.implicits._
+    val base = "target/graft-index/spec-atrest-read"
+    val cases = Seq[(String, String => Unit)](
+      "bucketed" -> seed,
+      "flat" -> (root => (0L until 10L).map(i => (i, s"v$i"))
+        .toDF("id", "payload").write.mode("overwrite").parquet(root)),
+      "array<long>" -> (root => (0L until 20L)
+        .map(i => (i, Seq(i, i + 1), (i % 4).toInt)).toDF("doc_id", "bg", "b")
+        .write.mode("overwrite").partitionBy("b").parquet(root)))
+    val sc = spark.sparkContext
+    for (((name, write), i) <- cases.zipWithIndex) {
+      val root = s"$base-$i"
+      rmRoot(root); write(root)
+      sc.setJobGroup(s"atrest-read-$i", name)
+      val typed = try AtRest.read(spark, root).schema
+        finally sc.clearJobGroup()
+      // the plain read's inference job, submitted AFTER the verb's
+      // read, is the witness that the listener has caught up
+      sc.setJobGroup(s"plain-read-$i", name)
+      val plain = try spark.read.parquet(root).schema
+        finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getJobIdsForGroup(s"plain-read-$i").isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sc.statusTracker.getJobIdsForGroup(s"plain-read-$i").nonEmpty,
+        s"$name: the plain read's inference job never showed")
+      assert(typed == plain, s"$name: $typed != $plain")
+      assert(sc.statusTracker.getJobIdsForGroup(s"atrest-read-$i").isEmpty,
+        s"$name: AtRest.read started a Spark job")
+    }
+  }
+
+  test("read: a table with no data file fails as a plain read does") {
+    val root = "target/graft-index/spec-atrest-read-empty"
+    rmRoot(root)
+    new java.io.File(s"$root/b=0").mkdirs()
+    val plain = intercept[Exception](spark.read.parquet(root))
+    val verb = intercept[Exception](AtRest.read(spark, root))
+    assert(verb.getClass == plain.getClass &&
+      verb.getMessage == plain.getMessage)
+  }
+
   test("sweepBuckets: drops exactly the keyed rows from exactly the affected buckets; empty affected is a no-op") {
     import spark.implicits._
     val root = "target/graft-index/spec-atrest-sweep"
@@ -343,10 +404,6 @@ class AtRestSpec extends SparkSpec {
       }
       sb.toString
     }
-    // the one direct delta kept: the d30 docsets stage reads through
-    // DedupOps.readDocsets' declared schema, which spares the schema-
-    // inference job the verb's plain read of the table costs
-    val exempt = Seq("s\"$root/docsets\"")
     val call = "AtRest.overwriteBuckets("
     val hits = for {
       f <- scalaFiles(new java.io.File("src/main/scala/graft/operators"))
@@ -354,7 +411,6 @@ class AtRestSpec extends SparkSpec {
       at <- Iterator.iterate(text.indexOf(call))(i => text.indexOf(call, i + 1))
         .takeWhile(_ >= 0).toSeq
       args = argsAt(text, at + call.length - 1)
-      if !exempt.exists(args.contains)
       if args.contains("\"left_anti\"") || helper.findFirstIn(args).nonEmpty
     } yield s"${f.getPath}:${text.take(at).count(_ == '\n') + 1}"
     assert(hits.isEmpty,
@@ -362,27 +418,34 @@ class AtRestSpec extends SparkSpec {
   }
 
   test("healDerived: the derivation may READ the very table it replaces (the pin), partitioned and flat") {
-    import spark.implicits._
-    val root = "target/graft-index/spec-atrest-heal"
-    rmRoot(root); seed(root)
-    // a self-reading derivation: the recount reads `root` and
-    // overwrites `root` — exactly what an unpinned stage would
-    // self-destruct on (read the files mid-replacement)
-    AtRest.healDerived(spark, root,
-      spark.read.parquet(root).filter(col("id") < 20L), Seq("b"))
-    assert(rows(root) ==
-      (0L until 20L).map(i => (i, s"v$i", (i % 4).toInt)).toSet,
-      "partitioned self-read heal lost or duplicated rows")
-    // flat form: derive a one-row summary FROM the table into a
-    // sibling, then a self-read rewrite of that sibling
-    val flat = s"$root-consts"
-    rmRoot(flat)
-    AtRest.healDerived(spark, flat,
-      spark.read.parquet(root).agg(count(lit(1)).as("n")))
-    AtRest.healDerived(spark, flat,
-      spark.read.parquet(flat).select((col("n") + 1).as("n")))
-    assert(spark.read.parquet(flat).collect()(0).getLong(0) == 21L,
-      "flat self-read heal diverged")
+    // the plain read and AtRest.read's typed read must both carry the
+    // relation readsTable pins on — a typed read it missed would let
+    // land overwrite the very files the derivation is reading
+    val readers = Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "spark.read.parquet" -> (spark.read.parquet(_)),
+      "AtRest.read" -> (AtRest.read(spark, _)))
+    for ((name, read) <- readers) {
+      val root = "target/graft-index/spec-atrest-heal"
+      rmRoot(root); seed(root)
+      // a self-reading derivation: the recount reads `root` and
+      // overwrites `root` — exactly what an unpinned stage would
+      // self-destruct on (read the files mid-replacement)
+      AtRest.healDerived(spark, root,
+        read(root).filter(col("id") < 20L), Seq("b"))
+      assert(rows(root) ==
+        (0L until 20L).map(i => (i, s"v$i", (i % 4).toInt)).toSet,
+        s"$name: partitioned self-read heal lost or duplicated rows")
+      // flat form: derive a one-row summary FROM the table into a
+      // sibling, then a self-read rewrite of that sibling
+      val flat = s"$root-consts"
+      rmRoot(flat)
+      AtRest.healDerived(spark, flat,
+        read(root).agg(count(lit(1)).as("n")))
+      AtRest.healDerived(spark, flat,
+        read(flat).select((col("n") + 1).as("n")))
+      assert(spark.read.parquet(flat).collect()(0).getLong(0) == 21L,
+        s"$name: flat self-read heal diverged")
+    }
   }
 
   // ---- the RE-BUCKET migration verb, pinned on a crafted table ----
